@@ -39,8 +39,12 @@ _HEAVY_TIER_TESTS = {
 }
 
 
+def _full_tier() -> bool:
+    return os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1"
+
+
 def pytest_collection_modifyitems(config, items):
-    if os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1":
+    if _full_tier():
         return
     skip = pytest.mark.skip(
         reason="heavy tier: run with SPARK_GRAFT_FULL_TESTS=1 (full ~59 min suite)"
@@ -50,6 +54,14 @@ def pytest_collection_modifyitems(config, items):
         base = item.name.split("[", 1)[0]
         if mod in _HEAVY_TIER_MODULES or (mod, base) in _HEAVY_TIER_TESTS:
             item.add_marker(skip)
+
+
+def pytest_terminal_summary(terminalreporter):
+    if not _full_tier():
+        terminalreporter.write_line(
+            "heavy tier (fuzz / scale-smoke / random wsp parity) skipped; "
+            "run it with SPARK_GRAFT_FULL_TESTS=1 python -m pytest tests/ -q"
+        )
 
 
 @pytest.fixture(scope="session")

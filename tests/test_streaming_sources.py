@@ -6,11 +6,28 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from whisper_spark.queries import sec
 from whisper_spark.sources import read_points_csv, read_points_lines, read_rrd
 from whisper_spark.store import WhisperStore
 from whisper_spark.streaming import parse_line_protocol, start_ingest
+from whisper_spark.streaming.replay import parquet_source, replay, replay_to_memory
 
 NOW = 1700000000
+SF = "/root/testdata/sf0.001"
+
+
+def _event_points(spark, seq=False):
+    """The sf0.001 events table as a streaming (metric, ts, value[, seq])
+    point source."""
+    src = parquet_source(spark, SF, "events")
+    cols = [
+        F.col("event_type").alias("metric"),
+        sec(src, "ts").alias("ts"),
+        F.col("value"),
+    ]
+    if seq:
+        cols.append(F.col("event_id").alias("seq"))
+    return src.select(*cols)
 
 
 def test_parse_line_protocol(spark):
@@ -143,17 +160,9 @@ def test_windowed_rollup_stream(spark, tmp_path):
     rolled = windowed_rollup(
         pts, step_seconds=60, method="average", xff=0.3, watermark_seconds=600
     )
-    q = (
-        rolled.writeStream.format("memory")
-        .queryName("rolled")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     rows = {
         (r["metric"], r["ts"]): (r["value"], r["known"])
-        for r in spark.sql("SELECT * FROM rolled").collect()
+        for r in replay_to_memory(rolled, "rolled").collect()
     }
     # minute 0 finalized: avg(0..29) = 14.5 over 30 known seconds
     assert rows[("m.a", NOW - NOW % 60)] == (14.5, 30) or rows[
@@ -183,17 +192,9 @@ def test_sessionize_stream(spark, tmp_path):
     sess = sessionize_stream(
         pts, gap_seconds=1800, watermark_seconds=600, key_col="user_id"
     )
-    q = (
-        sess.writeStream.format("memory")
-        .queryName("sessions")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     rows = {
         (r["user_id"], r["t_start"]): (r["t_end"], r["n_events"], r["max_value"])
-        for r in spark.sql("SELECT * FROM sessions").collect()
+        for r in replay_to_memory(sess, "sessions").collect()
     }
     assert rows[("u7", NOW)] == (NOW + 100 + 1800, 2, 5.0)
     assert rows[("u7", NOW + 3000)] == (NOW + 3000 + 1800, 1, 2.0)
@@ -222,17 +223,10 @@ def test_stateful_slot_lww_changelog(spark, tmp_path):
     )
     pts = parse_line_protocol(stream)
     out = stateful_slot_lww(pts, step_seconds=1, retention_seconds=3600)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("lww_changes")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    lww_changes = replay_to_memory(out, "lww_changes")
     rows = [
         (r["metric"], r["ts"], r["value"])
-        for r in spark.sql("SELECT * FROM lww_changes ORDER BY ts").collect()
+        for r in lww_changes.orderBy("ts").collect()
     ]
     # slot NOW appears twice (initial then overwrite) OR once if both
     # files landed in one micro-batch (then LWW resolves in-batch);
@@ -269,18 +263,11 @@ def test_stateful_slot_lww_nan_not_reemitted(spark, tmp_path):
     out = stateful_slot_lww(
         parse_line_protocol(stream), step_seconds=1, retention_seconds=3600
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("nan_changes")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    nan_changes = replay_to_memory(out, "nan_changes")
     vals = [
         r["value"]
-        for r in spark.sql(
-            f"SELECT value FROM nan_changes WHERE metric='m.n' AND ts={NOW}"
+        for r in nan_changes.filter(
+            (F.col("metric") == "m.n") & (F.col("ts") == NOW)
         ).collect()
     ]
     # exactly one NaN emission (not one per NaN batch) + the real value.
@@ -310,17 +297,9 @@ def test_dedup_stream_cross_batch(spark, tmp_path):
     )
     pts = parse_line_protocol(stream)
     out = dedup_stream(pts, keys=["metric"], ts_col="ts", watermark_seconds=600)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     rows = sorted(
         (r["metric"], r["ts"], r["value"])
-        for r in spark.sql("SELECT metric, ts, value FROM dedup_out").collect()
+        for r in replay_to_memory(out, "dedup_out").collect()
     )
     assert rows == [("k1", NOW, 1.0), ("k2", NOW + 5, 2.0), ("k3", NOW + 10, 3.0)]
 
@@ -349,17 +328,9 @@ def test_interval_join_stream_cross_batch(spark, tmp_path):
         lt, rt, key="uid", window_seconds=100,
         left_ts="ts", right_ts="rts", watermark_seconds=60,
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("attr_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     rows = sorted(
         (r.uid, r._lts, r._rts, r.value)
-        for r in spark.sql("SELECT uid, _lts, _rts, value FROM attr_out").collect()
+        for r in replay_to_memory(out, "attr_out").collect()
     )
     # u1's two purchases (50 s and 90 s later) match; u2's 200 s miss doesn't
     assert rows == [
@@ -401,17 +372,9 @@ def test_near_dedup_stream_flags_in_window_only(spark, tmp_path):
         num_hashes=16, bands=4, shingle_n=5,
         id_col="doc_id", ts_col="sec", text_col="text",
     )
-    q = (
-        flags.writeStream.format("memory")
-        .queryName("nd_flags")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     got = {
         (r["w_start"], r["doc_id"]): r["n_bands"]
-        for r in spark.sql("SELECT * FROM nd_flags").collect()
+        for r in replay_to_memory(flags, "nd_flags").collect()
     }
     # doc 3 duplicates doc 1 within window [0, 300): all 4 bands collide
     assert got == {(0, 3): 4}
@@ -451,41 +414,28 @@ def test_render_stream_end_to_end(spark, tmp_path):
     assert (NOW + 7200) - (NOW + 7200) % 60 not in rows
 
 
-def test_render_stream_state_partitions_knob(spark, tmp_path):
-    """state_partitions= pins the stateful-operator partition count for
-    ONE query (set around .start(), restored after — Spark clones the
-    session synchronously inside start, so the scoping is race-free) and
-    must not change any value: same finalized rows as the default."""
-    from whisper_spark.streaming.render import render_stream_once
+def test_replay_timeout_raises_and_stops_the_query(spark, monkeypatch):
+    """A replay that outlives the timeout is stopped and raises: the
+    caller never gets the rows committed so far as if they were all."""
+    from whisper_spark.queries import q_stream_render_moving_avg
+    from whisper_spark.streaming import replay as replay_mod
 
-    indir = tmp_path / "rsp_in"
-    indir.mkdir()
-    lines = []
-    for m, base in (("ev.a.m1", 10.0), ("ev.b.m1", 20.0)):
-        lines += [f"{m} {base} {NOW}", f"{m} {base + 1} {NOW + 30}"]
-    lines += ["ev.a.m1 0.0 " + str(NOW + 7200)]
-    (indir / "a.txt").write_text("\n".join(lines) + "\n")
+    monkeypatch.setattr(replay_mod, "REPLAY_TIMEOUT_S", 0.001)
+    with pytest.raises(TimeoutError, match="stream_render_moving_avg"):
+        q_stream_render_moving_avg(spark, SF)
+    assert spark.streams.active == []
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    outs = []
-    for i, sp in enumerate((None, 2)):
-        stream = spark.readStream.format("text").load(str(indir))
-        pts = parse_line_protocol(stream)
-        out = render_stream_once(
-            spark,
-            pts,
-            "scale(sumSeries(ev.*.m1), 2)",
-            str(tmp_path / f"rsp_out{i}"),
-            state_partitions=sp,
-            step_seconds=60,
-            method="max",
-            xff=0.0,
-            watermark_seconds=600,
-        )
-        outs.append(sorted(tuple(r) for r in out.collect()))
-        # the override never leaks into the session
-        assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-    assert outs[0] == outs[1] and len(outs[0]) > 0
+
+def test_replay_leaves_no_memory_table(spark):
+    """A memory-sink replay drops its query-named view; the returned
+    frame still reads the sink afterwards."""
+    from whisper_spark.queries import q_stream_rollup_1m_max
+
+    before = sorted(t.name for t in spark.catalog.listTables())
+    out = q_stream_rollup_1m_max(spark, SF)
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+    rows = out.collect()
+    assert rows and out.count() == len(rows)
 
 
 def test_render_stream_rejects_cross_slot_functions(spark):
@@ -536,13 +486,8 @@ def test_top_metrics_stream_end_to_end(spark, tmp_path):
     pts = parse_line_protocol(
         spark.readStream.format("text").load(str(indir))
     ).select("metric", "ts")
-    q = (
-        top_metrics_stream(pts, str(tmp_path / "tk_out"), step_seconds=60,
-                           k=2, watermark_seconds=600)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    replay(top_metrics_stream(pts, str(tmp_path / "tk_out"), step_seconds=60,
+                              k=2, watermark_seconds=600))
     rows = {
         (r["w_start"], r["rank"]): (r["metric"], r["n_points"])
         for r in spark.read.parquet(str(tmp_path / "tk_out")).collect()
@@ -675,13 +620,7 @@ def test_chained_recurrence_skips_null_points(spark, tmp_path):
     agg = chained_integral(
         stream, step_seconds=60, method="max", watermark_seconds=600
     )
-    import uuid
-
-    name = "nulls_" + uuid.uuid4().hex[:8]
-    q = (agg.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {r.ts: r.integral for r in spark.table(name).collect()}
+    got = {r.ts: r.integral for r in replay_to_memory(agg, "nulls").collect()}
     # watermark 3000-600=2400: slot 0 = max{2.0} (ts=0 null absent),
     # slot 60 = max{5.0} (ts=90 null absent), slot 120 = 3.0; slot 3000
     # stays pending.  A NaN-poisoned max would have nulled slots 0/60.
@@ -693,25 +632,11 @@ def test_stream_target_arg_validation_errors_are_typed(spark, tmp_path):
     (round-6 review findings: EMA windowSize<1 was silently clamped
     where the batch route raises; float(maxValue) leaked raw
     ValueError)."""
-    from whisper_spark.queries import _ensure_nanos_conf, stream_sec
     from whisper_spark.render import TargetSyntaxError
     from whisper_spark.streaming.render import render_stream_once
 
-    sf = "/root/testdata/sf0.001"
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf}/events.parquet").schema
-
     def pts():
-        src = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf)
-        )
-        return src.select(
-            F.col("event_type").alias("metric"),
-            stream_sec(schema, "ts").alias("ts"),
-            F.col("value"),
-        )
+        return _event_points(spark)
 
     with pytest.raises(TargetSyntaxError, match="windowSize must be >= 1"):
         render_stream_once(
@@ -763,22 +688,9 @@ def test_render_stream_routes_integral_by_interval(spark, tmp_path):
     """integralByInterval routes to the per-interval-reset recurrence:
     within each 600s bucket the emitted values are non-decreasing for
     positive data, and every bucket restarts below the prior total."""
-    from whisper_spark.queries import _ensure_nanos_conf, stream_sec
     from whisper_spark.streaming.render import render_stream_once
 
-    sf = "/root/testdata/sf0.001"
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    )
-    pts = src.select(
-        F.col("event_type").alias("metric"),
-        stream_sec(schema, "ts").alias("ts"),
-        F.col("value"),
-    )
+    pts = _event_points(spark)
     out = render_stream_once(
         spark, pts, "integralByInterval(*, '10min')", str(tmp_path / "ck")
     )
@@ -1003,27 +915,12 @@ def test_render_stream_routes_cross_slot_targets(spark, tmp_path):
     movingAverage / derivative / summarize target on a plain path
     routes to the chained multi-stateful ports, and the output matches
     the direct chained-op replay exactly."""
-    from whisper_spark.queries import _ensure_nanos_conf, stream_sec
     from whisper_spark.render import TargetSyntaxError
     from whisper_spark.streaming.render import render_stream_once
     from whisper_spark.streaming.rollup import chained_moving_average
 
-    sf = "/root/testdata/sf0.001"
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf}/events.parquet").schema
-
     def pts():
-        src = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf)
-        )
-        return src.select(
-            F.col("event_type").alias("metric"),
-            stream_sec(schema, "ts").alias("ts"),
-            F.col("value"),
-            F.col("event_id").alias("seq"),
-        )
+        return _event_points(spark, seq=True)
 
     out = render_stream_once(
         spark, pts(), "movingAverage(*, 5)", str(tmp_path / "ma")
@@ -1032,15 +929,10 @@ def test_render_stream_routes_cross_slot_targets(spark, tmp_path):
     assert got
 
     # direct chained op over the same stream = identical output
-    import uuid
-    name = "route_ref_" + uuid.uuid4().hex[:8]
     ref = chained_moving_average(pts(), n_points=5, step_seconds=60,
                                  method="max", watermark_seconds=600)
-    q = (ref.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
     want = {(r.metric, r.ts): r.moving_avg
-            for r in spark.table(name).collect()}
+            for r in replay_to_memory(ref, "route_ref").collect()}
     assert got == want
 
     # derivative / nonNegativeDerivative / integral route too; a
@@ -1058,15 +950,11 @@ def test_render_stream_routes_cross_slot_targets(spark, tmp_path):
     # formula itself CAN go negative when prev > ceiling — the batch
     # TS.derivative semantics the port mirrors)
     from whisper_spark.streaming.rollup import chained_derivative
-    name3 = "route_nn_" + uuid.uuid4().hex[:8]
     ref3 = chained_derivative(pts(), step_seconds=60, method="max",
                               watermark_seconds=600,
                               non_negative=True, max_value=50.0)
-    q3 = (ref3.writeStream.format("memory").queryName(name3)
-          .outputMode("append").trigger(availableNow=True).start())
-    q3.awaitTermination(120)
     want3 = {(r.metric, r.ts): r.delta
-             for r in spark.table(name3).collect()}
+             for r in replay_to_memory(ref3, "route_nn").collect()}
     assert got3 == want3 and got3
     # plain (non-wrap) counter resets ARE clamped: no negative survives
     # a ceiling-free nonNegativeDerivative
@@ -1097,26 +985,11 @@ def test_render_stream_composes_wrappers_around_chained_core(spark, tmp_path):
     """Stream-safe wrappers COMPOSE with a chained cross-slot core:
     scale(movingAverage(path, 5), 10) streams as the chained plan plus
     a per-batch stateless transform, equal to 10x the bare core."""
-    from whisper_spark.queries import _ensure_nanos_conf, stream_sec
     from whisper_spark.render import TargetSyntaxError
     from whisper_spark.streaming.render import render_stream_once
 
-    sf = "/root/testdata/sf0.001"
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf}/events.parquet").schema
-
     def pts():
-        src = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf)
-        )
-        return src.select(
-            F.col("event_type").alias("metric"),
-            stream_sec(schema, "ts").alias("ts"),
-            F.col("value"),
-            F.col("event_id").alias("seq"),
-        )
+        return _event_points(spark, seq=True)
 
     bare = {
         (r.metric, r.ts): r.value
@@ -1209,16 +1082,10 @@ def test_carbon_aggregation_rules_grammar_and_batch_stream_parity(
     stream = (
         spark.readStream.schema(pts.schema).parquet(str(src_dir))
     )
-    import uuid
-    name = "caggr_" + uuid.uuid4().hex[:8]
-    q = (
-        aggregate_stream(stream, rules, watermark_seconds=120)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(availableNow=True).start()
+    sagg = replay_to_memory(
+        aggregate_stream(stream, rules, watermark_seconds=120), "caggr"
     )
-    q.awaitTermination(120)
-    srows = {(r.metric, r.ts): (r.value, r.n_points)
-             for r in spark.table(name).collect()}
+    srows = {(r.metric, r.ts): (r.value, r.n_points) for r in sagg.collect()}
     assert srows
     for k, v in srows.items():
         assert got[k] == v, k
@@ -1277,24 +1144,10 @@ def test_render_stream_rejects_wrapper_with_other_paths(spark, tmp_path):
     (divideSeries(movingAverage(a.*, 5), a.denominator)) must be
     REJECTED, not silently evaluated against the core's output frame
     where the extra path matches nothing (advisor finding, round 6)."""
-    from whisper_spark.queries import _ensure_nanos_conf, stream_sec
     from whisper_spark.render import TargetSyntaxError
     from whisper_spark.streaming.render import render_stream_once
 
-    sf = "/root/testdata/sf0.001"
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    )
-    pts = src.select(
-        F.col("event_type").alias("metric"),
-        stream_sec(schema, "ts").alias("ts"),
-        F.col("value"),
-        F.col("event_id").alias("seq"),
-    )
+    pts = _event_points(spark, seq=True)
     with pytest.raises(TargetSyntaxError, match="other series references"):
         render_stream_once(
             spark, pts,
@@ -1428,25 +1281,10 @@ def test_render_stream_summarize_accepts_bare_int_interval(spark, tmp_path):
     seconds) must route to the chained port exactly like its duration-
     string spelling — parse_duration(str(120)) used to raise
     "bad duration '120'" (round-6 self-review finding)."""
-    from whisper_spark.queries import _ensure_nanos_conf, stream_sec
     from whisper_spark.streaming.render import render_stream_once
 
-    sf = "/root/testdata/sf0.001"
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf}/events.parquet").schema
-
     def pts():
-        src = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf)
-        )
-        return src.select(
-            F.col("event_type").alias("metric"),
-            stream_sec(schema, "ts").alias("ts"),
-            F.col("value"),
-            F.col("event_id").alias("seq"),
-        )
+        return _event_points(spark, seq=True)
 
     got = {
         (r.metric, r.ts): r.value
@@ -1467,28 +1305,11 @@ def test_render_stream_routes_moving_window_family(spark, tmp_path):
     """movingSum/movingMin/movingMax/movingMedian route to the chained
     port; output matches the direct chained op exactly, and stream-safe
     wrappers compose around the new cores."""
-    import uuid
-
-    from whisper_spark.queries import _ensure_nanos_conf, stream_sec
     from whisper_spark.streaming.render import render_stream_once
     from whisper_spark.streaming.rollup import chained_moving_window
 
-    sf = "/root/testdata/sf0.001"
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf}/events.parquet").schema
-
     def pts():
-        src = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf)
-        )
-        return src.select(
-            F.col("event_type").alias("metric"),
-            stream_sec(schema, "ts").alias("ts"),
-            F.col("value"),
-            F.col("event_id").alias("seq"),
-        )
+        return _event_points(spark, seq=True)
 
     got = {
         (r.metric, r.ts): r.value
@@ -1498,14 +1319,11 @@ def test_render_stream_routes_moving_window_family(spark, tmp_path):
     }
     assert got
 
-    name = "mw_ref_" + uuid.uuid4().hex[:8]
     ref = chained_moving_window(pts(), n_points=5, func="median",
                                 step_seconds=60, method="max",
                                 watermark_seconds=600)
-    q = (ref.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    want = {(r.metric, r.ts): r.value for r in spark.table(name).collect()}
+    want = {(r.metric, r.ts): r.value
+            for r in replay_to_memory(ref, "mw_ref").collect()}
     assert got == want
 
     # a wrapper composes around the new core; sum route also works

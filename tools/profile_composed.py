@@ -12,9 +12,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from whisper_spark import queries as Q  # noqa: E402
-from whisper_spark.queries import _ensure_nanos_conf, stream_sec  # noqa: E402
+from whisper_spark.queries import sec  # noqa: E402
 from whisper_spark.session import get_spark  # noqa: E402
 from whisper_spark.streaming.render import render_stream_once  # noqa: E402
+from whisper_spark.streaming.replay import parquet_source, replay  # noqa: E402
 from whisper_spark.streaming.rollup import chained_moving_average  # noqa: E402
 
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -27,19 +28,12 @@ spark = get_spark(
 )
 Q.load(spark, sf_dir, "events").count()  # warmup listing/codegen
 
-_ensure_nanos_conf(spark)
-schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
 
 def mk_pts():
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = parquet_source(spark, sf_dir, "events")
     return src.select(
         F.col("event_type").alias("metric"),
-        stream_sec(schema, "ts").alias("ts"),
+        sec(src, "ts").alias("ts"),
         F.col("value"),
         F.col("event_id").alias("seq"),
     )
@@ -52,14 +46,11 @@ for phase in (["core", "full"] if which == "both" else [which]):
         agg = chained_moving_average(
             mk_pts(), 5, step_seconds=60, method="max", watermark_seconds=600
         )
-        q = (
+        replay(
             agg.writeStream.format("noop")
             .option("checkpointLocation", tempfile.mkdtemp(prefix="pc_core_"))
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(600)
     else:
         out = render_stream_once(
             spark,

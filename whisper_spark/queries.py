@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .streaming.replay import parquet_source, replay, replay_to_memory
+
 
 # --------------------------------------------------------------------- #
 # shared helpers
@@ -70,22 +72,9 @@ def sec(df: DataFrame, col: str) -> F.Column:
     """Epoch-seconds column regardless of how the parquet timestamp was
     read: TIMESTAMP(NANOS) as LongType (nanos), TIMESTAMP_NTZ, or
     TIMESTAMP.  Session timezone is UTC, matching DuckDB's naive
-    interpretation (``epoch_us(ts) // 1000000``)."""
+    interpretation (``epoch_us(ts) // 1000000``).  ``df`` may be a batch
+    frame or a streaming source (it carries the batch read's schema)."""
     dt = df.schema[col].dataType
-    if isinstance(dt, T.LongType):
-        return F.expr(f"{col} div 1000000000")
-    if isinstance(dt, T.TimestampNTZType):
-        return F.col(col).cast("timestamp").cast("long")
-    return F.col(col).cast("long")
-
-
-def stream_sec(schema: T.StructType, col: str) -> F.Column:
-    """Epoch-seconds expression for a streaming source whose schema came
-    from a batch read of the same parquet.  Same three-way dispatch as
-    ``sec`` (TIMESTAMP(NANOS)-as-long / TIMESTAMP_NTZ / TIMESTAMP) — the
-    driver's testdata has shipped both nanos and micros timestamps across
-    rounds, so nothing may hardcode the physical type."""
-    dt = schema[col].dataType
     if isinstance(dt, T.LongType):
         return F.expr(f"{col} div 1000000000")
     if isinstance(dt, T.TimestampNTZType):
@@ -5029,36 +5018,19 @@ SELECT metric, ts, value, known FROM win, mx WHERE ts + 60 <= m - 600
     "windowed_rollup — the carbon-aggregator analog)",
 )
 def q_stream_rollup_1m_max(spark, sf_dir):
-    import uuid
-
     from .streaming.rollup import windowed_rollup
 
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = parquet_source(spark, sf_dir, "events")
     pts = src.select(
         F.col("event_type").alias("metric"),
-        stream_sec(schema, "ts").alias("ts"),
+        sec(src, "ts").alias("ts"),
         F.col("value"),
         F.col("event_id").alias("seq"),
     )
     rolled = windowed_rollup(
         pts, step_seconds=60, method="max", xff=0.0, watermark_seconds=600
     )
-    name = "stream_rollup_" + uuid.uuid4().hex[:8]
-    q = (
-        rolled.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return replay_to_memory(rolled, "stream_rollup_1m_max")
 
 
 @_q(
@@ -5096,35 +5068,18 @@ GROUP BY metric, w_end
     "(streaming/rollup.py chained_moving_average)",
 )
 def q_stream_render_moving_avg(spark, sf_dir):
-    import uuid
-
     from .streaming.rollup import chained_moving_average
 
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = parquet_source(spark, sf_dir, "events")
     pts = src.select(
         F.col("event_type").alias("metric"),
-        stream_sec(schema, "ts").alias("ts"),
+        sec(src, "ts").alias("ts"),
         F.col("value"),
     )
     agg = chained_moving_average(
         pts, n_points=5, step_seconds=60, method="max", watermark_seconds=600
     )
-    name = "stream_mavg_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return replay_to_memory(agg, "stream_render_moving_avg")
 
 
 @_q(
@@ -5163,39 +5118,24 @@ GROUP BY metric, w_end
     "chained_moving_window)",
 )
 def q_stream_render_moving_median(spark, sf_dir):
-    import uuid
-
     from .streaming.rollup import chained_moving_window
 
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = parquet_source(spark, sf_dir, "events")
     pts = src.select(
         F.col("event_type").alias("metric"),
-        stream_sec(schema, "ts").alias("ts"),
+        sec(src, "ts").alias("ts"),
         F.col("value"),
     )
     agg = chained_moving_window(
         pts, n_points=5, func="median", step_seconds=60, method="max",
         watermark_seconds=600,
     )
-    name = "stream_mmed_" + uuid.uuid4().hex[:8]
-    q = (
+    return replay_to_memory(
         agg.select(
             "metric", "ts", F.col("value").alias("moving_median"), "n_slots"
-        )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        ),
+        "stream_render_moving_median",
     )
-    q.awaitTermination(300)
-    return spark.table(name)
 
 
 @_q(
@@ -5227,36 +5167,19 @@ GROUP BY metric, s // 600 * 600
     "(streaming/rollup.py chained_summarize)",
 )
 def q_stream_render_summarize(spark, sf_dir):
-    import uuid
-
     from .streaming.rollup import chained_summarize
 
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = parquet_source(spark, sf_dir, "events")
     pts = src.select(
         F.col("event_type").alias("metric"),
-        stream_sec(schema, "ts").alias("ts"),
+        sec(src, "ts").alias("ts"),
         F.col("value"),
     )
     agg = chained_summarize(
         pts, interval_seconds=600, func="sum", step_seconds=60,
         method="max", watermark_seconds=600,
     )
-    name = "stream_summ_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return replay_to_memory(agg, "stream_render_summarize")
 
 
 @_q(
@@ -5286,20 +5209,12 @@ GROUP BY metric, s // 600 * 600
     "double(sum)*60 identically",
 )
 def q_stream_render_hitcount(spark, sf_dir):
-    import uuid
-
     from .streaming.rollup import chained_summarize
 
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = parquet_source(spark, sf_dir, "events")
     pts = src.select(
         F.col("event_type").alias("metric"),
-        stream_sec(schema, "ts").alias("ts"),
+        sec(src, "ts").alias("ts"),
         F.col("value"),
     )
     agg = chained_summarize(
@@ -5308,16 +5223,7 @@ def q_stream_render_hitcount(spark, sf_dir):
     ).select(
         "metric", "ts", (F.col("value") * 60).alias("hits"), "n_slots"
     )
-    name = "stream_hitc_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return replay_to_memory(agg, "stream_render_hitcount")
 
 
 @_q(
@@ -5346,35 +5252,18 @@ WHERE b.s + 60 <= m - 600
     "max_event_time - delay) (streaming/rollup.py chained_derivative)",
 )
 def q_stream_render_derivative(spark, sf_dir):
-    import uuid
-
     from .streaming.rollup import chained_derivative
 
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = parquet_source(spark, sf_dir, "events")
     pts = src.select(
         F.col("event_type").alias("metric"),
-        stream_sec(schema, "ts").alias("ts"),
+        sec(src, "ts").alias("ts"),
         F.col("value"),
     )
     agg = chained_derivative(
         pts, step_seconds=60, method="max", watermark_seconds=600
     )
-    name = "stream_deriv_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return replay_to_memory(agg, "stream_render_derivative")
 
 
 @_q(
@@ -5405,36 +5294,19 @@ WHERE b.s + 60 <= m - 600
     "(streaming/rollup.py chained_derivative)",
 )
 def q_stream_render_nonneg_derivative(spark, sf_dir):
-    import uuid
-
     from .streaming.rollup import chained_derivative
 
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = parquet_source(spark, sf_dir, "events")
     pts = src.select(
         F.col("event_type").alias("metric"),
-        stream_sec(schema, "ts").alias("ts"),
+        sec(src, "ts").alias("ts"),
         F.col("value"),
     )
     agg = chained_derivative(
         pts, step_seconds=60, method="max", watermark_seconds=600,
         non_negative=True, max_value=50.0,
     )
-    name = "stream_nnderiv_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return replay_to_memory(agg, "stream_render_nonneg_derivative")
 
 
 @_q(
@@ -5470,35 +5342,18 @@ FROM fin
     "PERF.md round-6 fold table) (streaming/rollup.py chained_integral)",
 )
 def q_stream_render_integral(spark, sf_dir):
-    import uuid
-
     from .streaming.rollup import chained_integral
 
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = parquet_source(spark, sf_dir, "events")
     pts = src.select(
         F.col("event_type").alias("metric"),
-        stream_sec(schema, "ts").alias("ts"),
+        sec(src, "ts").alias("ts"),
         F.col("value"),
     )
     agg = chained_integral(
         pts, step_seconds=60, method="max", watermark_seconds=600
     )
-    name = "stream_integ_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return replay_to_memory(agg, "stream_render_integral")
 
 
 @_q(
@@ -5538,36 +5393,19 @@ SELECT metric, s AS ts, ewma FROM r
     "(streaming/rollup.py chained_ewma)",
 )
 def q_stream_render_ewma(spark, sf_dir):
-    import uuid
-
     from .streaming.rollup import chained_ewma
 
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = parquet_source(spark, sf_dir, "events")
     pts = src.select(
         F.col("event_type").alias("metric"),
-        stream_sec(schema, "ts").alias("ts"),
+        sec(src, "ts").alias("ts"),
         F.col("value"),
     )
     agg = chained_ewma(
         pts, alpha=0.25, step_seconds=60, method="max",
         watermark_seconds=600,
     )
-    name = "stream_ewma_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return replay_to_memory(agg, "stream_render_ewma")
 
 
 @_q(
@@ -5599,36 +5437,19 @@ FROM fin
     "chained_integral_by_interval)",
 )
 def q_stream_render_integral_by_interval(spark, sf_dir):
-    import uuid
-
     from .streaming.rollup import chained_integral_by_interval
 
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = parquet_source(spark, sf_dir, "events")
     pts = src.select(
         F.col("event_type").alias("metric"),
-        stream_sec(schema, "ts").alias("ts"),
+        sec(src, "ts").alias("ts"),
         F.col("value"),
     )
     agg = chained_integral_by_interval(
         pts, interval_seconds=600, step_seconds=60, method="max",
         watermark_seconds=600,
     )
-    name = "stream_ibi_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return replay_to_memory(agg, "stream_render_integral_by_interval")
 
 
 @_q(
@@ -5668,36 +5489,19 @@ SELECT metric, s AS ts, l + b AS forecast FROM r
     "chained_holt_linear)",
 )
 def q_stream_holt_linear(spark, sf_dir):
-    import uuid
-
     from .streaming.rollup import chained_holt_linear
 
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = parquet_source(spark, sf_dir, "events")
     pts = src.select(
         F.col("event_type").alias("metric"),
-        stream_sec(schema, "ts").alias("ts"),
+        sec(src, "ts").alias("ts"),
         F.col("value"),
     )
     agg = chained_holt_linear(
         pts, alpha=0.4, gamma=0.3, step_seconds=60, method="max",
         watermark_seconds=600,
     )
-    name = "stream_holt_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return replay_to_memory(agg, "stream_holt_linear")
 
 
 @_q(
@@ -5747,16 +5551,10 @@ def q_stream_render_composed(spark, sf_dir):
 
     from .streaming.render import render_stream_once
 
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = parquet_source(spark, sf_dir, "events")
     pts = src.select(
         F.col("event_type").alias("metric"),
-        stream_sec(schema, "ts").alias("ts"),
+        sec(src, "ts").alias("ts"),
         F.col("value"),
         F.col("event_id").alias("seq"),
     )
@@ -5821,8 +5619,6 @@ WHERE ts + freq <= m - 600
     "(streaming/aggregator.py parse_aggregation_rules/aggregate_stream)",
 )
 def q_stream_carbon_aggregator(spark, sf_dir):
-    import uuid
-
     from .streaming.aggregator import aggregate_stream, parse_aggregation_rules
 
     rules = parse_aggregation_rules(
@@ -5832,13 +5628,7 @@ def q_stream_carbon_aggregator(spark, sf_dir):
         "prod.applications.<app>.all.req_max (300) = "
         "max prod.applications.<app>.*.requests\n"
     )
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = parquet_source(spark, sf_dir, "events")
     pts = src.select(
         F.concat(
             F.lit("prod.applications."),
@@ -5847,20 +5637,11 @@ def q_stream_carbon_aggregator(spark, sf_dir):
             (F.col("user_id") % 3).cast("string"),
             F.lit(".requests"),
         ).alias("metric"),
-        stream_sec(schema, "ts").alias("ts"),
+        sec(src, "ts").alias("ts"),
         F.col("value"),
     )
     agg = aggregate_stream(pts, rules, watermark_seconds=600)
-    name = "stream_caggr_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return replay_to_memory(agg, "stream_carbon_aggregator")
 
 
 @_q(
@@ -5899,35 +5680,18 @@ FROM agg, mx WHERE t_end <= m - 600
     "(streaming/rollup.py sessionize_stream)",
 )
 def q_stream_sessionize(spark, sf_dir):
-    import uuid
-
     from .streaming.rollup import sessionize_stream
 
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = parquet_source(spark, sf_dir, "events")
     pts = src.select(
         "user_id",
-        stream_sec(schema, "ts").alias("ts"),
+        sec(src, "ts").alias("ts"),
         F.col("value"),
     )
     sessions = sessionize_stream(
         pts, gap_seconds=1800, watermark_seconds=600
     )
-    name = "stream_sessionize_" + uuid.uuid4().hex[:8]
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return replay_to_memory(sessions, "stream_sessionize")
 
 
 _DEC25 = "decimal(25,6)"
@@ -6970,21 +6734,13 @@ FROM events
     "a duplicate, rows/hash mismatch (streaming/rollup.py dedup_stream)",
 )
 def q_stream_dedup(spark, sf_dir):
-    import uuid
-
     from .streaming.rollup import dedup_stream
 
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = parquet_source(spark, sf_dir, "events")
     # simulate at-least-once delivery: every third record arrives twice
     dup = src.select(
         "event_id",
-        stream_sec(schema, "ts").alias("sec"),
+        sec(src, "ts").alias("sec"),
         "user_id",
         "event_type",
         "value",
@@ -6996,16 +6752,9 @@ def q_stream_dedup(spark, sf_dir):
     deduped = dedup_stream(
         dup, keys=["event_id"], ts_col="sec", watermark_seconds=600
     )
-    name = "stream_dedup_" + uuid.uuid4().hex[:8]
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return replay_to_memory(deduped, "stream_dedup").select(
+        "event_id", "sec", "user_id", "event_type", "value"
     )
-    q.awaitTermination(300)
-    return spark.table(name).select("event_id", "sec", "user_id", "event_type", "value")
 
 
 @_q(
@@ -7030,51 +6779,23 @@ FROM e a JOIN e b
     "plain batch interval join (streaming/rollup.py interval_join_stream)",
 )
 def q_stream_attribution_join(spark, sf_dir):
-    import uuid
-
     from .streaming.rollup import interval_join_stream
 
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
-    def _src():
-        return (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-
-    views = (
-        _src()
-        .filter(F.col("event_type") == "view")
-        .select(
-            "user_id",
-            stream_sec(schema, "ts").alias("ts"),
-        )
+    # two independent sources: each side of the stream-stream join
+    # tracks its own offsets
+    vsrc = parquet_source(spark, sf_dir, "events")
+    psrc = parquet_source(spark, sf_dir, "events")
+    views = vsrc.filter(F.col("event_type") == "view").select(
+        "user_id", sec(vsrc, "ts").alias("ts")
     )
-    purchases = (
-        _src()
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id"),
-            stream_sec(schema, "ts").alias("pts"),
-            F.col("value"),
-        )
+    purchases = psrc.filter(F.col("event_type") == "purchase").select(
+        "user_id", sec(psrc, "ts").alias("pts"), "value"
     )
     joined = interval_join_stream(
         views, purchases, key="user_id", window_seconds=86400,
         left_ts="ts", right_ts="pts", watermark_seconds=3600,
     )
-    name = "stream_attr_" + uuid.uuid4().hex[:8]
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name).select(
+    return replay_to_memory(joined, "stream_attribution_join").select(
         "user_id",
         F.col("_lts").alias("view_sec"),
         F.col("_rts").alias("purchase_sec"),
@@ -7961,35 +7682,18 @@ FROM win, mx WHERE w_start + 300 <= m - 600
     "bit-deterministic (streaming/rollup.py sliding_rollup)",
 )
 def q_stream_sliding_5m_1m(spark, sf_dir):
-    import uuid
-
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
     from .streaming.rollup import sliding_rollup
 
+    src = parquet_source(spark, sf_dir, "events")
     pts = src.select(
         F.col("event_type").alias("metric"),
-        stream_sec(schema, "ts").alias("sec"),
+        sec(src, "ts").alias("sec"),
         F.col("value"),
     )
     agg = sliding_rollup(
         pts, window_seconds=300, slide_seconds=60, watermark_seconds=600
     )
-    name = "stream_sliding_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return replay_to_memory(agg, "stream_sliding_5m_1m")
 
 
 @_q(
@@ -8189,20 +7893,12 @@ GROUP BY metric, w_start
     "(streaming analog of ev_distinct_users_kmv)",
 )
 def q_stream_hourly_users_kmv(spark, sf_dir):
-    import uuid
-
     from .functions.hashing import h60
 
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = parquet_source(spark, sf_dir, "events")
     pts = src.select(
         F.col("event_type").alias("metric"),
-        stream_sec(schema, "ts").alias("sec"),
+        sec(src, "ts").alias("sec"),
         h60(F.col("user_id").cast("string")).alias("hv"),
     ).withColumn("_evt", F.col("sec").cast("timestamp"))
     agg = (
@@ -8221,16 +7917,7 @@ def q_stream_hourly_users_kmv(spark, sf_dir):
             .alias("est_users"),
         )
     )
-    name = "stream_kmv_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return replay_to_memory(agg, "stream_hourly_users_kmv")
 
 
 @_q(
@@ -9128,36 +8815,19 @@ SELECT metric, ts, value, known FROM win, mx WHERE ts + 300 <= m - 600
     "streaming/rollup.py windowed_rollup's gate path",
 )
 def q_stream_rollup_5m_min_xff(spark, sf_dir):
-    import uuid
-
     from .streaming.rollup import windowed_rollup
 
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = parquet_source(spark, sf_dir, "events")
     pts = src.select(
         F.col("event_type").alias("metric"),
-        stream_sec(schema, "ts").alias("ts"),
+        sec(src, "ts").alias("ts"),
         F.col("value"),
         F.col("event_id").alias("seq"),
     )
     rolled = windowed_rollup(
         pts, step_seconds=300, method="min", xff=0.006, watermark_seconds=600
     )
-    name = "stream_xff_" + uuid.uuid4().hex[:8]
-    q = (
-        rolled.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return replay_to_memory(rolled, "stream_rollup_5m_min_xff")
 
 
 # --------------------------------------------------------------------- #
@@ -9463,18 +9133,10 @@ FROM rk, mx WHERE rn = 1 AND w_start + 60 <= m - 600
     "order — under the closed-window rule",
 )
 def q_stream_top_metric_1m(spark, sf_dir):
-    import uuid
-
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = parquet_source(spark, sf_dir, "events")
     pts = src.select(
         F.col("event_type").alias("metric"),
-        stream_sec(schema, "ts").alias("sec"),
+        sec(src, "ts").alias("sec"),
         F.col("value"),
     ).withColumn("_evt", F.col("sec").cast("timestamp"))
     agg = (
@@ -9487,16 +9149,7 @@ def q_stream_top_metric_1m(spark, sf_dir):
             F.col("best.value").alias("top_value"),
         )
     )
-    name = "stream_top_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(name)
+    return replay_to_memory(agg, "stream_top_metric_1m")
 
 
 @_q(
@@ -9619,34 +9272,19 @@ FROM raw GROUP BY metric, ts // 60 * 60
     "(streaming/rollup.py stateful_slot_lww)",
 )
 def q_stream_slot_lww_state(spark, sf_dir):
-    import uuid
-
     from .streaming.rollup import stateful_slot_lww
 
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = parquet_source(spark, sf_dir, "events")
     pts = src.select(
         F.col("event_type").alias("metric"),
-        stream_sec(schema, "ts").alias("ts"),
+        sec(src, "ts").alias("ts"),
         F.col("value"),
         F.col("event_id").alias("seq"),
     )
     out = stateful_slot_lww(pts, step_seconds=60, retention_seconds=90 * 86400)
-    name = "stream_state_" + uuid.uuid4().hex[:8]
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return replay_to_memory(out, "stream_slot_lww_state").select(
+        "metric", "ts", "value"
     )
-    q.awaitTermination(300)
-    return spark.table(name).select("metric", "ts", "value")
 
 
 @_q(
@@ -10873,33 +10511,18 @@ SELECT w_start, doc_id, n_bands FROM flags, mx WHERE w_start + 300 <= m - 60
     "(streaming/rollup.py near_dedup_stream)",
 )
 def q_stream_near_dedup(spark, sf_dir):
-    import uuid
-
     from .streaming.rollup import near_dedup_stream
 
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    src = parquet_source(spark, sf_dir, "documents")
     docs = src.select("doc_id", F.col("doc_id").alias("sec"), "text")
     flags = near_dedup_stream(
         docs, window_seconds=300, watermark_seconds=60,
         num_hashes=16, bands=4, shingle_n=5,
         id_col="doc_id", ts_col="sec", text_col="text",
     )
-    name = "stream_near_dedup_" + uuid.uuid4().hex[:8]
-    q = (
-        flags.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return replay_to_memory(flags, "stream_near_dedup").select(
+        "w_start", "doc_id", "n_bands"
     )
-    q.awaitTermination(300)
-    return spark.table(name).select("w_start", "doc_id", "n_bands")
 
 
 @_q(
@@ -12559,25 +12182,18 @@ FROM ss
 )
 def q_stream_render_target(spark, sf_dir):
     import tempfile
-    import uuid
 
     from .streaming.render import render_stream_once
 
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = parquet_source(spark, sf_dir, "events")
     pts = src.select(
         F.concat(F.lit("ev."), F.col("event_type"), F.lit(".m1"))
         .alias("metric"),
-        stream_sec(schema, "ts").alias("ts"),
+        sec(src, "ts").alias("ts"),
         F.col("value"),
         F.col("event_id").alias("seq"),
     )
-    out_dir = tempfile.mkdtemp(prefix="stream_render_" + uuid.uuid4().hex[:8])
+    out_dir = tempfile.mkdtemp(prefix="stream_render_")
     return render_stream_once(
         spark,
         pts,
@@ -13351,30 +12967,18 @@ FROM rk WHERE rank <= 3
 )
 def q_stream_top_metrics(spark, sf_dir):
     import tempfile
-    import uuid
 
     from .streaming.rollup import top_metrics_stream
 
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = parquet_source(spark, sf_dir, "events")
     pts = src.select(
         F.col("event_type").alias("metric"),
-        stream_sec(schema, "ts").alias("ts"),
+        sec(src, "ts").alias("ts"),
     )
-    out_dir = tempfile.mkdtemp(prefix="stream_topk_" + uuid.uuid4().hex[:8])
-    q = (
-        top_metrics_stream(
-            pts, out_dir, step_seconds=60, k=3, watermark_seconds=600
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
+    out_dir = tempfile.mkdtemp(prefix="stream_topk_")
+    replay(top_metrics_stream(
+        pts, out_dir, step_seconds=60, k=3, watermark_seconds=600
+    ))
     return spark.read.parquet(out_dir).withColumn(
         "rank", F.col("rank").cast("int")
     )
@@ -13717,25 +13321,18 @@ FROM rk WHERE rn = greatest(1, CAST(ceil(n * 50.0 / 100.0) AS BIGINT))
 )
 def q_stream_render_percentile(spark, sf_dir):
     import tempfile
-    import uuid
 
     from .streaming.render import render_stream_once
 
-    _ensure_nanos_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = parquet_source(spark, sf_dir, "events")
     pts = src.select(
         F.concat(F.lit("ev."), F.col("event_type"), F.lit(".m1"))
         .alias("metric"),
-        stream_sec(schema, "ts").alias("ts"),
+        sec(src, "ts").alias("ts"),
         F.col("value"),
         F.col("event_id").alias("seq"),
     )
-    out_dir = tempfile.mkdtemp(prefix="stream_rp_" + uuid.uuid4().hex[:8])
+    out_dir = tempfile.mkdtemp(prefix="stream_rp_")
     out = render_stream_once(
         spark,
         pts,

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..render import Call, Path, TargetSyntaxError, evaluate_target, parse_target
+from .replay import replay
 from .rollup import windowed_rollup
 
 #: target functions legal on a finalized streaming rollup: per-row
@@ -431,42 +432,10 @@ def render_stream_once(
     points: DataFrame,
     target: str,
     out_path: str,
-    state_partitions: int | None = None,
     **kwargs,
 ) -> DataFrame:
-    """Replay the stream to completion (availableNow) and return the
-    accumulated render output as a batch DataFrame.
-
-    ``state_partitions``: state-store partition count for THIS query.
-    Spark pins the stateful-operator partition count from
-    ``spark.sql.shuffle.partitions`` at first start (it is recorded in
-    the checkpoint and immutable afterwards), so this is surfaced here
-    as an explicit per-query knob rather than a session-wide default.
-    Default ``None`` keeps the session value.
-
-    Production sizing: each stateful operator holds ~(distinct metrics)
-    x (in-watermark windows) state rows, where in-watermark windows =
-    watermark_seconds / step_seconds + the chained window size.  Size
-    partitions so each holds a healthy chunk of that state (10^4-10^6
-    rows with the default HDFS-backed store) and stays >= the executor
-    core count you want the commit fan-out to use; every partition pays
-    a per-batch state-store commit (checkpoint file + WAL) even when
-    empty, so far more partitions than state rows buys pure overhead.
-    A 5-metric local replay (~75 state rows) wants 2-4; a 10^6-metric x
-    15-window production stream (1.5e7 rows) wants hundreds.  The
-    checkpoint pin means the choice is per-deployment, not per-host:
-    pick it when the stream first starts."""
-    if state_partitions is not None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            render_stream(points, target, out_path, **kwargs)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination(600)
+    """Replay the stream to completion (availableNow, see
+    streaming/replay.py) and return the accumulated render output as a
+    batch DataFrame."""
+    replay(render_stream(points, target, out_path, **kwargs))
     return spark.read.parquet(out_path)
