@@ -335,6 +335,40 @@ def test_persist_slots_do_not_contaminate_other_scans(spark):
         Q.release_persist_slots()
 
 
+def test_persist_slot_without_semantic_hash_releases_the_slot():
+    """When the plan has no semantic hash, the slot's earlier occupant
+    (registered under its real hash) is released, not leaked."""
+
+    class Frame:
+        def __init__(self, h):
+            self.h, self.released = h, False
+
+        @property
+        def _jdf(self):
+            if self.h is None:
+                raise RuntimeError("no analyzed plan")
+            plan = type("Plan", (), {"semanticHash": lambda _s: self.h})()
+            qe = type("QE", (), {"analyzed": lambda _s: plan})()
+            return type("JDF", (), {"queryExecution": lambda _s: qe})()
+
+        def persist(self, level=None):
+            return self
+
+        def unpersist(self):
+            self.released = True
+
+    slot = "test.no_semantic_hash"
+    first, second = Frame(12345), Frame(None)
+    try:
+        Q._persist_slot(slot, first)
+        Q._persist_slot(slot, second)
+        assert first.released and not second.released
+        assert [k for k in Q._QUERY_PERSIST_LIVE if k[0] == slot] == [(slot, None)]
+    finally:
+        for k in [k for k in Q._QUERY_PERSIST_LIVE if k[0] == slot]:
+            Q._QUERY_PERSIST_LIVE.pop(k)
+
+
 def test_asof_join_single_shuffle_no_join(spark):
     """The as-of match is forward-fill over ONE user-keyed shuffle — a
     plan with any join node would be the unbounded range-join shape the

@@ -1,0 +1,171 @@
+"""The update_many write path: rollup cascade values, one commit per batch.
+
+Expected rows are written out by hand from whisper's rules (reference:
+whisper.py:578-664 propagate, :740-875 update_many), not computed by the
+store.  Every store here uses the policy 60s:10m,5m:1h,1h:1d: a 5 minute
+interval holds 5 minute-slots, an hour holds 12 five-minute slots.
+"""
+
+import pytest
+
+from whisper_spark import store as store_mod
+from whisper_spark.store import WhisperStore
+
+H = 1_699_999_200  # hour-aligned
+NOW = H + 3000  # archive 0 covers ts >= H + 2400, archive 1 ts >= H - 600
+POLICY = [(60, 10), (300, 12), (3600, 24)]
+
+
+def _store(spark, tmp_path, xff, name="db"):
+    return WhisperStore.create(spark, str(tmp_path / name), POLICY, x_files_factor=xff)
+
+
+def _rows(store):
+    return sorted(
+        tuple(r)
+        for r in store._read_points()
+        .select("metric", "resolution", "ts", "value", "wseq")
+        .collect()
+    )
+
+
+def _write(spark, store, points, now=NOW):
+    df = spark.createDataFrame(
+        [(m, t, float(v), i) for i, (m, t, v) in enumerate(points)],
+        "metric string, ts long, value double, seq long",
+    )
+    store.update_many(df, now=now)
+
+
+def test_cascade_stops_per_metric_at_the_xff_gate(spark, tmp_path):
+    store = _store(spark, tmp_path, 0.5)
+    # batch 1: six of twelve 5-minute slots of hour H for both metrics,
+    # old enough to land directly in archive 1 -> 6/12 passes into hour H
+    _write(spark, store, [(m, H + 300 * k, 10 * (k + 1) * s)
+                          for m, s in (("a", 1), ("b", 10)) for k in range(6)])
+    # batch 2: a fills all 5 minute-slots of H+2400 (5/5 passes level 1,
+    # then hour H has 7/12 known); b fills 2 (2/5 < 0.5: b's cascade stops
+    # at level 1, so hour H is not recomputed for b although 6/12 would pass)
+    _write(spark, store, [("a", H + 2400 + 60 * k, 5 + k) for k in range(5)]
+           + [("b", H + 2400, 7), ("b", H + 2460, 9)])
+    assert _rows(store) == sorted(
+        [("a", 60, H + 2400 + 60 * k, 5.0 + k, 2) for k in range(5)]
+        + [("a", 300, H + 300 * k, 10.0 * (k + 1), 1) for k in range(6)]
+        + [("a", 300, H + 2400, 7.0, 2)]  # avg(5..9)
+        + [("a", 3600, H, 35.0, 1)]  # avg(10..60)
+        + [("a", 3600, H, 31.0, 2)]  # avg(10..60, 7) = 217 / 7
+        + [("b", 60, H + 2400, 7.0, 2), ("b", 60, H + 2460, 9.0, 2)]
+        + [("b", 300, H + 300 * k, 100.0 * (k + 1), 1) for k in range(6)]
+        + [("b", 3600, H, 350.0, 1)]  # avg(100..600)
+    )
+
+
+def test_old_point_lands_in_archive_1_and_cascades(spark, tmp_path):
+    store = _store(spark, tmp_path, 0.0)
+    # H+1007 is 1993 s old: past archive 0's 600 s, so it is written raw
+    # into archive 1 at H+900 and starts its own cascade into archive 2,
+    # where hour H also sees this batch's rollup of H+2700
+    _write(spark, store, [("a", H + 1007, 4), ("a", H + 2700, 2)])
+    assert _rows(store) == [
+        ("a", 60, H + 2700, 2.0, 1),
+        ("a", 300, H + 900, 4.0, 1),
+        ("a", 300, H + 2700, 2.0, 1),
+        ("a", 3600, H, 3.0, 1),  # avg(4, 2)
+    ]
+    ((_f, _u, step), df) = store.fetch("a", H, until_time=NOW, now=NOW, archive_step=300)
+    got = {r["ts"]: r["value"] for r in df.collect() if r["value"] is not None}
+    assert (step, got) == (300, {H + 900: 4.0, H + 2700: 2.0})
+
+
+def test_direct_write_overwrites_the_same_batchs_rollup(spark, tmp_path):
+    store = _store(spark, tmp_path, 0.0)
+    # at now = H+3120 archive 0 starts at H+2520, inside the 5 minute
+    # interval H+2400: H+2460 goes raw into archive 1's slot H+2400, the
+    # later minutes roll up into the same slot.  Whisper commits archive 0
+    # (and its rollups) first, then archive 1's points overwrite the slot.
+    _write(spark, store, [("a", H + 2460, 10)]
+           + [("a", H + 2460 + 60 * k, k) for k in (1, 2, 3)], now=H + 3120)
+    assert _rows(store) == [
+        ("a", 60, H + 2520, 1.0, 1),
+        ("a", 60, H + 2580, 2.0, 1),
+        ("a", 60, H + 2640, 3.0, 1),
+        ("a", 300, H + 2400, 10.0, 1),
+        ("a", 3600, H, 10.0, 1),
+    ]
+
+
+def test_resend_in_a_later_batch_rerolls_touched_intervals(spark, tmp_path):
+    store = _store(spark, tmp_path, 0.0)
+    _write(spark, store, [("a", H + 2400 + 60 * k, k + 1) for k in range(5)])
+    # re-send of slot H+2460 (raw ts inside the slot) with a new value
+    _write(spark, store, [("a", H + 2465, 12)])
+    assert _rows(store) == sorted(
+        [("a", 60, H + 2400 + 60 * k, k + 1.0, 1) for k in range(5)]
+        + [("a", 60, H + 2460, 12.0, 2)]
+        + [("a", 300, H + 2400, 3.0, 1), ("a", 300, H + 2400, 5.0, 2)]  # avg(1,12,3,4,5)
+        + [("a", 3600, H, 3.0, 1), ("a", 3600, H, 5.0, 2)]
+    )
+    ((_f, _u, _s), df) = store.fetch("a", H, until_time=NOW, now=NOW, archive_step=300)
+    assert {r["ts"]: r["value"] for r in df.collect()}[H + 2400] == 5.0
+
+
+def test_future_point_is_accepted_and_cascades(spark, tmp_path):
+    store = _store(spark, tmp_path, 0.0)
+    # H+3120 is 120 s in the future: update_many keeps it in archive 0
+    # (reference: the age test never rejects age < 0)
+    _write(spark, store, [("a", H + 3120, 8), ("a", H + 2940, 2)])
+    assert _rows(store) == [
+        ("a", 60, H + 2940, 2.0, 1),
+        ("a", 60, H + 3120, 8.0, 1),
+        ("a", 300, H + 2700, 2.0, 1),
+        ("a", 300, H + 3000, 8.0, 1),
+        ("a", 3600, H, 5.0, 1),  # avg(2, 8)
+    ]
+
+
+def test_failure_inside_the_cascade_leaves_the_store_unchanged(
+    spark, tmp_path, monkeypatch
+):
+    store = _store(spark, tmp_path, 0.0)
+    _write(spark, store, [("a", H + 2400, 1)])
+    before = _rows(store)
+    real, calls = store_mod.xff_rollup, []
+
+    def failing(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("rollup failed")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(store_mod, "xff_rollup", failing)
+    with pytest.raises(RuntimeError, match="rollup failed"):
+        _write(spark, store, [("a", H + 2460, 2), ("b", H + 2700, 3)])
+    assert len(calls) == 2
+    assert _rows(store) == before
+
+
+def test_one_append_per_batch(spark, tmp_path, monkeypatch):
+    appends, batches = [], []
+    real_append, real_write = WhisperStore._append, WhisperStore._write_assigned
+
+    def append(self, *args):
+        appends.append(1)
+        return real_append(self, *args)
+
+    def write(self, *args):
+        batches.append(1)
+        return real_write(self, *args)
+
+    monkeypatch.setattr(WhisperStore, "_append", append)
+    monkeypatch.setattr(WhisperStore, "_write_assigned", write)
+    src = _store(spark, tmp_path, 0.0, "src")
+    # points in archive 0 and archive 1, cascading through both levels
+    _write(spark, src, [("a", H + 2400, 1), ("a", H + 1200, 2), ("b", H + 2700, 3)])
+    assert (len(batches), len(appends)) == (1, 1)
+
+    dst = _store(spark, tmp_path, 0.0, "dst")
+    src.merge_into(dst, now=NOW)
+    # one batch per archive, each committed by one append
+    assert (len(batches), len(appends)) == (4, 4)
+    ((_f, _u, _s), df) = dst.fetch("a", H - 1, until_time=NOW, now=NOW, archive_step=3600)
+    assert [r["value"] for r in df.collect() if r["value"] is not None] == [1.5]

@@ -3662,7 +3662,8 @@ def _persist_slot(slot: str, df: DataFrame, level=None) -> DataFrame:
         h = df._jdf.queryExecution().analyzed().semanticHash()
     except Exception:  # pragma: no cover - plan analysis never fails in practice
         h = None
-    for key in [k for k in _QUERY_PERSIST_LIVE if (h is not None and k[1] == h) or k == (slot, h)]:
+    # without a hash, release every occupant of the slot (whatever its hash)
+    for key in [k for k in _QUERY_PERSIST_LIVE if (k[1] == h if h is not None else k[0] == slot)]:
         old = _QUERY_PERSIST_LIVE.pop(key)
         try:
             old.unpersist()

@@ -24,10 +24,12 @@ Design decisions (the 100 TB story):
   whisper.py:721-724,992-1001).  ``resolution`` is a partition column, and
   ``tb = ts // (step * TB_SLOTS)`` buckets time so a fetch reads only the
   slices covering its range, regardless of total table size.
-* **Rollups are set-based.**  Whisper propagates one interval at a time
-  (reference: whisper.py:578-664); we recompute all touched lower
-  intervals per level with one ``groupBy`` — same result, one shuffle per
-  level, map-side combined.
+* **Rollups are set-based, and a batch commits once.**  Whisper
+  propagates one interval at a time (reference: whisper.py:578-664); we
+  recompute all touched lower intervals per level with one ``groupBy``
+  and build the whole cascade as one plan over the stored rows plus the
+  batch's in-flight rows.  One append per batch writes the points and
+  every rollup together, so a failed batch writes nothing.
 
 Semantics parity notes (validated by differential tests against the
 reference library in tests/test_store_parity.py):
@@ -40,13 +42,16 @@ reference library in tests/test_store_parity.py):
   with the greatest raw timestamp, ties to the EARLIEST submitted
   (reference: whisper.py:749+806-808 — newest-first stable sort, then
   reversed, keep last of run).  Across batches, later batches win.
+  A batch's direct write into archive j takes the slot from the same
+  batch's rollup into it (reference: whisper.py:767-789 — archives are
+  committed, each with its propagation, in precision order).
 * the rollup cascade from each written archive stops at the first level
   where none of its intervals passed the xFilesFactor gate (reference:
   whisper.py:869-875); a gated-out recompute leaves any previously
   written lower value in place (no tombstone — exactly whisper's
   "don't write" behavior).
-* concurrent writers are safe on one host: wseq allocation and the
-  append+cascade run under a per-store flock — the reference's LOCK
+* concurrent writers are safe on one host: wseq allocation, the cascade
+  and the append run under a per-store flock — the reference's LOCK
   analog (whisper.py:98-104,683-684).  See ``_fs_lock`` /
   ``_write_assigned`` for why lock order must equal wseq order, and
   tests/test_concurrency.py for the differential evidence.
@@ -58,7 +63,8 @@ import json
 import os
 import shutil
 import uuid
-from contextlib import contextmanager
+from contextlib import ExitStack, contextmanager
+from functools import reduce
 from typing import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -115,6 +121,13 @@ def _f32(x: float) -> float:
     which FLIPS gate decisions like ``1/5 >= xff``.  Parity requires the
     same quantization (found by multi-metric differential testing)."""
     return _struct.unpack("!f", _struct.pack("!f", float(x)))[0]
+
+
+def _persist(cached: ExitStack, df: DataFrame) -> DataFrame:
+    """persist() ``df`` until ``cached`` closes."""
+    df = df.persist()
+    cached.callback(df.unpersist)
+    return df
 
 
 class WhisperStore:
@@ -485,27 +498,25 @@ class WhisperStore:
 
     def _update_batch(self, points: DataFrame, now: int) -> None:
         assigned = self._assign_archive(points, now)
-        self._write_assigned(assigned, now)
+        self._write_assigned(assigned)
 
-    def _write_assigned(self, assigned: DataFrame, now: int) -> None:
+    def _write_assigned(self, assigned: DataFrame) -> None:
         """Write one batch of points that already carry their target
-        archive index ``aidx`` (columns: metric, ts, value, seq, aidx),
-        then run the rollup cascade.  Shared by update/update_many (age
-        bucketing) and merge (fixed same-index writes, reference:
-        whisper.py:1085-1095)."""
+        archive index ``aidx`` (columns: metric, ts, value, seq, aidx)
+        and their rollup cascade in one append.  Shared by
+        update/update_many (age bucketing) and merge (fixed same-index
+        writes, reference: whisper.py:1085-1095)."""
         archives = self.archives
         with self._fs_lock(".append.lock"):
             batch = self._next_batch()
-            self._write_assigned_locked(assigned, archives, batch, now)
+            self._write_assigned_locked(assigned, archives, batch)
 
-    def _write_assigned_locked(
-        self, assigned: DataFrame, archives, batch: int, now: int
-    ) -> None:
+    def _write_assigned_locked(self, assigned: DataFrame, archives, batch: int) -> None:
         # Serialized writer section (whisper LOCK semantics: one writer
         # per file).  Two reasons, both real: (a) concurrent append jobs
         # share the table root's Hadoop _temporary staging dir and corrupt
         # each other's commit; (b) a cascade computed without seeing an
-        # in-flight sibling's raw append could win LWW with an incomplete
+        # in-flight sibling's batch could win LWW with an incomplete
         # rollup.  wseq is allocated INSIDE the lock, so lock order ==
         # wseq order: the highest-wseq (winning) cascade always ran last
         # and saw every earlier committed batch.
@@ -532,141 +543,149 @@ class WhisperStore:
             .withColumn("wseq", F.lit(batch).cast("long"))
         )
 
-        # Spark reuse: this DF feeds the append AND the cascade candidates.
-        deduped = deduped.persist()
-        try:
-            self._append(deduped.drop("aidx"))
-            touched = deduped.select("aidx", "metric", "ts", "resolution")
-            self._cascade(touched, now=now, batch=batch)
-        finally:
-            deduped.unpersist()
+        # ExitStack unpersists in reverse creation order: releasing a base
+        # frame while a cached frame built on it is still cached makes the
+        # CacheManager re-plan the dependent frame.
+        with ExitStack() as cached:
+            deduped = _persist(cached, deduped)
+            rolled = self._cascade(deduped, batch, cached)
+            # the batch commits once: a failure anywhere above writes nothing
+            self._append(reduce(DataFrame.unionByName, [deduped.drop("aidx"), *rolled]))
 
-    def _cascade(self, touched: DataFrame, now: int, batch: int) -> None:
+    def _cascade(
+        self, deduped: DataFrame, batch: int, cached: ExitStack
+    ) -> list[DataFrame]:
         """Rollup cascade with per-(source archive, METRIC) early stop.
+        Returns the rolled rows of every lower level (columns metric,
+        resolution, ts, value, wseq) as lazy frames and writes nothing:
+        the caller commits them with the batch's points in one append per
+        batch, so a failed batch writes nothing.  Frames it caches are
+        released when ``cached`` closes.
 
         Whisper cascades per file — i.e. per metric: an
         ``__archive_update_many`` stops propagating deeper once an entire
         level writes nothing *for that file* (reference: whisper.py:729-733
         single-point, :869-875 bulk).  One store holds many metrics, so
-        aliveness is tracked per (aidx, metric) pair — as a DataFrame, not
-        a driver-side set, so a batch touching millions of metrics never
-        collects them (the only driver-side values are the per-level ts
-        bounds and an emptiness probe).
+        aliveness is tracked per (aidx, metric) pair — as a lazy
+        DataFrame, not a driver-side set, so a batch touching millions of
+        metrics never collects them (the only driver-side value is each
+        level's earliest touched interval).
 
         For each lower level j, candidate intervals come from every still-
         alive cascade whose source archive is higher-precision than j; the
-        recompute reads the *current* ring-visible level j-1 data exactly
-        like ``__propagate`` reads the higher archive (whisper.py:578-637).
+        recompute reads the ring-visible level j-1 data exactly like
+        ``__propagate`` reads the higher archive (whisper.py:578-637).
+        Nothing of the batch is on disk yet, so level j-1 is the stored
+        rows plus the batch's in-flight rows at that resolution (its
+        direct writes, and level j-1's rollup where no direct write took
+        the slot).  Those carry ``wseq = batch``, the highest in the
+        store, so LWW and ring eviction see what they would see after an
+        append.
         """
         archives = self.archives
         policy = self._policy()
         method = policy["aggregationMethod"]
         xff = float(policy["xFilesFactor"])
+        stored = self._has_data()
+        cols = ["metric", "resolution", "ts", "value", "wseq"]
 
-        touched = touched.persist()
-        alive = touched.select("aidx", "metric").distinct().persist()
-        retired = []
-
-        try:
-            for j in range(1, len(archives)):
-                # cascades feeding level j = alive (source, metric) pairs
-                # whose source archive is higher-precision than j (a
-                # batch's direct writes into archive j-1 start their own
-                # cascade — reference: whisper.py:858-875)
-                src_alive = alive.filter(F.col("aidx") < j)
-                lower = archives[j]
-                higher = archives[j - 1]
-                cand = (
-                    touched.join(src_alive, on=["aidx", "metric"], how="left_semi")
-                    .select(
-                        "aidx",
-                        "metric",
-                        align_ts(F.col("ts"), lower.seconds_per_point).alias("lts"),
-                    )
-                    .distinct()
-                ).persist()
-                intervals = cand.select("metric", "lts").distinct()
-
-                # scan pruning: the recompute only needs the higher archive
-                # from the earliest touched interval onward — (resolution,
-                # tb) partitions + parquet min/max stats prune the read
-                # (at 100 TB the store dwarfs any batch).  The upper bound
-                # stays open for ring-eviction colliders (see below).
-                bounds = cand.agg(
-                    F.min("lts").alias("lo"), F.max("lts").alias("hi")
-                ).collect()[0]
-                if bounds["lo"] is None:
-                    cand.unpersist()
-                    continue
-                # ring-visible state of the higher archive: propagation in
-                # the reference happens AFTER physical slot writes, so a
-                # point evicted by a colliding (mod span) later write must
-                # not feed the rollup.
-                src_data = self._ring_visible(
-                    self._lww(
-                        self._read_resolution(
-                            higher.seconds_per_point,
-                            # one span back for older-ts later-batch
-                            # evictors of future points (see fetch path)
-                            ts_from=int(bounds["lo"]) - higher.retention,
-                        )
-                    ),
-                    higher,
-                ).withColumn(
-                    "lts", align_ts(F.col("ts"), lower.seconds_per_point)
-                )
-                src_in = src_data.join(
-                    F.broadcast(intervals), on=["metric", "lts"], how="left_semi"
-                )
-                rolled = xff_rollup(
-                    src_in.select("metric", "ts", "value"),
-                    keys=["metric"],
-                    higher_step=higher.seconds_per_point,
-                    lower_step=lower.seconds_per_point,
-                    method=method,
-                    xff=xff,
-                )
-                written = rolled.select(
+        touched = deduped.select("aidx", "metric", "ts")
+        alive = touched.select("aidx", "metric").distinct()
+        rolled_levels: list[DataFrame] = []
+        rolled = None  # level j-1's rollup; None when no cascade reached it
+        for j in range(1, len(archives)):
+            # cascades feeding level j = alive (source, metric) pairs
+            # whose source archive is higher-precision than j (a batch's
+            # direct writes into archive j-1 start their own cascade —
+            # reference: whisper.py:858-875)
+            src_alive = alive.filter(F.col("aidx") < j)
+            lower = archives[j]
+            higher = archives[j - 1]
+            cand = _persist(
+                cached,
+                touched.join(src_alive, on=["aidx", "metric"], how="left_semi")
+                .select(
+                    "aidx",
                     "metric",
-                    F.col("ts"),
-                    "value",
-                    F.lit(lower.seconds_per_point).cast("long").alias("resolution"),
-                    F.lit(batch).cast("long").alias("wseq"),
-                ).persist()
-                try:
-                    self._append(
-                        written.select("metric", "resolution", "ts", "value", "wseq")
+                    align_ts(F.col("ts"), lower.seconds_per_point).alias("lts"),
+                )
+                .distinct(),
+            )
+            intervals = cand.select("metric", "lts").distinct()
+
+            # scan pruning: the recompute only needs the higher archive
+            # from the earliest touched interval onward — (resolution, tb)
+            # partitions + parquet min/max stats prune the read (at 100 TB
+            # the store dwarfs any batch).  The upper bound stays open for
+            # ring-eviction colliders (see below).
+            lo = cand.agg(F.min("lts")).collect()[0][0]
+            if lo is None:
+                rolled = None
+                continue
+            in_flight = deduped.filter(F.col("aidx") == j - 1).select(*cols)
+            if rolled is not None:
+                in_flight = in_flight.unionByName(rolled)
+            # one span back for older-ts later-batch evictors of future
+            # points (see fetch path); a wider read can change ring winners
+            ts_from = int(lo) - higher.retention
+            src_rows = in_flight.filter(F.col("ts") >= ts_from)
+            if stored:
+                src_rows = (
+                    self._read_resolution(higher.seconds_per_point, ts_from=ts_from)
+                    .select(*cols)
+                    .unionByName(src_rows)
+                )
+            # ring-visible state of the higher archive: propagation in the
+            # reference happens AFTER physical slot writes, so a point
+            # evicted by a colliding (mod span) later write must not feed
+            # the rollup.
+            src_data = self._ring_visible(self._lww(src_rows), higher).withColumn(
+                "lts", align_ts(F.col("ts"), lower.seconds_per_point)
+            )
+            src_in = src_data.join(
+                F.broadcast(intervals), on=["metric", "lts"], how="left_semi"
+            )
+            rolled = xff_rollup(
+                src_in.select("metric", "ts", "value"),
+                keys=["metric"],
+                higher_step=higher.seconds_per_point,
+                lower_step=lower.seconds_per_point,
+                method=method,
+                xff=xff,
+            ).select(
+                "metric",
+                F.lit(lower.seconds_per_point).cast("long").alias("resolution"),
+                "ts",
+                "value",
+                F.lit(batch).cast("long").alias("wseq"),
+            )
+            if j + 1 < len(archives):
+                # read again by the next level (in-flight rows and the
+                # alive set) and by the append
+                rolled = _persist(cached, rolled)
+                # a (source, metric) cascade survives level j iff at least
+                # one of its intervals passed the gate
+                surviving = (
+                    cand.join(
+                        rolled.select("metric", F.col("ts").alias("lts")).distinct(),
+                        on=["metric", "lts"],
+                        how="left_semi",
                     )
-                    # a (source, metric) cascade survives level j iff at
-                    # least one of its intervals passed the gate
-                    surviving = (
-                        cand.join(
-                            written.select(
-                                "metric", F.col("ts").alias("lts")
-                            ).distinct(),
-                            on=["metric", "lts"],
-                            how="left_semi",
-                        )
-                        .select("aidx", "metric")
-                        .distinct()
-                    )
-                    new_alive = (
-                        alive.filter(F.col("aidx") >= j)
-                        .unionByName(surviving)
-                        .persist()
-                    )
-                    # materialize before dropping the old lineage
-                    new_alive.count()
-                    retired.append(alive)
-                    alive = new_alive
-                finally:
-                    written.unpersist()
-                    cand.unpersist()
-        finally:
-            touched.unpersist()
-            alive.unpersist()
-            for df in retired:
-                df.unpersist()
+                    .select("aidx", "metric")
+                    .distinct()
+                )
+                alive = alive.filter(F.col("aidx") >= j).unionByName(surviving)
+            # this batch's direct writes into archive j land after its
+            # rollups from archive j-1 and overwrite the slot (reference:
+            # whisper.py:767-789 commits archives in precision order); the
+            # rollup still counted for the survival test above
+            rolled = rolled.join(
+                deduped.filter(F.col("aidx") == j).select("metric", "ts"),
+                on=["metric", "ts"],
+                how="left_anti",
+            )
+            rolled_levels.append(rolled)
+        return rolled_levels
 
     # ------------------------------------------------------------------ #
     # read path (reference: whisper.py:892-1034)
@@ -1063,7 +1082,7 @@ class WhisperStore:
                     F.lit(i).alias("aidx"),
                 )
             )
-            dst._write_assigned(pts, now)
+            dst._write_assigned(pts)
 
     def diff(
         self,

@@ -12,8 +12,9 @@ Spark mapping:
 * source: any ``readStream`` (file/socket/kafka) of line-protocol or
   structured points
 * sink: ``foreachBatch`` running WhisperStore.update_many — the SAME
-  batch pipeline as offline ingest (align -> LWW dedup -> append ->
-  rollup cascade), so batch/stream parity is by construction
+  batch pipeline as offline ingest (align -> LWW dedup -> rollup cascade
+  -> one append per batch), so batch/stream parity is by construction;
+  a failed batch writes nothing, and its replay writes it whole
 * watermark/late data: points older than maxRetention are dropped by the
   age-bucketing step itself — the store IS the watermark state, bounded
   by retention just like the ring buffer was.
@@ -99,9 +100,11 @@ def start_ingest(
     a WhisperStore via foreachBatch.
 
     Exactly-once-per-batch: Structured Streaming replays a failed batch
-    with the same batch_id; update_many's last-write-wins append makes the
-    replay idempotent at the slot level (same data -> same final slots),
-    mirroring whisper's idempotent positional overwrite.
+    with the same batch_id.  update_many commits a batch with one append
+    (points and rollups together), so a failed batch leaves no rows, and
+    its last-write-wins append makes the replay idempotent at the slot
+    level (same data -> same final slots), mirroring whisper's idempotent
+    positional overwrite.
     """
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
