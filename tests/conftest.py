@@ -14,7 +14,7 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
 # Test tiers.  The suite grew to 713 tests / ~59 min, which exceeded the
 # driver's verify window (VERIFY_r13 cut off at ~78% with zero failures).
 # The DEFAULT tier skips the heavy fuzz / scale-smoke / randomized-parity
-# modules — selection is duration-driven (plans/r14/pytest_full_durations.txt:
+# modules — selection is duration-driven (a full-tier `--durations` run:
 # the five fuzz/scale modules alone account for ~2100 s of the 3524 s total)
 # — while keeping every functional, pin, plan-property and oracle test.
 # The FULL tier (builder gate, unchanged 713 tests) runs with

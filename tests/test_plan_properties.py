@@ -213,14 +213,25 @@ def test_ivfpq_join_shapes(spark):
     corpus-sized and share the vec_id key (the legitimate large-large
     equi-join at scale); what must never appear is a cartesian product
     or a sort-merge against one of the tiny index tables."""
-    plan = plan_of(spark, "emb_ivfpq_recall")
-    assert "CartesianProduct" not in plan
-    assert plan.count("BroadcastHashJoin") >= 3
-    # any SMJ must be on the corpus key, not on (s, code)/(cid) index keys
     import re
 
-    for m in re.finditer(r"SortMergeJoin \[([a-z_]+)#", plan):
-        assert m.group(1) == "vec_id", plan
+    from whisper_spark.operators.similarity import ivf_residual_assign
+
+    # the residual assignment is checkpointed before the query plan is
+    # built, so its broadcasts (the coarse centroids) live in its own
+    # plan; the codebook and distance-table broadcasts stay in the query
+    res = ivf_residual_assign(Q._emb_qv_cached(spark, SF), n_coarse=4)
+    res_plan = res._jdf.queryExecution().executedPlan().toString()
+    plan = plan_of(spark, "emb_ivfpq_recall")
+    for p in (res_plan, plan):
+        assert "CartesianProduct" not in p
+        # any SMJ must be on the corpus key, not on (s, code)/(cid) index keys
+        for m in re.finditer(r"SortMergeJoin \[([a-z_]+)#", p):
+            assert m.group(1) == "vec_id", p
+    # centroid cross-join and the residual's centroid join both broadcast
+    assert "BroadcastNestedLoopJoin" in res_plan
+    assert res_plan.count("BroadcastHashJoin") >= 1
+    assert plan.count("BroadcastHashJoin") >= 2
 
 
 def test_filtered_topk_pushes_lang(spark):
@@ -231,142 +242,77 @@ def test_filtered_topk_pushes_lang(spark):
     assert "SortMergeJoin" not in plan
 
 
-#: every registered query that (directly or through a shared _*_cached
-#: helper / a nested registered-query call) registers a _persist_slot —
-#: the completeness of this list is asserted against the slot string
-#: literals in queries.py inside the test below, so adding a persist to
-#: a new query without extending this list fails loudly.
+#: every registered query that (directly, through a shared _*_cached
+#: helper or through a nested registered-query call) reuses a derived
+#: frame within one query, and so materializes it with localCheckpoint()
 PERSISTING_QUERIES = [
-    "doc_ngram_jaccard_pairs",      # shared.doc_shingles
-    "doc_minhash_lsh_pairs",        # .sig
-    "doc_simhash_pairs",            # shared.simhash_fp
-    "doc_simhash_recall",           # shared.simhash_fp
-    "doc_lsh_recall",               # via q_doc_jaccard / q_doc_minhash
-    "doc_minhash_estimate_error",   # shared.doc_shingles, .mh, shared.minhash_cand
-    "doc_dup_triangles",            # shared.minhash_cand
-    "doc_incremental_dedup",        # .newidx, .seenidx
-    "doc_bigram_lm_score",          # .d3, .c2
-    "doc_corpus_card",              # .t
-    "doc_ngram_novelty",            # .g
-    "doc_bloom_membership",         # .tok
-    "doc_source_ngram_jaccard",     # .counts
-    "doc_curation_pipeline_v2",     # .klm
-    "emb_pq_recall",                # shared.emb_qv
-    "emb_ivfpq_recall",             # shared.emb_qv, .res
-    "emb_pq_distortion",            # shared.emb_qv
-    "emb_srp_pairs",                # .fp
-    "ev_retention_cohorts",         # .e, .f
-    "ev_type_cooccurrence",         # .ut
-    "ws_anomaly_mad",               # .rk, .dev
-    "mm_image_neardup",             # .fp
+    "doc_ngram_jaccard_pairs",      # _shingles_cached
+    "doc_minhash_lsh_pairs",        # sig
+    "doc_simhash_pairs",            # _simhash_fp_cached
+    "doc_simhash_recall",           # _simhash_fp_cached
+    "doc_lsh_recall",               # _shingles_cached, sig
+    "doc_minhash_estimate_error",   # _shingles_cached, mh, _minhash_cand
+    "doc_dup_triangles",            # _minhash_cand
+    "doc_incremental_dedup",        # incremental index
+    "doc_bigram_lm_score",          # d3, c2
+    "doc_corpus_card",              # t
+    "doc_bloom_membership",         # tok
+    "doc_source_ngram_jaccard",     # counts
+    "doc_curation_pipeline_v2",     # klm
+    "emb_pq_recall",                # _emb_qv_cached
+    "emb_ivfpq_recall",             # _emb_qv_cached, res
+    "emb_pq_distortion",            # _emb_qv_cached
+    "emb_srp_pairs",                # fp
+    "ev_retention_cohorts",         # e, f
+    "ev_type_cooccurrence",         # ut
+    "ws_anomaly_mad",               # rk, dev
+    "mm_image_neardup",             # fp
 ]
 
 
-def test_persist_slots_do_not_contaminate_other_scans(spark):
-    """_persist_slot must never cache a bare base-table scan or another
-    registered query's exact output plan: Spark's cache manager
-    substitutes a persisted plan into ANY later query whose analyzed
-    plan contains the same canonicalized subtree, so a cached raw
+def test_reused_frames_do_not_contaminate_other_scans(spark):
+    """No query may leave a frame in Spark's cache manager: a cached
+    plan is substituted into ANY later query whose analyzed plan
+    contains the same canonicalized subtree, so a cached raw
     ``load(...)`` silently strips parquet pushdown from every other
-    query reading that table while the slot is live (regression:
-    doc_incremental_dedup's cached documents scan cost emb_filtered_topk
-    its lang pushdown).  Round 14 (VERDICT r13 item 1): build EVERY
-    persisting query, then assert canaries from every family keep their
-    pushdown and are not cache-substituted."""
-    import re
-    from pathlib import Path
-
-    # completeness guard: every slot string literal in queries.py must
-    # be requested by building the queries listed above
-    src = Path(Q.__file__).read_text()
-    declared = set(re.findall(r'_persist_slot\(\s*\n?\s*"([^"]+)"', src))
-    assert declared, "slot literal scan found nothing — regex rotted?"
-
-    seen_slots = set()
-    orig = Q._persist_slot
-
-    def spy(slot, df, level=None):
-        seen_slots.add(slot)
-        return orig(slot, df, level)
-
-    Q._persist_slot = spy
-    try:
-        # build (not execute) every persisting query — persist()
-        # registers the plan with the cache manager immediately,
-        # execution not required
-        for name in PERSISTING_QUERIES:
-            Q.QUERIES[name].fn(spark, SF)
-        assert declared <= seen_slots, (
-            "slots declared in queries.py but never requested by "
-            f"PERSISTING_QUERIES builds: {sorted(declared - seen_slots)} "
-            "— add the owning query to PERSISTING_QUERIES"
-        )
-        # documents scan elsewhere keeps its parquet pushdown
-        plan = plan_of(spark, "emb_filtered_topk")
-        assert "EqualTo(lang,en)" in plan
-        # embeddings scan elsewhere is not substituted by a cache read
-        plan = plan_of(spark, "emb_cosine_topk")
-        assert "InMemoryTableScan" not in plan
-        # events scans elsewhere keep their event_type pushdown and are
-        # not substituted while the ev_* slots are live
-        plan = plan_of(spark, "ev_funnel")
-        assert "event_type" in plan and "PushedFilters" in plan
-        assert "InMemoryTableScan" not in plan
-        # ws_* family: the min1 rollup has ~43 call sites — while
-        # ws_anomaly_mad's slots are live no other ws_* query may read
-        # a cache (regression guard for VERDICT r13 "what's wrong" #1)
-        for canary in ("ws_render_target", "ws_rollup_1m_avg", "ws_ewma"):
-            plan = plan_of(spark, canary)
-            assert "InMemoryTableScan" not in plan, canary
-        # doc family: an un-persisted documents query keeps its scan
-        plan = plan_of(spark, "doc_exact_dup_groups")
-        assert "InMemoryTableScan" not in plan
-        # registered queries whose output plans feed other queries'
-        # persisted frames must NOT be root-substituted while those
-        # slots are live (shared.simhash_fp reorders its projection,
-        # shared.minhash_cand / doc_lsh_recall derive real projections)
-        for canary in ("doc_simhash", "doc_minhash_lsh_pairs",
-                       "doc_ngram_jaccard_pairs"):
-            df = Q.QUERIES[canary].fn(spark, SF)
-            opt = df._jdf.queryExecution().optimizedPlan().toString()
-            assert not opt.startswith("InMemoryRelation"), canary
-    finally:
-        Q._persist_slot = orig
-        Q.release_persist_slots()
-
-
-def test_persist_slot_without_semantic_hash_releases_the_slot():
-    """When the plan has no semantic hash, the slot's earlier occupant
-    (registered under its real hash) is released, not leaked."""
-
-    class Frame:
-        def __init__(self, h):
-            self.h, self.released = h, False
-
-        @property
-        def _jdf(self):
-            if self.h is None:
-                raise RuntimeError("no analyzed plan")
-            plan = type("Plan", (), {"semanticHash": lambda _s: self.h})()
-            qe = type("QE", (), {"analyzed": lambda _s: plan})()
-            return type("JDF", (), {"queryExecution": lambda _s: qe})()
-
-        def persist(self, level=None):
-            return self
-
-        def unpersist(self):
-            self.released = True
-
-    slot = "test.no_semantic_hash"
-    first, second = Frame(12345), Frame(None)
-    try:
-        Q._persist_slot(slot, first)
-        Q._persist_slot(slot, second)
-        assert first.released and not second.released
-        assert [k for k in Q._QUERY_PERSIST_LIVE if k[0] == slot] == [(slot, None)]
-    finally:
-        for k in [k for k in Q._QUERY_PERSIST_LIVE if k[0] == slot]:
-            Q._QUERY_PERSIST_LIVE.pop(k)
+    query reading that table (regression: doc_incremental_dedup's
+    cached documents scan cost emb_filtered_topk its lang pushdown).
+    Build every query that reuses a derived frame — they checkpoint it,
+    which adds no cache entry — then assert canaries from every family
+    keep their pushdown and are not cache-substituted."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    for name in PERSISTING_QUERIES + [
+        "doc_dup_clusters", "emb_semdedup_survivors", "doc_bpe_token_counts",
+    ]:
+        Q.QUERIES[name].fn(spark, SF)
+        assert cache.numCachedEntries() == before, name
+    # documents scan elsewhere keeps its parquet pushdown
+    plan = plan_of(spark, "emb_filtered_topk")
+    assert "EqualTo(lang,en)" in plan
+    # embeddings scan elsewhere is not substituted by a cache read
+    plan = plan_of(spark, "emb_cosine_topk")
+    assert "InMemoryTableScan" not in plan
+    # events scans elsewhere keep their event_type pushdown and are
+    # not substituted by a cache read
+    plan = plan_of(spark, "ev_funnel")
+    assert "event_type" in plan and "PushedFilters" in plan
+    assert "InMemoryTableScan" not in plan
+    # ws_* family: the min1 rollup has ~43 call sites — after
+    # ws_anomaly_mad no other ws_* query may read a cache
+    for canary in ("ws_render_target", "ws_rollup_1m_avg", "ws_ewma"):
+        plan = plan_of(spark, canary)
+        assert "InMemoryTableScan" not in plan, canary
+    # doc family: a documents query keeps its scan
+    plan = plan_of(spark, "doc_exact_dup_groups")
+    assert "InMemoryTableScan" not in plan
+    # registered queries whose output plans feed other queries'
+    # checkpointed frames are never root-substituted by a cache read
+    for canary in ("doc_simhash", "doc_minhash_lsh_pairs",
+                   "doc_ngram_jaccard_pairs"):
+        df = Q.QUERIES[canary].fn(spark, SF)
+        opt = df._jdf.queryExecution().optimizedPlan().toString()
+        assert not opt.startswith("InMemoryRelation"), canary
 
 
 def test_asof_join_single_shuffle_no_join(spark):

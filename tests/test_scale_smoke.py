@@ -267,6 +267,7 @@ def test_stateful_slot_lww_1m_throughput(spark, tmp_path, skewed_points):
     no per-point Python loop)."""
     import time
 
+    from whisper_spark.streaming.replay import replay_to_memory
     from whisper_spark.streaming.rollup import stateful_slot_lww
 
     src_dir = str(tmp_path / "lww_src")
@@ -276,17 +277,9 @@ def test_stateful_slot_lww_1m_throughput(spark, tmp_path, skewed_points):
 
     t0 = time.time()
     out = stateful_slot_lww(stream, step_seconds=60, retention_seconds=90 * 86400)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("lww_1m")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    got = replay_to_memory(out, "lww_1m")
     elapsed = time.time() - t0
 
-    got = spark.table("lww_1m")
     expected = (
         skewed_points.withColumn("slot", F.col("ts") - F.col("ts") % 60)
         .groupBy("metric", "slot")
@@ -313,6 +306,7 @@ def test_chained_recurrence_25k_metrics_breadth(spark, tmp_path):
     the running totals must match the closed form."""
     import time
 
+    from whisper_spark.streaming.replay import replay_to_memory
     from whisper_spark.streaming.rollup import chained_integral
 
     n_metrics, n_slots = 25_000, 20
@@ -337,17 +331,9 @@ def test_chained_recurrence_25k_metrics_breadth(spark, tmp_path):
     out = chained_integral(
         stream, step_seconds=60, method="max", watermark_seconds=60
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("rec_25k")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
+    got = replay_to_memory(out, "rec_25k")
     elapsed = time.time() - t0
 
-    got = spark.table("rec_25k")
     # watermark = base + 19*60 - 60: slots base + k*60, k <= 17 finalize
     n_emit = 18
     assert got.count() == n_metrics * n_emit
@@ -1157,6 +1143,7 @@ def test_composed_stream_10x_state_bounded_and_linear(spark, tmp_path):
     import time as _time
 
     from whisper_spark.streaming.render import render_stream
+    from whisper_spark.streaming.replay import replay
 
     BASE, M = 1_700_000_000, 100
 
@@ -1186,15 +1173,12 @@ def test_composed_stream_10x_state_bounded_and_linear(spark, tmp_path):
             .parquet(root)
         )
         t0 = _time.time()
-        q = (
+        q = replay(
             render_stream(
                 pts, "scale(sumSeries(movingAverage(*, 5)), 2)", outp,
                 step_seconds=60, method="max", watermark_seconds=600,
             )
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(600)
         dt = _time.time() - t0
         max_state = 0
         for p in q.recentProgress:

@@ -26,7 +26,9 @@ these folds instead:
 
 All forms were verified bit-identical across Spark, DuckDB, and a naive
 Python loop on 2000 adversarial irrational doubles spanning 12 orders of
-magnitude (tools/exp_detsum.py).
+magnitude; on the same inputs DuckDB's windowed SUM differed from the
+naive fold on 1841 of 2000 cumulative sums (PERF.md, "decimal(25,6)
+quantization fix").
 """
 
 from __future__ import annotations

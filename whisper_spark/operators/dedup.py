@@ -446,6 +446,57 @@ def embedding_neardup_pairs(
     return j
 
 
+# --------------------------------------------------------------------- #
+# near-dup clusters
+# --------------------------------------------------------------------- #
+
+
+def min_label_components(
+    pairs: DataFrame, a_col: str, b_col: str, id_col: str
+) -> DataFrame:
+    """Connected components of the undirected pair graph ``pairs``
+    (``a_col``, ``b_col``) by min-label propagation: ``(id_col,
+    cluster_id)`` for every id that appears in a pair, where
+    ``cluster_id`` is the smallest id in its component.
+
+    Each round is one distributed join+aggregate; rounds ~ graph
+    diameter (small for dup clusters), at most 64.  The seed labels are
+    the first round's result, min(id, min neighbor id), straight off
+    the edge list.  The edge list, the seed labels and every round's
+    labels are ``localCheckpoint()``-ed: the plan does not grow with
+    rounds, and each frame is computed once however many rounds read
+    it."""
+    edges = pairs.select(a_col, b_col).unionByName(
+        pairs.select(F.col(b_col).alias(a_col), F.col(a_col).alias(b_col))
+    ).localCheckpoint()
+    labels = (
+        edges.groupBy(F.col(a_col).alias(id_col))
+        .agg(F.least(F.col(id_col), F.min(b_col)).alias("cluster_id"))
+        .localCheckpoint()
+    )
+    for _round in range(64):
+        prop = edges.join(
+            labels, edges[a_col] == labels[id_col], "inner"
+        ).select(F.col(b_col).alias(id_col), F.col("cluster_id"))
+        new = (
+            labels.unionByName(prop)
+            .groupBy(id_col)
+            .agg(F.min("cluster_id").alias("cluster_id"))
+            .localCheckpoint()
+        )
+        changed = (
+            new.alias("n")
+            .join(labels.alias("o"), id_col)
+            .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
+            .limit(1)
+            .count()
+        )
+        labels = new
+        if changed == 0:
+            break
+    return labels
+
+
 def simhash_hamming_pairs(
     fingerprints: DataFrame,
     max_hamming: int = 6,
@@ -776,10 +827,8 @@ def incremental_dedup(
     text/id columns as this call — the caller's responsibility, like
     ``bpe_token_counts(vocab=)``).  When given, every reference to that
     side reads the ~100-byte/doc index rows instead of re-deriving
-    hash+bands from the text — so a caller that persists the indexes
-    caches index-proportional bytes, never the corpus text (the
-    round-13 query-layer persist held both full-text modulo sides =
-    100% of the documents table; VERDICT r13 "what's wrong" #3).
+    hash+bands from the text — so a caller that materializes the
+    indexes holds index-proportional bytes, never the corpus text.
     Default path (no index) is unchanged.  Values are identical either
     way: the index computes the exact same md5/band expressions."""
     for idx, need, side in (

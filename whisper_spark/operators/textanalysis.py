@@ -452,15 +452,6 @@ def _bpe_word_freqs(docs: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-#: most recent trained-vocabulary frame still persisted for a pending
-#: train/apply-fused segmentation (see bpe_train_merges(return_vocab=
-#: True)): each new training run releases the previous one, so at most
-#: ONE small vocab table stays cached however many times a bench or
-#: sweep re-runs the query.  This is lifetime bookkeeping, not result
-#: caching — every run recomputes its vocabulary from the input docs.
-_BPE_VOCAB_LIVE: list[DataFrame] = []
-
-
 def bpe_train_merges(
     docs: DataFrame,
     text_col: str = "text",
@@ -470,7 +461,7 @@ def bpe_train_merges(
     """Train ``n_merges`` BPE merges on the corpus; returns
     [(left, right, pair_freq), ...] in learned order — or, with
     ``return_vocab=True``, ``(merges, vocab)`` where ``vocab`` is the
-    persisted (w, freq, seq) table with ALL learned merges applied: the
+    checkpointed (w, freq, seq) table with ALL learned merges applied: the
     training by-product that :func:`bpe_token_counts` can segment with
     directly (train/apply fusion — the apply-side re-fold of the whole
     vocabulary through every merge disappears, because training already
@@ -539,15 +530,13 @@ def bpe_train_merges(
             prev.unpersist()
         words.unpersist()
         return merges
-    # materialize the final fold off its (still-cached) parent, then
-    # release the parent; bound the leak to one live vocab per session
-    words.count()
+    # checkpoint the final fold off its (still-cached) parent, then
+    # release both: the vocab's blocks go when the caller drops it
+    vocab = words.localCheckpoint()
     if prev is not None:
         prev.unpersist()
-    while _BPE_VOCAB_LIVE:
-        _BPE_VOCAB_LIVE.pop().unpersist()
-    _BPE_VOCAB_LIVE.append(words)
-    return merges, words
+    words.unpersist()
+    return merges, vocab
 
 
 def bpe_train(

@@ -68,6 +68,15 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def _spread(df: DataFrame) -> DataFrame:
+    """``df`` over at least one partition per core.  A small table can be
+    a single parquet split (sf0.1 documents and embeddings are), and a
+    frame checkpointed from it runs every stage that reads it as one
+    task.  An input with enough splits keeps its own partitioning."""
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    return df if df.rdd.getNumPartitions() >= cores else df.repartition(cores)
+
+
 def sec(df: DataFrame, col: str) -> F.Column:
     """Epoch-seconds column regardless of how the parquet timestamp was
     read: TIMESTAMP(NANOS) as LongType (nanos), TIMESTAMP_NTZ, or
@@ -2066,35 +2075,20 @@ def _shingles(spark, sf_dir) -> DataFrame:
 
 
 def _shingles_cached(spark, sf_dir) -> DataFrame:
-    """Exploded 5-gram shingle frame, persisted within-run under ONE
-    shared slot.  ``q_doc_jaccard`` and ``q_doc_minhash_estimate_error``
-    each reference it several times, and their two round-13 per-query
-    slots held the SAME canonical plan — one CacheManager entry aliased
-    by two slot names, where either slot's release dropped the cache out
-    from under the other (ADVICE r13).  ``_persist_slot``'s semantic-hash
-    keying now prevents that aliasing mechanically; this shared helper
-    additionally makes the one-slot intent explicit at the call sites.
-    The frame is fenced to doc_id < 200 (inside ``_shingles``), so the
-    cache is bounded regardless of corpus size."""
-    return _persist_slot("shared.doc_shingles", _shingles(spark, sf_dir))
+    """Exploded 5-gram shingle frame, checkpointed so its several
+    references in ``q_doc_jaccard`` and ``q_doc_minhash_estimate_error``
+    scan and explode the corpus once.  The frame is fenced to
+    doc_id < 200 (inside ``_shingles``), so it is bounded regardless of
+    corpus size."""
+    return _shingles(spark, sf_dir).localCheckpoint()
 
 
 def _simhash_fp_cached(spark, sf_dir) -> DataFrame:
-    """60-bit SimHash fingerprint frame ``(simhash, doc_id)``, persisted
-    within-run under ONE shared slot for the two consumers that fan it
-    out (``doc_simhash_pairs`` re-reads it 4x through the band+verify
-    joins, ``doc_simhash_recall`` 6x).  The column REORDER is load-
-    bearing: ``doc_simhash`` is itself a registered query, and a live
-    cache of its exact output plan would be substituted into that
-    query's ROOT whenever it is built in the same session (the
-    no-shared-plan rule, VERDICT r13 "what's wrong" #2).  Reordering the
-    projection makes the cached plan canonically distinct from the
-    registered query while carrying identical rows; every consumer
-    selects columns by name."""
-    return _persist_slot(
-        "shared.simhash_fp",
-        q_doc_simhash(spark, sf_dir).select("simhash", "doc_id"),
-    )
+    """60-bit SimHash fingerprint frame ``(doc_id, simhash)``,
+    checkpointed for the two consumers that fan it out
+    (``doc_simhash_pairs`` re-reads it 4x through the band+verify joins,
+    ``doc_simhash_recall`` 6x)."""
+    return q_doc_simhash(spark, sf_dir).localCheckpoint()
 
 
 @_q(
@@ -2121,9 +2115,12 @@ WHERE n_common * 1.0 / (sa.n + sb.n - n_common) >= 0.5
 )
 def q_doc_jaccard(spark, sf_dir):
     # the shingle explode feeds three subtrees (both self-join sides +
-    # the per-doc sizes): persist within-run so the scan+explode runs
-    # once (round-13; released on the query's next call)
-    sh = _shingles_cached(spark, sf_dir)
+    # the per-doc sizes): checkpoint it so the scan+explode runs once
+    return _jaccard_pairs(_shingles_cached(spark, sf_dir))
+
+
+def _jaccard_pairs(sh: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_common, jaccard) for shingle-Jaccard >= 0.5."""
     sz = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -2175,14 +2172,23 @@ GROUP BY a.doc_id, b.doc_id
     "of 4, candidate pairs share a band bucket",
 )
 def q_doc_minhash(spark, sf_dir):
-    sh = _shingles(spark, sf_dir)
-    ks = spark.range(8).select(F.col("id").cast("int").alias("k"))
-    mh = (
+    return _minhash_band_pairs(_minhash_hashes(_shingles(spark, sf_dir)))
+
+
+def _minhash_hashes(sh: DataFrame) -> DataFrame:
+    """(doc_id, k, h): the 8 seeded minhashes of each doc's shingles."""
+    ks = sh.sparkSession.range(8).select(F.col("id").cast("int").alias("k"))
+    return (
         sh.crossJoin(F.broadcast(ks))
         .select("doc_id", "k", _h60(F.concat_ws("#", "g", "k")).alias("hh"))
         .groupBy("doc_id", "k")
         .agg(F.min("hh").alias("h"))
     )
+
+
+def _minhash_band_pairs(mh: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_shared_bands) for docs sharing a bucket in one of
+    the 2 bands of 4 minhashes of ``mh``."""
 
     def band(lo, hi):
         parts = []
@@ -2191,14 +2197,12 @@ def q_doc_minhash(spark, sf_dir):
         return F.md5(F.concat_ws(",", *parts))
 
     # the two union branches below AND both self-join sides re-derive
-    # the per-doc signature frame — without the persist the shingle
-    # explode + 8-seed minhash pipeline ran 4x.  Persist sig (one row
-    # per doc), not the union: a cached union would still evaluate sig
-    # twice while building the cache (round-13; within-run only)
-    sig = _persist_slot(
-        "doc_minhash_lsh_pairs.sig",
-        mh.groupBy("doc_id").agg(band(0, 4).alias("band0"), band(4, 8).alias("band1")),
-    )
+    # the per-doc signature frame — without the checkpoint the shingle
+    # explode + 8-seed minhash pipeline ran 4x.  Checkpoint sig (one row
+    # per doc), not the union: the union would still evaluate sig twice
+    sig = mh.groupBy("doc_id").agg(
+        band(0, 4).alias("band0"), band(4, 8).alias("band1")
+    ).localCheckpoint()
     bands = sig.select("doc_id", F.lit(0).alias("band_id"), F.col("band0").alias("sig")).unionByName(
         sig.select("doc_id", F.lit(1).alias("band_id"), F.col("band1").alias("sig"))
     )
@@ -2215,20 +2219,16 @@ def q_doc_minhash(spark, sf_dir):
     )
 
 
-def _minhash_cand_cached(spark, sf_dir) -> DataFrame:
-    """Distinct MinHash-LSH candidate pairs ``(doc_a, doc_b)``, persisted
-    within-run under ONE shared slot.  ``doc_minhash_estimate_error``
-    (two joins) and ``doc_dup_triangles`` (all three triangle sides,
-    via a rename on top) both need the frame several times, and their
-    round-13 per-query slots persisted canonically identical plans —
-    aliasing one CacheManager entry under two slot names (ADVICE r13).
-    The ``.distinct()`` projection is a real derivation of the
-    registered ``doc_minhash_lsh_pairs`` query (its root aggregate is
-    NOT this plan), so a live slot is never substituted into that
-    query's own plan."""
-    return _persist_slot(
-        "shared.minhash_cand",
-        q_doc_minhash(spark, sf_dir).select("doc_a", "doc_b").distinct(),
+def _minhash_cand(mh: DataFrame) -> DataFrame:
+    """Distinct MinHash-LSH candidate pairs ``(doc_a, doc_b)`` of the
+    minhash frame ``mh``, checkpointed: ``doc_minhash_estimate_error``
+    (two joins) and ``doc_dup_triangles`` (all three triangle sides, via
+    a rename on top) both read the frame several times."""
+    return (
+        _minhash_band_pairs(mh)
+        .select("doc_a", "doc_b")
+        .distinct()
+        .localCheckpoint()
     )
 
 
@@ -2323,10 +2323,7 @@ def q_doc_simhash_pairs(spark, sf_dir):
 
     # the fingerprint pipeline (tokenize -> 60 per-bit votes -> fold)
     # feeds both banded self-join sides AND both verify sides — without
-    # the persist the plan re-ran it 4x (round-13; within-run only).
-    # Round 14: the persisted frame is the shared column-reordered
-    # projection, never the registered doc_simhash query's exact output
-    # plan (see _simhash_fp_cached)
+    # the checkpoint the plan re-ran it 4x
     fp = _simhash_fp_cached(spark, sf_dir)
     # collapse_identical=False: the oracle SQL pins the full banded
     # clique on this bounded 200-doc slice; the mega-bucket guard stays
@@ -2380,43 +2377,10 @@ FROM reach GROUP BY src
     "recursive-CTE transitive closure in DuckDB",
 )
 def q_doc_dup_clusters(spark, sf_dir):
+    from .operators.dedup import min_label_components
+
     pairs = q_doc_minhash(spark, sf_dir).select("doc_a", "doc_b").distinct()
-    edges = pairs.unionByName(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).persist()
-    labels = (
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("doc_id"))
-        .persist()
-    )
-    # min-label propagation to a fixed point.  Each round is one
-    # distributed join+aggregate; rounds ~ graph diameter (small for dup
-    # clusters).  localCheckpoint truncates lineage so the plan does not
-    # grow with rounds (the iterative-algorithm pattern at scale).
-    for _round in range(64):
-        prop = edges.join(
-            labels, edges["doc_a"] == labels["doc_id"], "inner"
-        ).select(F.col("doc_b").alias("doc_id"), F.col("cluster_id"))
-        new = (
-            labels.unionByName(prop)
-            .groupBy("doc_id")
-            .agg(F.min("cluster_id").alias("cluster_id"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .limit(1)
-            .count()
-        )
-        labels.unpersist()
-        labels = new
-        if changed == 0:
-            break
-    edges.unpersist()
-    return labels
+    return min_label_components(pairs, "doc_a", "doc_b", "doc_id")
 
 
 @_q(
@@ -3586,94 +3550,6 @@ def q_mm_decode_mjpeg_frames(spark, sf_dir):
 _MM_TP_PAYLOADS: dict = {}  # (applicationId, sf_dir) -> persisted DF
 
 
-#: registry of WITHIN-RUN persisted intermediates (round-13
-#: optimization; keying reworked round-14): a query that self-joins a
-#: derived frame several times persists it so one run computes it once —
-#: but the query fn returns a lazy DataFrame, so there is no
-#: post-execution hook to unpersist.  Registering the frame bounds the
-#: leak: the NEXT call of the same query releases the previous run's
-#: frame.  This is lifetime bookkeeping, not result reuse — every run
-#: re-persists from the parquet inputs (contrast _MM_TP_PAYLOADS, which
-#: deliberately caches the synthesized bench FIXTURE across reps).
-#: Keys are ``(slot, semantic_hash_of_analyzed_plan)``; see
-#: ``_persist_slot`` for the three lifetime rules that keying encodes.
-_QUERY_PERSIST_LIVE: dict[tuple, object] = {}
-
-
-def release_persist_slots() -> int:
-    """Release every live within-run persisted intermediate.
-
-    Call at sweep/bench/session boundaries (or from library code after
-    the last returned DataFrame of a query run has been consumed): the
-    slot registry bounds each slot's lifetime to "until the owning
-    query's next call", but after the LAST call of a sweep the final
-    occupants stay cached until process exit.  Returns the number of
-    frames released.  Held DataFrames from earlier calls recompute
-    their lineage from parquet afterwards — results are unaffected."""
-    n = 0
-    for key in list(_QUERY_PERSIST_LIVE):
-        df = _QUERY_PERSIST_LIVE.pop(key)
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
-
-
-def _persist_slot(slot: str, df: DataFrame, level=None) -> DataFrame:
-    """persist() ``df`` and register it under ``slot``; release any
-    previous occupant that would share its CacheManager entry.
-
-    RULE 1 (round-13): never pass a bare base-table ``load(...)`` scan.
-    Spark's cache manager matches on canonicalized plan subtrees, so a
-    cached bare scan is silently substituted (as an InMemoryRelation,
-    with no parquet pushdown and cache-derived stats) into EVERY later
-    query that reads the same table while the slot is live — cross-query
-    plan contamination.  Persist a frame whose plan is unique to the
-    calling query (a derived projection/aggregate, or at minimum a
-    query-specific filter).
-
-    RULE 2 (round-14): one slot per canonical plan, enforced here
-    mechanically.  The CacheManager keeps ONE entry per canonical plan,
-    so two slots holding semantically-equal frames would alias one
-    entry and either slot's release would drop the cache out from under
-    the other (ADVICE r13).  Before persisting, any live entry with the
-    same analyzed-plan ``semanticHash`` — under ANY slot name — is
-    released and the registration moves to the requesting slot.  The
-    requester re-persists a FRESH frame, so a query run never reads
-    data another query materialized (no cross-query result reuse).
-
-    RULE 3 (round-14, ADVICE r13): the registry key includes the
-    semantic hash, so building the same query at a DIFFERENT sf_dir (a
-    different plan, hence different hash) does not release the frame
-    backing a previously returned, still-held DataFrame from the other
-    scale factor.  ``release_persist_slots()`` is the explicit escape
-    hatch that bounds the resulting per-sf_dir retention.
-
-    ``level``: optional ``StorageLevel`` for corpus-sized frames where
-    the default (MEMORY_AND_DISK_DESER) would hold deserialized rows.
-
-    ``tests/test_plan_properties.py::
-    test_persist_slots_do_not_contaminate_other_scans`` pins rule 1;
-    ``tools/audit_persist_slots.py`` audits rules 1-2 mechanically over
-    the whole registry."""
-    try:
-        h = df._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:  # pragma: no cover - plan analysis never fails in practice
-        h = None
-    # without a hash, release every occupant of the slot (whatever its hash)
-    for key in [k for k in _QUERY_PERSIST_LIVE if (k[1] == h if h is not None else k[0] == slot)]:
-        old = _QUERY_PERSIST_LIVE.pop(key)
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-    out = df.persist(level) if level is not None else df.persist()
-    _QUERY_PERSIST_LIVE[(slot, h)] = out
-    return out
-
-
 def _mm_tp_media(spark, sf_dir):
     """Synthesized (media_id, jpeg_payload, flac_payload) frame for
     the throughput gate, persisted ONCE per session: the gate times
@@ -4578,14 +4454,9 @@ def q_mm_image_neardup(spark, sf_dir):
     from .operators.multimodal import image_ahash_fingerprints, image_neardup_pairs
 
     # the ahash fingerprint is a Python pixel-decode mapInPandas stage,
-    # and the banded plan referenced it from TEN subtrees (the worst
-    # Python-node multiplicity in the round-13 audit) — persist the
-    # ~16-byte/image fingerprint frame so the corpus decodes once
-    # (within-run only, released on the query's next call)
-    fp = _persist_slot(
-        "mm_image_neardup.fp",
-        image_ahash_fingerprints(_bmp_media_df(spark, sf_dir)),
-    )
+    # and the banded plan referenced it from TEN subtrees — checkpoint
+    # the ~16-byte/image fingerprint frame so the corpus decodes once
+    fp = image_ahash_fingerprints(_bmp_media_df(spark, sf_dir)).localCheckpoint()
     return image_neardup_pairs(
         _bmp_media_df(spark, sf_dir), max_hamming=24,
         collapse_identical=False, fingerprints=fp)
@@ -6321,21 +6192,13 @@ def q_ev_funnel(spark, sf_dir):
 
 
 def _emb_qv_cached(spark, sf_dir) -> DataFrame:
-    """Integer-quantized embeddings corpus, persisted within-run under
-    ONE shared slot: emb_pq_recall, emb_ivfpq_recall and
-    emb_pq_distortion all fan the identical ``int_quantize(embeddings)``
-    frame into 5-7 subtrees, and their three round-13 per-query slots
-    held the SAME canonical plan — one CacheManager entry aliased by
-    three slot names, where any slot's release dropped the cache out
-    from under the others (ADVICE r13).  ``_persist_slot``'s semantic-
-    hash keying prevents the aliasing mechanically; the shared helper
-    makes the one-slot rule explicit.  The frame is (vec_id, q) — the
-    64-long quantized vector, never raw text/payloads."""
+    """Integer-quantized embeddings corpus, checkpointed: emb_pq_recall,
+    emb_ivfpq_recall and emb_pq_distortion all fan the
+    ``int_quantize(embeddings)`` frame into 5-7 subtrees.  The frame is
+    (vec_id, q) — the 64-long quantized vector, never raw text."""
     from .operators.similarity import int_quantize
 
-    return _persist_slot(
-        "shared.emb_qv", int_quantize(load(spark, sf_dir, "embeddings"))
-    )
+    return int_quantize(_spread(load(spark, sf_dir, "embeddings"))).localCheckpoint()
 
 
 @_q(
@@ -6454,10 +6317,9 @@ def q_emb_pq_recall(spark, sf_dir):
 
     # the quantized corpus feeds SEVEN subtrees of one DAG (codebook
     # seeds, two encode passes, the train join, the ADC codes side, the
-    # re-rank corpus side, the exact scan) — without a persist each
+    # re-rank corpus side, the exact scan) — without a checkpoint each
     # subtree re-scans the parquet and re-folds the quantization
-    # (Catalyst does not deduplicate common subtrees).  Persisted
-    # within-run under the shared slot (_emb_qv_cached).
+    # (Catalyst does not deduplicate common subtrees)
     qv = _emb_qv_cached(spark, sf_dir)
     # one dimensionality discovery for both stages (was one collect job
     # in pq_codebook plus another in pq_train_round)
@@ -6630,12 +6492,11 @@ def q_emb_ivfpq_recall(spark, sf_dir):
         pq_encode,
     )
 
-    # same within-run persist shape as emb_pq_recall: qv feeds five
-    # subtrees and the residual assignment (itself a crossJoin + two
-    # joins) feeds three — persist both, released on the next call
-    # (qv under the shared slot, see _emb_qv_cached)
+    # same shape as emb_pq_recall: qv feeds five subtrees and the
+    # residual assignment (itself a crossJoin + two joins) feeds three
+    # — checkpoint both
     qv = _emb_qv_cached(spark, sf_dir)
-    res = _persist_slot("emb_ivfpq_recall.res", ivf_residual_assign(qv, n_coarse=4))
+    res = ivf_residual_assign(qv, n_coarse=4).localCheckpoint()
     cbres = pq_codebook(res, n_sub=8, n_codes=16, q_col="r")
     enc = pq_encode(res, cbres, q_col="r")
 
@@ -8184,35 +8045,28 @@ def q_ws_anomaly_mad(spark, sf_dir):
 
     # the per-minute rollup feeds the median rank, the deviation frame
     # and (through dev below) the final join — 3 scan+rollup
-    # evaluations without a persist; dev likewise feeds both the MAD
-    # rank and the output join.  Persist the RANKED frame, not min1
-    # itself: min1 has ~43 call sites across the ws_* family, so a live
-    # cache of its plan would be substituted into every other ws_*
-    # query built in the same session (VERDICT r13 "what's wrong" #1 —
-    # the no-shared-plan rule).  rk's window projection is unique to
-    # this query, carries the same rows (plus the two rank columns),
-    # and still collapses the rollup to ONE evaluation: med filters rk,
+    # evaluations without a checkpoint; dev likewise feeds both the MAD
+    # rank and the output join.  Checkpointing the RANKED frame collapses
+    # the rollup and its rank window to ONE evaluation: med filters rk,
     # and dev re-projects rk's base columns.  Both frames are minutes x
-    # metrics — tiny at any scale (within-run only)
+    # metrics — tiny at any scale
     w = Window.partitionBy("metric")
-    rk = _persist_slot(
-        "ws_anomaly_mad.rk",
-        min1(spark, sf_dir).select(
-            "metric", "ts", "avg_v",
-            F.row_number().over(w.orderBy("avg_v", "ts")).alias("rn"),
-            F.count("*").over(w).alias("n"),
-        ),
-    )
+    rk = min1(spark, sf_dir).select(
+        "metric", "ts", "avg_v",
+        F.row_number().over(w.orderBy("avg_v", "ts")).alias("rn"),
+        F.count("*").over(w).alias("n"),
+    ).localCheckpoint()
     med = rk.filter(F.expr("rn = (n + 1) div 2")).select(
         "metric", F.col("avg_v").alias("med")
     )
-    dev = _persist_slot(
-        "ws_anomaly_mad.dev",
+    dev = (
         rk.select("metric", "ts", "avg_v")
-        .join(F.broadcast(med), "metric").select(
+        .join(F.broadcast(med), "metric")
+        .select(
             "metric", "ts", "avg_v", "med",
             F.abs(F.col("avg_v") - F.col("med")).alias("ad"),
-        ),
+        )
+        .localCheckpoint()
     )
     drk = dev.select(
         "metric", "ts", "avg_v", "med", "ad",
@@ -8609,12 +8463,13 @@ def q_doc_bloom_membership(spark, sf_dir):
     ).alias("t")
     # tok (the seen side's distinct (source, token)) feeds BOTH the
     # bloom-word build and the truth side of the verification join —
-    # without a persist each run scans + explodes + distincts the
-    # %20-side twice.  The modulo-filtered distinct plan is unique to
-    # this query (round-13; within-run only — see _persist_slot).
-    tok = _persist_slot(
-        "doc_bloom_membership.tok",
-        d.filter(F.col("doc_id") % 20 != 0).select("source", toks).distinct(),
+    # without a checkpoint each run scans + explodes + distincts the
+    # %20-side twice
+    tok = (
+        d.filter(F.col("doc_id") % 20 != 0)
+        .select("source", toks)
+        .distinct()
+        .localCheckpoint()
     )
     bits = tok.select(
         "source", "t",
@@ -8755,22 +8610,15 @@ FROM (SELECT count(*) AS n_exact FROM exact) e,
     "recall of the bucketing that replaces the quadratic scan at scale",
 )
 def q_doc_lsh_recall(spark, sf_dir):
-    # Round 13 persisted both inputs (each fed two aggregates); round 14
-    # removes the persists entirely — they held projections of OTHER
-    # registered queries' output plans (doc_ngram_jaccard_pairs /
-    # doc_minhash_lsh_pairs), cross-query cache coupling flagged by
-    # VERDICT r13 "what's wrong" #2.  Instead, ONE full-outer join on
-    # the pair key computes all three counts in a single pass: both
-    # pair sets are unique on (doc_a, doc_b), so count(_e) = |exact|,
-    # count(_c) = |cand|, and count(_e AND _c) = |intersection| — each
-    # expensive pipeline is now evaluated exactly once, with no cache.
-    exact = (
-        q_doc_jaccard(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .withColumn("_e", F.lit(1))
-    )
+    # ONE full-outer join on the pair key computes all three counts in
+    # a single pass: both pair sets are unique on (doc_a, doc_b), so
+    # count(_e) = |exact|, count(_c) = |cand|, and count(_e AND _c) =
+    # |intersection| — each expensive pipeline is evaluated exactly
+    # once.  Both pipelines start from one checkpointed shingle frame.
+    sh = _shingles_cached(spark, sf_dir)
+    exact = _jaccard_pairs(sh).select("doc_a", "doc_b").withColumn("_e", F.lit(1))
     cand = (
-        q_doc_minhash(spark, sf_dir)
+        _minhash_band_pairs(_minhash_hashes(sh))
         .select("doc_a", "doc_b")
         .distinct()
         .withColumn("_c", F.lit(1))
@@ -8901,20 +8749,12 @@ def q_ev_retention_cohorts(spark, sf_dir):
     ev = load(spark, sf_dir, "events")
     # e (distinct user-weeks) feeds the cohort aggregate AND the grid
     # join side; f (first week per user) feeds the cohort sizes AND the
-    # grid join — without persists each run scans events and re-runs
-    # the distinct shuffle 3x.  Both plans are unique to this query
-    # (week-granularity distinct; round-13, within-run only — see
-    # _persist_slot).
-    e = _persist_slot(
-        "ev_retention_cohorts.e",
-        ev.select(
-            "user_id", (sec(ev, "ts") / 604800).cast("long").alias("wk")
-        ).distinct(),
-    )
-    f = _persist_slot(
-        "ev_retention_cohorts.f",
-        e.groupBy("user_id").agg(F.min("wk").alias("cohort")),
-    )
+    # grid join — without checkpoints each run scans events and re-runs
+    # the distinct shuffle 3x
+    e = ev.select(
+        "user_id", (sec(ev, "ts") / 604800).cast("long").alias("wk")
+    ).distinct().localCheckpoint()
+    f = e.groupBy("user_id").agg(F.min("wk").alias("cohort")).localCheckpoint()
     cs = f.groupBy("cohort").agg(F.count("*").alias("n_cohort"))
     grid = (
         e.join(f, "user_id")
@@ -9013,14 +8853,11 @@ def q_doc_source_ngram_jaccard(spark, sf_dir):
     # the pair-count aggregate sits on top of the heavy subtree (gram
     # explode + md5-60 + collect_set + pair explode) and feeds BOTH
     # broadcast diagonals and the off-diagonal output — without a
-    # persist that subtree evaluates up to three times in one run
-    # (round-13; released on the query's next call)
-    counts = _persist_slot(
-        "doc_source_ngram_jaccard.counts",
-        pairs.groupBy(
-            F.col("p.a").alias("src_a"), F.col("p.b").alias("src_b")
-        )
-        .agg(F.count("*").alias("n_inter")),
+    # checkpoint that subtree evaluates up to three times in one run
+    counts = (
+        pairs.groupBy(F.col("p.a").alias("src_a"), F.col("p.b").alias("src_b"))
+        .agg(F.count("*").alias("n_inter"))
+        .localCheckpoint()
     )
     diag = counts.filter(F.col("src_a") == F.col("src_b")).select(
         F.col("src_a").alias("s"), F.col("n_inter").alias("n")
@@ -9373,9 +9210,8 @@ FROM tri
 )
 def q_doc_dup_triangles(spark, sf_dir):
     # the candidate edge list feeds all three sides of the triangle
-    # join — persist within-run so the LSH banding pipeline runs once
-    # (shared slot + rename on top, see _minhash_cand_cached)
-    e = _minhash_cand_cached(spark, sf_dir).select(
+    # join — checkpointed so the LSH banding pipeline runs once
+    e = _minhash_cand(_minhash_hashes(_shingles(spark, sf_dir))).select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     )
     e1 = e.alias("e1")
@@ -9458,34 +9294,32 @@ FROM per_doc
     "word-3-gram is credited to its FIRST document (min doc_id), and a "
     "document's novelty is the fraction of its grams it introduced — "
     "the curriculum/dataset-ordering diagnostic (a low-novelty tail is "
-    "redundant data).  One gram groupBy + one gram-keyed join, both "
-    "partial-aggregated; no per-prefix rescans",
+    "redundant data).  One gram-partitioned min window + one per-doc "
+    "aggregate over a single gram explode; no per-prefix rescans",
 )
 def q_doc_ngram_novelty(spark, sf_dir):
+    from pyspark.sql import Window
+
     from .functions.hashing import word_ngrams_expr
 
     d = load(spark, sf_dir, "documents")
     # let-binding form — binds the split once per row, not per gram
     grams = word_ngrams_expr("text", 3)
-    # g (per-doc distinct gram explode) feeds the first-doc aggregate
-    # AND the join-back side — without a persist each run re-scans the
-    # corpus and re-explodes the grams twice.  The (doc_id, raw-gram)
-    # distinct plan is unique to this query (doc_source_ngram_jaccard
-    # explodes by SOURCE and hashes; round-13, within-run only — see
-    # _persist_slot).
-    g = _persist_slot(
-        "doc_ngram_novelty.g",
-        d.select("doc_id", F.explode(grams).alias("gram")).distinct(),
+    # a gram is novel in the doc holding its smallest doc_id: one window
+    # over the per-doc distinct grams, so the explode runs once with no
+    # join back (documents can be a single split, see _spread)
+    g = (
+        _spread(d.select("doc_id", "text"))
+        .select("doc_id", F.explode(grams).alias("gram"))
+        .distinct()
     )
-    firsts = g.groupBy("gram").agg(F.min("doc_id").alias("first_doc"))
+    first = F.min("doc_id").over(Window.partitionBy("gram")) == F.col("doc_id")
     per_doc = (
-        g.join(firsts, "gram")
+        g.select("doc_id", first.alias("first"))
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_grams"),
-            F.sum(
-                F.when(F.col("first_doc") == F.col("doc_id"), 1).otherwise(0)
-            ).alias("n_novel"),
+            F.sum(F.when(F.col("first"), 1).otherwise(0)).alias("n_novel"),
         )
     )
     return per_doc.select(
@@ -9518,17 +9352,13 @@ GROUP BY a.event_type, b.event_type
 def q_ev_type_cooccurrence(spark, sf_dir):
     ev = load(spark, sf_dir, "events")
     # ut (distinct user-hour-type) is BOTH sides of the self-join —
-    # without a persist each run scans events and pays the distinct
-    # shuffle twice.  The hour-granularity distinct plan is unique to
-    # this query (round-13; within-run only — see _persist_slot).
-    ut = _persist_slot(
-        "ev_type_cooccurrence.ut",
-        ev.select(
-            "user_id",
-            (sec(ev, "ts") / 3600).cast("long").alias("hr"),
-            "event_type",
-        ).distinct(),
-    )
+    # without a checkpoint each run scans events and pays the distinct
+    # shuffle twice
+    ut = ev.select(
+        "user_id",
+        (sec(ev, "ts") / 3600).cast("long").alias("hr"),
+        "event_type",
+    ).distinct().localCheckpoint()
     a = ut.alias("a")
     b = ut.alias("b")
     return (
@@ -10171,15 +10001,11 @@ FROM (SELECT count(*) AS n_truth FROM truth) t,
         from .operators.dedup import simhash_hamming_pairs
 
         # the fingerprint frame feeds the banded path AND both truth
-        # sides — without the persist this query's DAG re-evaluated the
-        # simhash fold ~6x (82 Exchange nodes, the worst repeated-
-        # subtree plan in the registry's round-13 audit).  Round 14:
-        # truth/ver are no longer persisted — ONE full-outer join on
-        # the pair key computes all three counts in a single pass
-        # (both pair sets are unique on (id_a, id_b)), so each pipeline
-        # is evaluated exactly once with no cache; the fingerprint
-        # persist is the shared reordered projection, never the
-        # registered doc_simhash query's exact output plan.
+        # sides — without the checkpoint this query's DAG re-evaluated
+        # the simhash fold ~6x.  truth/ver are not materialized: ONE
+        # full-outer join on the pair key computes all three counts in
+        # a single pass (both pair sets are unique on (id_a, id_b)), so
+        # each pipeline is evaluated exactly once.
         fp = _simhash_fp_cached(spark, sf_dir)
         # collapse_identical=False: oracle pins the unguarded clique
         ver = (
@@ -10886,20 +10712,12 @@ def q_emb_srp_pairs(spark, sf_dir):
 
     # the corpus fed TWELVE plan subtrees (both banded SRP sides inside
     # srp_candidate_pairs + four verify joins, each re-projecting), and
-    # the cosine denominator carried two extra norm joins.  Persist the
-    # shared SRP FINGERPRINT frame — not the raw corpus scan: Spark's
-    # cache manager substitutes a persisted plan into ANY later query
-    # whose analyzed plan contains the same subtree, so caching a bare
-    # base-table scan leaks into unrelated embeddings queries
-    # (cross-query plan contamination).  The 48-bit fingerprint
-    # projection is unique to this query AND is the subtree both banded
-    # sides actually repeat; norms come from the already-joined
-    # embedding columns (same _sqnorm doubles, bit-identical)
-    # (round-13; within-run only — see _persist_slot)
+    # the cosine denominator carried two extra norm joins.  Checkpoint
+    # the SRP FINGERPRINT frame — the subtree both banded sides
+    # actually repeat; norms come from the already-joined embedding
+    # columns (same _sqnorm doubles, bit-identical)
     emb = load(spark, sf_dir, "embeddings")
-    fp = _persist_slot(
-        "emb_srp_pairs.fp", srp_fingerprints(emb, bits=48)
-    )
+    fp = srp_fingerprints(emb, bits=48).localCheckpoint()
     # collapse_identical=False: oracle pins the unguarded banded clique
     # (48-bit fps on this table collide rarely anyway)
     cand = simhash_candidates(fp, id_col="vec_id", bits=48, bands=4,
@@ -12254,43 +12072,13 @@ FROM embeddings v LEFT JOIN lab l ON v.vec_id = l.vec_id
     "with a recursive-CTE transitive closure",
 )
 def q_emb_semdedup_survivors(spark, sf_dir):
-    from .operators.dedup import embedding_neardup_pairs
+    from .operators.dedup import embedding_neardup_pairs, min_label_components
 
     emb = load(spark, sf_dir, "embeddings")
     pairs = embedding_neardup_pairs(emb, threshold=0.4, n_buckets=16).select(
         "id_a", "id_b"
     )
-    edges = pairs.unionByName(
-        pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
-    ).persist()
-    labels = (
-        edges.select(F.col("id_a").alias("vec_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("vec_id"))
-        .persist()
-    )
-    for _round in range(64):
-        prop = edges.join(
-            labels, edges["id_a"] == labels["vec_id"], "inner"
-        ).select(F.col("id_b").alias("vec_id"), F.col("cluster_id"))
-        new = (
-            labels.unionByName(prop)
-            .groupBy("vec_id")
-            .agg(F.min("cluster_id").alias("cluster_id"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new.alias("n")
-            .join(labels.alias("o"), "vec_id")
-            .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .limit(1)
-            .count()
-        )
-        labels.unpersist()
-        labels = new
-        if changed == 0:
-            break
-    edges.unpersist()
+    labels = min_label_components(pairs, "id_a", "id_b", "vec_id")
     lab = labels.select(
         F.col("vec_id").alias("_lid"), F.col("cluster_id").alias("_cl")
     )
@@ -12399,34 +12187,20 @@ def q_doc_incremental_dedup(spark, sf_dir):
 
     # incremental_dedup references the new batch 3x (band explode,
     # exact-hash side, output id list) and the seen corpus 2x (hash
-    # index, band index) — five documents scans per run without a
-    # persist; the modulo split can't prune parquet anyway.  Round 13
-    # persisted the two full-width modulo sides — together 100% of the
-    # documents table INCLUDING text, a corpus-sized cache at scale
-    # (VERDICT r13 "what's wrong" #3).  Round 14 persists the one-pass
-    # incremental_index frames instead: (doc_id?, _h, _bands) is ~100
-    # bytes/doc — the md5 hash plus the band array, exactly the
-    # incremental indexes the operator docstring says production
-    # persists — so the cache is index-proportional and each side's
-    # text is scanned ONCE (computing hash+bands together) instead of
-    # being cached whole.  The %3-filtered index plans stay unique to
-    # this query (no bare base-table scan is ever persisted — see
-    # _persist_slot rule 1), and the projection narrows to (doc_id,
-    # text) before hashing so the cache materialization scan prunes to
-    # the two columns the dedup reads.
-    d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    new_side = d.filter(F.col("doc_id") % 3 == 0)
-    seen_side = d.filter(F.col("doc_id") % 3 != 0)
+    # index, band index) — five documents scans per run without the
+    # index.  ONE incremental_index pass over the whole table computes
+    # (doc_id, _h, _bands) — ~100 bytes/doc, index-proportional, never
+    # the text — and is checkpointed once; the modulo split happens on
+    # the checkpoint (it could not prune the parquet scan anyway).  The
+    # narrow (doc_id, text) projection is spread first (see _spread).
+    d = _spread(load(spark, sf_dir, "documents").select("doc_id", "text"))
+    index = incremental_index(d).localCheckpoint()
+    is_new = F.col("doc_id") % 3 == 0
     return incremental_dedup(
-        new_side,
-        seen_side,
-        new_index=_persist_slot(
-            "doc_incremental_dedup.newidx", incremental_index(new_side)
-        ),
-        seen_index=_persist_slot(
-            "doc_incremental_dedup.seenidx",
-            incremental_index(seen_side, id_col=None),
-        ),
+        d.filter(is_new),
+        d.filter(~is_new),
+        new_index=index.filter(is_new),
+        seen_index=index.filter(~is_new).drop("doc_id"),
     )
 
 
@@ -12473,13 +12247,8 @@ def q_doc_bigram_lm_score(spark, sf_dir):
     # not exchange-reuse them (each join side gains different IsNotNull
     # key filters, so the canonical exchanges differ — verified on the
     # executed plan), so the operator shape tokenizes + explodes the
-    # corpus 3x per run.  The operator itself cannot persist a shared
-    # frame: doc_curation_pipeline_v2 embeds the identical
-    # bigram_lm_score(documents) subtrees, and a live cached frame
-    # would be cache-substituted into that query's plan (the
-    # _persist_slot no-shared-plan rule).  This query-layer restructure
-    # pre-aggregates per-doc bigram counts d3 = (doc_id, w1, w2, m) —
-    # a grouping unique to this query, so the persist cannot leak —
+    # corpus 3x per run.  This query-layer restructure pre-aggregates
+    # per-doc bigram counts d3 = (doc_id, w1, w2, m), checkpoints it,
     # and derives everything from it:
     #   c2(w1,w2) = sum(m)           [== the operator's count(*)]
     #   c1(w1)    = sum(c2)          [== count over big, exactly]
@@ -12508,14 +12277,8 @@ def q_doc_bigram_lm_score(spark, sf_dir):
         )
         .select("doc_id", "b.w1", "b.w2")
     )
-    d3 = _persist_slot(
-        "doc_bigram_lm_score.d3",
-        big.groupBy("doc_id", "w1", "w2").agg(F.count("*").alias("m")),
-    )
-    c2 = _persist_slot(
-        "doc_bigram_lm_score.c2",
-        d3.groupBy("w1", "w2").agg(F.sum("m").alias("_c2")),
-    )
+    d3 = big.groupBy("doc_id", "w1", "w2").agg(F.count("*").alias("m")).localCheckpoint()
+    c2 = d3.groupBy("w1", "w2").agg(F.sum("m").alias("_c2")).localCheckpoint()
     c1 = c2.groupBy("w1").agg(F.sum("_c2").alias("_c1"))
     p = (
         (F.col("_c2") + 1) * 1.0 / (F.col("_c1") + F.lit(int(vocab_size)))
@@ -12901,18 +12664,14 @@ def q_doc_corpus_card(spark, sf_dir):
     toks = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
     # t (tokenize + md5 + length per doc) feeds three subtrees — the
     # dup-hash aggregate, the per-group totals, and the median window —
-    # so without a persist each run re-scans and re-tokenizes the
-    # corpus 3x.  The projection (6 narrow columns, no text) is unique
-    # to this query (round-13; within-run only — see _persist_slot).
-    t = _persist_slot(
-        "doc_corpus_card.t",
-        d.select(
-            "doc_id", "source", "lang",
-            F.size(toks).cast("long").alias("n_tok"),
-            F.length("text").cast("long").alias("nch"),
-            F.md5("text").alias("h"),
-        ),
-    )
+    # so without a checkpoint each run re-scans and re-tokenizes the
+    # corpus 3x.  The checkpoint holds 6 narrow columns, no text
+    t = d.select(
+        "doc_id", "source", "lang",
+        F.size(toks).cast("long").alias("n_tok"),
+        F.length("text").cast("long").alias("nch"),
+        F.md5("text").alias("h"),
+    ).localCheckpoint()
     dh = t.groupBy("h").count().filter(F.col("count") > 1).select("h")
     t2 = t.join(F.broadcast(dh.withColumn("_d", F.lit(1))), "h", "left")
     g = t2.groupBy("source", "lang").agg(
@@ -13136,19 +12895,14 @@ def q_doc_curation_pipeline_v2(spark, sf_dir):
     lm = bigram_lm_score(d).select(
         "doc_id", F.col("avg_bigram_prob").alias("score")
     )
-    # klm persists for the WHOLE query lifetime (round-13 fix): the old
-    # construction-scoped persist/unpersist pair released the cache
-    # before the returned plan ever executed, so the returned DataFrame
-    # — which references klm through `fluent` TWICE — recomputed the
-    # entire dedup+LM pipeline twice per run.  The _persist_slot
-    # registry keeps exactly one run's frame cached (released on the
-    # query's next call), so the selection scans AND the execution both
-    # read the materialized frame.
-    klm = _persist_slot(
-        "doc_curation_pipeline_v2.klm",
+    # the returned DataFrame references klm through `fluent` TWICE and
+    # the median selection scans it again: checkpoint it so the whole
+    # dedup+LM pipeline runs once
+    klm = (
         newd.join(kept_ids, "doc_id")
         .join(lm, "doc_id")
-        .select("doc_id", "source", "score"),
+        .select("doc_id", "source", "score")
+        .localCheckpoint()
     )
     # nearest-rank median WITHOUT a global row_number window: the score
     # at rank ceil(n/2) under (score, doc_id) order IS the k-th smallest
@@ -13473,18 +13227,11 @@ JOIN sz zb ON zb.doc_id = m.doc_b
 )
 def q_doc_minhash_estimate_error(spark, sf_dir):
     # sh feeds four subtrees (signatures, sizes, both intersection
-    # sides), the signature table both pair sides, and the candidate
-    # list (a whole LSH pipeline) two joins — persist each within-run
+    # sides), the signature table both pair sides and the candidate
+    # pipeline, and the candidate list two joins — checkpoint each
     sh = _shingles_cached(spark, sf_dir)
-    ks = spark.range(8).select(F.col("id").cast("int").alias("k"))
-    mh = _persist_slot(
-        "doc_minhash_estimate_error.mh",
-        sh.crossJoin(F.broadcast(ks))
-        .select("doc_id", "k", _h60(F.concat_ws("#", "g", "k")).alias("hh"))
-        .groupBy("doc_id", "k")
-        .agg(F.min("hh").alias("h")),
-    )
-    cand = _minhash_cand_cached(spark, sf_dir)
+    mh = _minhash_hashes(sh).localCheckpoint()
+    cand = _minhash_cand(mh)
     ma = mh.select(F.col("doc_id").alias("doc_a"), "k", F.col("h").alias("_ha"))
     mb = mh.select(F.col("doc_id").alias("doc_b"), "k", F.col("h").alias("_hb"))
     match = (
@@ -13595,8 +13342,8 @@ def q_emb_pq_distortion(spark, sf_dir):
 
     # same shape as emb_pq_recall: the quantized corpus feeds five
     # subtrees (codebook seeds, two encode passes, the train join, the
-    # distortion join) — persist within-run (shared slot, see
-    # _emb_qv_cached) and discover the dimensionality once (round-13)
+    # distortion join) — checkpointed — and discover the dimensionality
+    # once
     qv = _emb_qv_cached(spark, sf_dir)
     dim = qv.select(F.size("q").alias("d")).limit(1).collect()[0]["d"]
     cb0 = pq_codebook(qv, n_sub=8, n_codes=16, dim=dim)
