@@ -88,30 +88,46 @@ def _part_files(root):
 
 
 def test_append_parallelism_scales_with_volume(spark, tmp_path, skewed_points):
-    """Large appends must not funnel through the 4-task small-batch path:
-    with a small chunk target, a 1M-point batch writes with many tasks
-    (>4 part files even within one (resolution, tb) directory), while a
-    tiny batch keeps its file count bounded."""
+    """Large appends must not funnel through a few write tasks: with a
+    small AQE advisory partition size, a 1M-point batch writes with many
+    tasks (>4 part files even within one (resolution, tb) directory),
+    while a tiny batch keeps its file count bounded."""
     store = WhisperStore.create(
         spark, str(tmp_path / "db"), [(60, 1440), (3600, 168)],
         x_files_factor=0.0, aggregation_method="average",
     )
-    store.append_chunk_bytes = 64 * 1024  # force the volume-scaled path
-    store.update_many(skewed_points, now=NOW)
-    files = _part_files(str(tmp_path / "db" / "points"))
-    assert len(files) > 4, len(files)
-    # salted repartition: even a single hot (resolution, tb) bucket is
-    # spread across tasks, not serialized through one
-    by_dir = {}
-    for f in files:
-        by_dir.setdefault(f.rsplit("/", 1)[0], []).append(f)
-    assert max(len(v) for v in by_dir.values()) > 4
+    # a 64 KB advisory size makes AQE split the hot bucket; 16 uncoalesced
+    # shuffle partitions give it enough map outputs to split it >4 ways
+    confs = {
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64k",
+        "spark.sql.shuffle.partitions": "16",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        store.update_many(skewed_points, now=NOW)
+        files = _part_files(str(tmp_path / "db" / "points"))
+        assert len(files) > 4, len(files)
+        # the rebalance splits even a single hot (resolution, tb) bucket
+        # across tasks, not serialized through one
+        by_dir = {}
+        for f in files:
+            by_dir.setdefault(f.rsplit("/", 1)[0], []).append(f)
+        assert max(len(v) for v in by_dir.values()) > 4
 
-    # small-batch floor: a tiny append adds few files (no file spray)
-    before = len(files)
-    store.update_many([(NOW - 30, 1.0)], now=NOW, metric="tiny")
-    after = len(_part_files(str(tmp_path / "db" / "points")))
-    assert after - before <= 8  # raw slot + rollup cascade, <=4 each
+        # small-batch floor: a tiny append adds few files (no file spray)
+        before = len(files)
+        store.update_many([(NOW - 30, 1.0)], now=NOW, metric="tiny")
+        after = len(_part_files(str(tmp_path / "db" / "points")))
+        assert after - before <= 8  # raw slot + rollup cascade, <=4 each
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_skewed_cascade_hourly(spark, tmp_path, skewed_points):

@@ -1,4 +1,6 @@
-"""The update_many write path: rollup cascade values, one commit per batch.
+"""The store's write paths: rollup cascade values, one commit per batch,
+one parquet file per (resolution, tb) bucket per write, and an atomic
+policy file.
 
 Expected rows are written out by hand from whisper's rules (reference:
 whisper.py:578-664 propagate, :740-875 update_many), not computed by the
@@ -6,9 +8,13 @@ store.  Every store here uses the policy 60s:10m,5m:1h,1h:1d: a 5 minute
 interval holds 5 minute-slots, an hour holds 12 five-minute slots.
 """
 
+import glob
+import os
+
 import pytest
 
 from whisper_spark import store as store_mod
+from whisper_spark.sources.wsp import export_wsp, import_wsp
 from whisper_spark.store import WhisperStore
 
 H = 1_699_999_200  # hour-aligned
@@ -169,3 +175,47 @@ def test_one_append_per_batch(spark, tmp_path, monkeypatch):
     assert (len(batches), len(appends)) == (4, 4)
     ((_f, _u, _s), df) = dst.fetch("a", H - 1, until_time=NOW, now=NOW, archive_step=3600)
     assert [r["value"] for r in df.collect() if r["value"] is not None] == [1.5]
+
+
+def _files_per_bucket(store):
+    buckets = glob.glob(os.path.join(store._points_path, "resolution=*", "tb=*"))
+    assert buckets
+    return {b: len(glob.glob(os.path.join(b, "*.parquet"))) for b in buckets}
+
+
+def _carbon_flush(spark, tmp_path):
+    """One update_many of 200 series x 30 ten-second points."""
+    store = WhisperStore.create(spark, str(tmp_path / "flush"), "10s:6h,1m:7d,1h:2y")
+    _write(spark, store, [(f"s{i}", NOW - 10 * k, i + k) for i in range(200)
+                          for k in range(30)])
+    return store
+
+
+def test_update_many_writes_one_file_per_bucket(spark, tmp_path):
+    counts = _files_per_bucket(_carbon_flush(spark, tmp_path))
+    assert set(counts.values()) == {1}, counts
+
+
+def test_import_wsp_writes_one_file_per_bucket(spark, tmp_path):
+    src = _carbon_flush(spark, tmp_path)
+    tree = str(tmp_path / "tree")
+    assert export_wsp(src, tree) == 200
+    dst = import_wsp(spark, tree, str(tmp_path / "imported"), root=tree)
+    counts = _files_per_bucket(dst)
+    assert set(counts.values()) == {1}, counts
+    assert dst._read_points().select("metric").distinct().count() == 200
+
+
+def test_failed_create_leaves_no_policy(spark, tmp_path, monkeypatch):
+    path = str(tmp_path / "db")
+
+    def failing_dump(*args, **kwargs):
+        raise OSError("disk full")
+
+    with monkeypatch.context() as m:
+        m.setattr(store_mod.json, "dump", failing_dump)
+        with pytest.raises(OSError, match="disk full"):
+            WhisperStore.create(spark, path, POLICY)
+    assert os.listdir(path) == []
+    WhisperStore.create(spark, path, POLICY)
+    assert WhisperStore.open(spark, path).archives[0].seconds_per_point == 60

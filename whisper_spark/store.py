@@ -30,6 +30,12 @@ Design decisions (the 100 TB story):
   and build the whole cascade as one plan over the stored rows plus the
   batch's in-flight rows.  One append per batch writes the points and
   every rollup together, so a failed batch writes nothing.
+* **One points writer, rebalanced on (resolution, tb).**  Appends and
+  ``compact()`` both go through ``_write_points``: a ``rebalance`` hint on
+  the partition columns lets AQE size the write tasks from the real
+  shuffle bytes, so a write leaves one file per bucket, and a hot bucket
+  larger than ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` is
+  split across tasks.
 
 Semantics parity notes (validated by differential tests against the
 reference library in tests/test_store_parity.py):
@@ -84,6 +90,7 @@ from .errors import (
 from .functions.timeseries import (
     align_ts,
     dense_timeline,
+    last_write_wins,
     select_archive,
     xff_rollup,
 )
@@ -133,16 +140,10 @@ def _persist(cached: ExitStack, df: DataFrame) -> DataFrame:
 class WhisperStore:
     """A policy-scoped, multi-metric time-series store on parquet."""
 
-    #: target bytes per append-write task; batches estimated larger than
-    #: 4x this switch from the small-batch coalesce(4) to a volume-scaled
-    #: salted repartition (overridable per instance for tests/tuning)
-    APPEND_CHUNK_BYTES = 64 << 20
-
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = os.path.abspath(path)
         self._policy_cache: dict | None = None  # CACHE_HEADERS analog
-        self.append_chunk_bytes = self.APPEND_CHUNK_BYTES
 
     # ------------------------------------------------------------------ #
     # lifecycle
@@ -178,9 +179,9 @@ class WhisperStore:
             "archives": [[int(s), int(p)] for (s, p) in archives],
             "batch": 0,
         }
-        with open(os.path.join(path, "policy.json"), "w") as f:
-            json.dump(policy, f)
-        return cls(spark, path)
+        store = cls(spark, path)
+        store._write_policy(policy)
+        return store
 
     @classmethod
     def open(cls, spark: SparkSession, path: str) -> "WhisperStore":
@@ -204,9 +205,13 @@ class WhisperStore:
 
     def _write_policy(self, policy: dict) -> None:
         tmp = os.path.join(self.path, f".policy.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as f:
-            json.dump(policy, f)
-        os.replace(tmp, os.path.join(self.path, "policy.json"))
+        try:
+            with open(tmp, "w") as f:
+                json.dump(policy, f)
+            os.replace(tmp, os.path.join(self.path, "policy.json"))
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
         self._policy_cache = policy
 
     @property
@@ -348,10 +353,7 @@ class WhisperStore:
 
     def _lww(self, df: DataFrame) -> DataFrame:
         """Collapse multi-batch duplicates: latest batch wins."""
-        return df.groupBy("metric", "resolution", "ts").agg(
-            F.max_by("value", "wseq").alias("value"),
-            F.max("wseq").alias("wseq"),
-        )
+        return last_write_wins(df, ["metric", "resolution"], order="wseq")
 
     def _ring_visible(self, lww_df: DataFrame, archive: ArchiveSpec) -> DataFrame:
         """Apply the reference's ring-buffer eviction to LWW'd rows: the
@@ -372,53 +374,31 @@ class WhisperStore:
             .select("metric", F.col("w.ts").alias("ts"), F.col("w.v").alias("value"))
         )
 
-    @staticmethod
-    def _plan_size_bytes(df: DataFrame) -> int | None:
-        """Catalyst's size estimate for the plan, or None when unknown
-        (LocalRelation-derived batches report Long.MaxValue) or absurd
-        (join-product default estimates)."""
-        try:
-            est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-        except Exception:  # pragma: no cover - py4j access is best-effort
-            return None
-        if est <= 0 or est >= (1 << 60):
-            return None
-        return est
+    def _write_points(self, df: DataFrame, path: str, mode: str) -> None:
+        """The one points writer: rows (metric, resolution, ts, value,
+        wseq) get their ``tb`` and are rebalanced on (resolution, tb)
+        before the partitioned parquet write, so AQE sizes the write
+        tasks from the real shuffle bytes — one file per bucket per
+        write, with a bucket larger than
+        ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` split
+        across tasks."""
+        (
+            df.withColumn(
+                "tb", (F.col("ts") / (F.col("resolution") * F.lit(TB_SLOTS))).cast("long")
+            )
+            .select(*[f.name for f in POINTS_SCHEMA.fields])
+            .hint("rebalance", "resolution", "tb")
+            .write.partitionBy("resolution", "tb")
+            .mode(mode)
+            .parquet(path)
+        )
 
     def _append(self, df: DataFrame) -> None:
-        """Append rows (metric, resolution, ts, value, wseq); derives tb.
-
-        Write parallelism scales with batch volume: small batches (or
-        unknown size estimates — always tiny local batches here) keep the
-        no-shuffle coalesce(4) so file counts stay bounded; batches whose
-        Catalyst size estimate exceeds 4x ``append_chunk_bytes`` are
-        hash-repartitioned to ~chunk-sized tasks, clustered on the write
-        partitions (resolution, tb) and salted so one hot time bucket
-        cannot serialize a cluster-scale ingest through a single task."""
+        """Append rows (metric, resolution, ts, value, wseq)."""
         from . import debug
 
         debug.record_write(f"batch append {self.path}")
-        out = df.withColumn(
-            "tb", (F.col("ts") / (F.col("resolution") * F.lit(TB_SLOTS))).cast("long")
-        ).select(*[f.name for f in POINTS_SCHEMA.fields])
-        est = self._plan_size_bytes(out)
-        chunk = int(self.append_chunk_bytes)
-        if est is not None and est > 4 * chunk:
-            cap = max(4, 4 * self.spark.sparkContext.defaultParallelism)
-            n = int(min(est // chunk, cap))
-            out = out.repartition(
-                n,
-                F.col("resolution"),
-                F.col("tb"),
-                F.pmod(F.hash("metric", "ts"), F.lit(n)),
-            )
-        else:
-            out = out.coalesce(4)
-        (
-            out.write.partitionBy("resolution", "tb")
-            .mode("append")
-            .parquet(self._points_path)
-        )
+        self._write_points(df, self._points_path, "append")
 
     # ------------------------------------------------------------------ #
     # write path (reference: whisper.py:667-875)
@@ -988,10 +968,7 @@ class WhisperStore:
         pruning (``WHERE resolution = .. AND tb = ..``) as the
         DataFrame path, because they resolve to the identical scan."""
         raw = self._read_points()
-        live = (
-            raw.groupBy("metric", "resolution", "ts")
-            .agg(F.max_by("value", "wseq").alias("value"))
-        )
+        live = self._lww(raw).drop("wseq")
         names = [f"{prefix}_points", f"{prefix}_series", f"{prefix}_metrics"]
         raw.createOrReplaceTempView(names[0])
         live.createOrReplaceTempView(names[1])
@@ -1377,17 +1354,8 @@ class WhisperStore:
                 (F.col("resolution") == a.seconds_per_point)
                 & (F.col("ts") > now - a.retention)
             )
-        df = df.filter(cond).withColumn(
-            "tb", (F.col("ts") / (F.col("resolution") * F.lit(TB_SLOTS))).cast("long")
-        )
         tmp = os.path.join(self.path, f".points.{uuid.uuid4().hex}.tmp")
-        (
-            df.select(*[f.name for f in POINTS_SCHEMA.fields])
-            .repartition("resolution", "tb")
-            .write.partitionBy("resolution", "tb")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
+        self._write_points(df.filter(cond), tmp, "overwrite")
         old = self._points_path
         bak = os.path.join(self.path, f".points.{uuid.uuid4().hex}.bak")
         os.replace(old, bak)
@@ -1422,22 +1390,14 @@ class WhisperStore:
             return 0
         removed = 0
         with self._fs_lock(".append.lock"):
-            by_res = {a.seconds_per_point: a.retention for a in self.archives}
-            root = self._points_path
-            for rdir in sorted(os.listdir(root)):
-                if not rdir.startswith("resolution="):
-                    continue
-                res = int(rdir.split("=", 1)[1])
-                retention = by_res.get(res)
-                if retention is None:
-                    continue
-                span = res * TB_SLOTS
-                for tdir in sorted(os.listdir(os.path.join(root, rdir))):
-                    if not tdir.startswith("tb="):
-                        continue
-                    tb = int(tdir.split("=", 1)[1])
-                    if (tb + 1) * span <= now - retention:
-                        shutil.rmtree(os.path.join(root, rdir, tdir))
+            for a in self.archives:
+                step = a.seconds_per_point
+                span = step * TB_SLOTS
+                for tb in self._tb_buckets(step):
+                    if (tb + 1) * span <= now - a.retention:
+                        shutil.rmtree(
+                            os.path.join(self._points_path, f"resolution={step}", f"tb={tb}")
+                        )
                         removed += 1
         return removed
 
