@@ -7,9 +7,9 @@
 
 For each workload (default: every workload in CHANGE_DIR's
 ``BENCHMARK.json``), pair i runs ``perfbench/run.py --seed <seed + i>``
-once in each checkout, one right after the other: odd pairs run the parent
-first, even pairs the change first, so drift of the host's speed lands on
-both sides alike.  Each run's last output line is its JSON result.
+once in each checkout for the ``run_seconds`` that ``BENCHMARK.json`` sets,
+one right after the other: odd pairs run the parent first, even pairs the
+change first, so drift of the host's speed lands on both sides alike.  Each run's last output line is its JSON result.
 
 Printed per workload and end-to-end metric: the parent's and the change's
 median with quartiles, the change of the medians, and the pairs the
@@ -90,7 +90,6 @@ def main(argv=None) -> int:
     p.add_argument("--workload", action="append",
                    help="workload to run (repeatable; default: all in BENCHMARK.json)")
     p.add_argument("--seed", type=int, default=1, help="seed of the first pair")
-    p.add_argument("--seconds", type=float, default=5)
     p.add_argument("--out", help="directory for run logs and results.jsonl")
     args = p.parse_args(argv)
 
@@ -107,7 +106,7 @@ def main(argv=None) -> int:
             seed = args.seed + i
             for side in (SIDES if i % 2 == 0 else SIDES[::-1]):
                 log = args.out and os.path.join(args.out, f"{workload}-{side}-{i + 1}.log")
-                res = run_once(trees[side], workload, seed, args.seconds, log)
+                res = run_once(trees[side], workload, seed, bench["run_seconds"], log)
                 results[side].append(res)
                 print(f"{workload} pair {i + 1} seed {seed} {side}: "
                       f"{'no result' if res is None else 'correct' if res['correct'] else 'INCORRECT'}",

@@ -35,7 +35,10 @@ Design decisions (the 100 TB story):
   the partition columns lets AQE size the write tasks from the real
   shuffle bytes, so a write leaves one file per bucket, and a hot bucket
   larger than ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` is
-  split across tasks.
+  split across tasks.  That sizing needs ``spark.sql.adaptive.enabled``;
+  with AQE off the hint is a plain hash repartition into
+  ``spark.sql.shuffle.partitions``, and each bucket is written by one task
+  whatever its size.
 
 Semantics parity notes (validated by differential tests against the
 reference library in tests/test_store_parity.py):
@@ -381,7 +384,10 @@ class WhisperStore:
         tasks from the real shuffle bytes — one file per bucket per
         write, with a bucket larger than
         ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` split
-        across tasks."""
+        across tasks.  The sizing needs ``spark.sql.adaptive.enabled``:
+        with AQE off the hint is a hash repartition into
+        ``spark.sql.shuffle.partitions``, one task per bucket at any
+        size."""
         (
             df.withColumn(
                 "tb", (F.col("ts") / (F.col("resolution") * F.lit(TB_SLOTS))).cast("long")
