@@ -107,38 +107,57 @@ def test_store_fetch_prunes_partitions(spark, tmp_path):
     assert "ts" in pushed
 
 
+def _pushed_ts_bounds(plan):
+    """(lower, upper) ts bounds pushed into the one parquet scan; None
+    for a side with no bound."""
+    import re
+
+    pushed = plan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
+    lo = re.findall(r"GreaterThanOrEqual\(ts,(-?\d+)\)", pushed)
+    hi = re.findall(r"LessThanOrEqual\(ts,(-?\d+)\)", pushed)
+    return (int(lo[0]) if lo else None, int(hi[0]) if hi else None)
+
+
 def test_fetch_skips_collision_pass_when_metadata_proves_clean(spark, tmp_path):
     """Ring-eviction emulation must short-circuit when partition metadata
-    proves no collider rows exist: ONE parquet scan (no one-span-back +
-    tail union) and no ts%span slot aggregate.  A store with an actual
-    future-tail bucket must still take the fuzz-proven collision path."""
+    proves no collider rows exist: the scan reads the window alone, not
+    one span back and the tail.  A store with an actual future-tail
+    bucket must still read both.  Either way the fetch is one parquet
+    scan and one aggregate: one Exchange, no broadcast."""
     from whisper_spark.store import WhisperStore
 
     NOW = 1700000000
-    # archive tb width = 5*TB_SLOTS; all points land inside the window's
-    # buckets, no tail bucket -> short-circuit eligible
-    store = WhisperStore.create(spark, str(tmp_path / "db"), [(5, 60)])
-    store.update_many([(NOW - i * 5, float(i)) for i in range(12)], now=NOW, metric="m")
-    res = store.fetch("m", from_time=NOW - 59, until_time=NOW, now=NOW)
-    (_, df) = res
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Scan parquet") == 1, plan
-    # the ring slot-collision aggregate (max over (wseq, ts, value)
-    # structs keyed on ts%span) must be absent
-    assert "struct(wseq" not in plan
+    SPAN = 5 * 60
+    prev = spark.conf.get("spark.sql.maxMetadataStringLength")
+    spark.conf.set("spark.sql.maxMetadataStringLength", "10000")  # untruncated filters
+    try:
+        # archive tb width = 5*TB_SLOTS; all points land inside the
+        # window's buckets, no tail bucket -> short-circuit eligible
+        store = WhisperStore.create(spark, str(tmp_path / "db"), [(5, 60)])
+        store.update_many([(NOW - i * 5, float(i)) for i in range(12)], now=NOW, metric="m")
+        ((frm, until, step), df) = store.fetch("m", from_time=NOW - 59, until_time=NOW, now=NOW)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Scan parquet") == 1, plan
+        assert plan.count("Exchange") == 1 and "BroadcastExchange" not in plan, plan
+        lo, hi = _pushed_ts_bounds(plan)
+        assert lo == frm and until - step <= hi < until, plan
 
-    # same store, but a future-timestamped point creates a tail bucket:
-    # the collision path (2 scans + slot aggregate) must engage
-    store2 = WhisperStore.create(spark, str(tmp_path / "db2"), [(5, 60)])
-    store2.update_many(
-        [(NOW - i * 5, float(i)) for i in range(12)] + [(NOW + 40, 99.0)],
-        now=NOW, metric="m",
-    )
-    res2 = store2.fetch("m", from_time=NOW - 59, until_time=NOW - 45, now=NOW)
-    (_, df2) = res2
-    plan2 = df2._jdf.queryExecution().executedPlan().toString()
-    assert plan2.count("Scan parquet") >= 2
-    assert "struct(wseq" in plan2
+        # same store, but a future-timestamped point creates a tail
+        # bucket: the scan must reach one span back and cover the tail
+        store2 = WhisperStore.create(spark, str(tmp_path / "db2"), [(5, 60)])
+        store2.update_many(
+            [(NOW - i * 5, float(i)) for i in range(12)] + [(NOW + 40, 99.0)],
+            now=NOW, metric="m",
+        )
+        ((frm2, _u, _s), df2) = store2.fetch(
+            "m", from_time=NOW - 59, until_time=NOW - 45, now=NOW
+        )
+        plan2 = df2._jdf.queryExecution().executedPlan().toString()
+        assert plan2.count("Scan parquet") == 1, plan2
+        assert plan2.count("Exchange") == 1 and "BroadcastExchange" not in plan2, plan2
+        assert _pushed_ts_bounds(plan2) == (frm2 - SPAN, None), plan2
+    finally:
+        spark.conf.set("spark.sql.maxMetadataStringLength", prev)
 
 
 def test_q21_single_fact_aggregate_no_cartesian(spark):

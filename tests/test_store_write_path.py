@@ -14,6 +14,7 @@ import os
 import pytest
 
 from whisper_spark import store as store_mod
+from whisper_spark.errors import CorruptWhisperFile
 from whisper_spark.sources.wsp import export_wsp, import_wsp
 from whisper_spark.store import WhisperStore
 
@@ -204,6 +205,40 @@ def test_import_wsp_writes_one_file_per_bucket(spark, tmp_path):
     counts = _files_per_bucket(dst)
     assert set(counts.values()) == {1}, counts
     assert dst._read_points().select("metric").distinct().count() == 200
+
+
+def test_truncated_wsp_import_leaves_no_store(spark, tmp_path, monkeypatch):
+    src = _store(spark, tmp_path, 0.5, name="src")
+    _write(spark, src, [("a", NOW - 60, 1), ("b", NOW - 60, 2)])
+    tree = str(tmp_path / "tree")
+    assert export_wsp(src, tree) == 2
+    bad = os.path.join(tree, "b.wsp")
+    with open(bad, "rb") as f:
+        whole = f.read()
+    with open(bad, "wb") as f:
+        f.write(whole[: len(whole) // 2])
+    dst = str(tmp_path / "imported")
+    with pytest.raises(CorruptWhisperFile) as err:
+        import_wsp(spark, tree, dst, root=tree)
+    assert err.value.path.endswith("b.wsp")
+    assert not os.path.exists(dst)
+
+    with open(bad, "wb") as f:
+        f.write(whole)
+    # a failing data write removes the store it created
+    def failing_append(self, df):
+        raise OSError("disk full")
+
+    with monkeypatch.context() as m:
+        m.setattr(WhisperStore, "_append", failing_append)
+        with pytest.raises(OSError, match="disk full"):
+            import_wsp(spark, tree, dst, root=tree)
+    assert not os.path.exists(dst)
+
+    store = import_wsp(spark, tree, dst, root=tree)
+    assert sorted(tuple(r) for r in store.fetch(None, NOW - 120, NOW, now=NOW)[1]
+                  .where("value IS NOT NULL").collect()) == [
+        ("a", NOW - 60, 1.0), ("b", NOW - 60, 2.0)]
 
 
 def test_failed_create_leaves_no_policy(spark, tmp_path, monkeypatch):

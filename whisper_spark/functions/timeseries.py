@@ -10,8 +10,8 @@ inside whole-stage codegen and scales by partitioning:
                          (reference: whisper.py:806-808)
 * ``xff_rollup``       — one rollup step with the xFilesFactor gate
                          (reference: whisper.py:578-664)
-* ``dense_timeline``   — gap-filled, step-aligned fetch output
-                         (reference: whisper.py:1023-1034)
+* ``dense_timeline``   — gap-filled, step-aligned timeline of any keyed
+                         series frame (reference: whisper.py:1023-1034)
 * ``select_archive``   — resolution chooser (reference: whisper.py:943-957)
 
 Scale notes (100 TB design point): ``xff_rollup`` is a single
@@ -20,8 +20,10 @@ final aggregation, one shuffle keyed by (metric, bucket).  When the input
 is already hash-partitioned by metric (our store layout), AQE coalesces
 the shuffle.  ``last_write_wins`` is ``max_by`` — also a plain aggregate,
 NOT a window function, so it needs no total sort.  ``dense_timeline``
-generates the spine with ``sequence``/``explode`` per metric — O(range/step)
-rows distributed across the cluster, never a driver loop.
+generates the spine with ``sequence``/``explode`` per key — O(range/step)
+rows distributed across the cluster, never a driver loop.  (The store's
+own fetch does not use it: it folds LWW, ring eviction and gap fill into
+one aggregate, see ``WhisperStore._fetch_archive_dense``.)
 """
 
 from __future__ import annotations
@@ -127,7 +129,7 @@ def dense_timeline(
     ts: str = "ts",
     value: str = "value",
 ) -> DataFrame:
-    """Produce the dense, step-aligned fetch result with nulls in gaps.
+    """Produce a dense, step-aligned timeline with nulls in gaps.
 
     ``keys_df`` holds one row per series (e.g. distinct metrics); the spine
     is ``sequence(from_interval, until_interval - step, step)`` exploded per

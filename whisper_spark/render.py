@@ -2104,7 +2104,10 @@ def consolidate(
     rounded UP to a multiple of the native step, then one summarize
     groupBy.  Returns (frame, effective_step); a frame already under
     budget passes through.  The bounds lookup is one 2-value aggregate
-    (bounded driver data, same precedent as the session now-pin)."""
+    (bounded driver data, same precedent as the session now-pin).
+    ``df`` is read twice, by the bounds and by the summarize, so it is
+    computed once into a local checkpoint first."""
+    df = df.localCheckpoint()
     lo, hi = df.agg(F.min("ts"), F.max("ts")).first()
     if lo is None:
         return df, step

@@ -27,10 +27,13 @@ driver never materializes point data.
 from __future__ import annotations
 
 import os
+import shutil
 import struct
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..errors import CorruptWhisperFile
 
 METADATA_FMT = "!2LfL"
 ARCHIVE_FMT = "!3L"
@@ -50,7 +53,8 @@ WSP_POINTS_SCHEMA = "metric string, resolution long, ts long, value double"
 WSP_HEADER_SCHEMA = (
     "metric string, aggregation_method string, max_retention long, "
     "x_files_factor double, "
-    "archives array<struct<seconds_per_point:long, points:long>>"
+    "archives array<struct<seconds_per_point:long, points:long>>, "
+    "corrupt string"
 )
 
 
@@ -83,6 +87,19 @@ def _metric_name(path: str, root: str | None) -> str:
     if rel.endswith(".wsp"):
         rel = rel[:-4]
     return rel.replace(os.sep, ".")
+
+
+def _short_of_header(blob: bytes) -> bool:
+    """True when ``blob`` is shorter than its own header says: the
+    metadata, the archive table, or the last archive's points."""
+    need = METADATA_SIZE
+    if len(blob) >= need:
+        need += struct.unpack_from(METADATA_FMT, blob, 0)[3] * ARCHIVE_SIZE
+    if len(blob) >= need:
+        need = max([need] + [
+            off + pts * POINT_SIZE for off, _spp, pts in _parse_header(blob)[3]
+        ])
+    return len(blob) < need
 
 
 def _parse_header(blob: bytes):
@@ -411,10 +428,14 @@ def wsp_headers(
     root: str | None = None,
     listing: str | None = None,
 ) -> DataFrame:
-    """One row per file: the parsed header (info() surface)."""
+    """One row per file: the parsed header (info() surface).  A file
+    shorter than its header says gets NULL header fields and its path in
+    ``corrupt`` (NULL for a sound file)."""
 
     def parse(item):
         p, blob = item
+        if _short_of_header(blob):
+            return [(_metric_name(p, root), None, None, None, None, p)]
         aggr, max_ret, xff, archives = _parse_header(blob)
         return [(
             _metric_name(p, root),
@@ -422,10 +443,31 @@ def wsp_headers(
             max_ret,
             float(xff),
             [(spp, pts) for _o, spp, pts in archives],
+            None,
         )]
 
     files = _wsp_files_rdd(spark, path, listing)
     return spark.createDataFrame(files.flatMap(parse), WSP_HEADER_SCHEMA)
+
+
+def _header_configs(hdrs: DataFrame) -> list:
+    """The distinct (aggregation_method, x_files_factor, archives)
+    configs of a tree, from the header pass's one job.  Raises
+    CorruptWhisperFile naming a file shorter than its header says, so
+    an import fails before it creates a store."""
+    rows = (
+        hdrs.select("aggregation_method", "x_files_factor", "archives", "corrupt")
+        .distinct()
+        .collect()
+    )
+    bad = sorted(r["corrupt"] for r in rows if r["corrupt"] is not None)
+    if bad:
+        raise CorruptWhisperFile(
+            f"{len(bad)} .wsp file(s) shorter than their header says, "
+            f"first {bad[0]}",
+            bad[0],
+        )
+    return rows
 
 
 def import_wsp(
@@ -440,21 +482,22 @@ def import_wsp(
     is not replayable from retained data).  All files must share one
     retention schema — whisper trees are per-policy subtrees
     (storage-schemas.conf), so import per subtree.  Returns the new
-    WhisperStore."""
+    WhisperStore.
+
+    A file shorter than its header says raises CorruptWhisperFile before
+    the store is created; if the data write fails, the store is removed
+    again, so a fixed tree imports on retry."""
     from ..store import WhisperStore
 
     hdrs = wsp_headers(spark, path, root)
-    configs = (
-        hdrs.select("aggregation_method", "x_files_factor", "archives")
-        .distinct()
-        .collect()
-    )
+    configs = _header_configs(hdrs)
     if len(configs) != 1:
         raise ValueError(
             f"import_wsp: {len(configs)} distinct retention configs under "
             f"{path!r}; import one storage-schema subtree at a time"
         )
     cfg = configs[0]
+    created = not os.path.exists(dst_path)
     store = WhisperStore.create(
         spark,
         dst_path,
@@ -463,7 +506,16 @@ def import_wsp(
         aggregation_method=cfg["aggregation_method"],
     )
     pts = read_wsp(spark, path, root).withColumn("wseq", F.lit(0).cast("long"))
-    store._append(pts)
+    try:
+        store._append(pts)
+    except BaseException:
+        # leave no store behind, so the import can be retried
+        if created:
+            shutil.rmtree(store.path, ignore_errors=True)
+        else:
+            shutil.rmtree(store._points_path, ignore_errors=True)
+            os.remove(os.path.join(store.path, "policy.json"))
+        raise
     return store
 
 
@@ -490,11 +542,7 @@ def import_wsp_tree(
     from ..store import WhisperStore
 
     hdrs = wsp_headers(spark, path, root).persist()
-    cfg_rows = (
-        hdrs.select("aggregation_method", "x_files_factor", "archives")
-        .distinct()
-        .collect()
-    )
+    cfg_rows = _header_configs(hdrs)
     cfgs = sorted(
         cfg_rows,
         key=lambda r: (

@@ -24,6 +24,14 @@ Design decisions (the 100 TB story):
   whisper.py:721-724,992-1001).  ``resolution`` is a partition column, and
   ``tb = ts // (step * TB_SLOTS)`` buckets time so a fetch reads only the
   slices covering its range, regardless of total table size.
+* **A fetch is one aggregate.**  The scanned rows, unioned with a spine
+  row ``(metric, ts, NULL, wseq -1)`` per requested series and window
+  slot, are grouped on the ring slot ``(metric, pmod(ts, span))`` and
+  reduced with ``max(struct(wseq, ts, value))``: last-write-wins, ring
+  eviction (reference: whisper.py:842-856) and gap fill in one
+  ``groupBy`` — one exchange, no join, no broadcast.  A window clamped
+  to the archive's retention is at most one span wide, so each window ts
+  owns exactly one slot and the slot's winner decides that ts alone.
 * **Rollups are set-based, and a batch commits once.**  Whisper
   propagates one interval at a time (reference: whisper.py:578-664); we
   recompute all touched lower intervals per level with one ``groupBy``
@@ -92,7 +100,6 @@ from .errors import (
 )
 from .functions.timeseries import (
     align_ts,
-    dense_timeline,
     last_write_wins,
     select_archive,
     xff_rollup,
@@ -138,6 +145,19 @@ def _persist(cached: ExitStack, df: DataFrame) -> DataFrame:
     df = df.persist()
     cached.callback(df.unpersist)
     return df
+
+
+def _slice_where(step: int, ts_from: int | None, ts_until: int | None) -> str:
+    """SQL predicate for one archive's rows with ``ts_from <= ts <=
+    ts_until`` (either bound optional), with the matching ``tb`` partition
+    bounds."""
+    w = step * TB_SLOTS
+    cond = f"resolution = {step}"
+    if ts_from is not None:
+        cond += f" AND tb >= {ts_from // w} AND ts >= {ts_from}"
+    if ts_until is not None:
+        cond += f" AND tb <= {ts_until // w} AND ts <= {ts_until}"
+    return cond
 
 
 class WhisperStore:
@@ -343,16 +363,7 @@ class WhisperStore:
         """Read one archive's slice with partition pruning on
         (resolution, tb) and a ts range filter (the parquet scan then
         prunes row groups by min/max stats)."""
-        df = self._read_points().filter(F.col("resolution") == step)
-        if ts_from is not None:
-            df = df.filter(
-                (F.col("tb") >= ts_from // (step * TB_SLOTS)) & (F.col("ts") >= ts_from)
-            )
-        if ts_until is not None:
-            df = df.filter(
-                (F.col("tb") <= ts_until // (step * TB_SLOTS)) & (F.col("ts") <= ts_until)
-            )
-        return df
+        return self._read_points().where(_slice_where(step, ts_from, ts_until))
 
     def _lww(self, df: DataFrame) -> DataFrame:
         """Collapse multi-batch duplicates: latest batch wins."""
@@ -738,16 +749,6 @@ class WhisperStore:
             timeline = timeline.filter(F.col("value").isNotNull() & (F.col("value") != 0))
         return ((from_interval, until_interval, step), timeline)
 
-    def _metrics_df(self, metrics: str | Sequence[str] | None) -> DataFrame:
-        if metrics is None:
-            return self._read_points().select("metric").distinct()
-        if isinstance(metrics, str):
-            metrics = [metrics]
-        return self.spark.createDataFrame(
-            [(m,) for m in metrics],
-            T.StructType([T.StructField("metric", T.StringType())]),
-        )
-
     def _tb_buckets(self, step: int) -> list[int]:
         """tb partition values present for one resolution, from directory
         metadata only (no data scan).  At cluster scale this is one
@@ -835,61 +836,80 @@ class WhisperStore:
         """Dense read of ONE archive with the reference's quantize-up-by-
         one-step convention and zero-length handling (reference:
         whisper.py:962-976).  No clamping — callers clamp (merge/diff
-        deliberately fetch archives over their full retention)."""
+        deliberately fetch archives over their full retention).
+
+        One aggregate builds the whole timeline.  Its input is the
+        scanned rows plus a spine row ``(metric, ts, NULL, wseq -1)`` per
+        requested series and window slot; it is keyed on the ring slot
+        ``(metric, pmod(ts, span))`` and takes ``max(struct(wseq, ts,
+        value))``.  That one ``groupBy`` is last-write-wins (the higher
+        batch wins a ts), ring eviction (a later batch, then the larger
+        ts, wins the slot — the reference's physical overwrite,
+        whisper.py:842-856; a loser is invisible like a stale stored
+        timestamp, whisper.py:1026-1031) and gap fill (stored ``wseq`` is
+        >= 0, so a slot holding only its spine row yields NULL).  Slots
+        with no spine row are dropped.  A window is at most one span wide
+        when the caller clamps it to the archive's retention, so each
+        window ts owns one slot; a wider window (a forced
+        ``archive_step``, or an unclamped ``until``) gives each of a
+        slot's window ts its value only if that ts won the slot."""
         step = archive.seconds_per_point
         from_interval = (from_time - (from_time % step)) + step
         until_interval = (until_time - (until_time % step)) + step
         if from_interval == until_interval:
             until_interval += step
-        keys_df = self._metrics_df(metrics)
         span = archive.retention
-        # ring-eviction emulation: in the reference, a LATER write whose
-        # timestamp collides modulo the archive span overwrites the
-        # physical slot (whisper.py:842-856).  A window row's colliders
-        # live one span away on either side: a future-timestamped point
-        # evicts the point one span older (colliders at ts >= window end),
-        # and a later BATCH writing an older timestamp evicts an in-window
-        # future point (colliders one span below the window).  We read the
-        # window plus one span back plus the typically-empty tail, and
-        # keep per ring slot only the latest write (by batch, then by
-        # timestamp — the in-batch chronological write order).  Found by
-        # differential fuzzing + review (tests/test_store_fuzz.py).
-        #
-        # Short-circuit (the overwhelmingly common case, and always after
-        # compact()): partition-directory metadata alone can prove no
-        # collider rows exist — no (resolution, tb) bucket intersects the
-        # one-span-back region or the future tail.  Then the scan shrinks
-        # to the window itself and the ts%span slot-collision aggregate
-        # (one extra shuffle) is skipped entirely; in-window timestamps
-        # can never collide modulo span (window width <= span).
+        n_slots = (until_interval - from_interval) // step
+        last = until_interval - step
+        # A window slot's colliders live one span away on either side: a
+        # future-timestamped point evicts the point one span older, and a
+        # later batch writing an older timestamp evicts an in-window
+        # future point.  So the scan covers one span back and the
+        # typically-empty tail, unless partition and footer metadata
+        # prove neither region holds a row (always so after compact());
+        # then it reads the window alone.  The plan is the same either way.
+        # Found by differential fuzzing (tests/test_store_fuzz.py).
         if self._no_colliders_possible(step, from_interval - span,
                                        from_interval, until_interval):
-            raw = self._read_resolution(step, from_interval, until_interval - 1)
-            if metrics is not None:
-                names = [metrics] if isinstance(metrics, str) else list(metrics)
-                raw = raw.filter(F.col("metric").isin(names))
-            pts = self._lww(raw).select("metric", "ts", "value")
+            lo, hi = from_interval, last
         else:
-            raw = self._read_resolution(
-                step, from_interval - span, until_interval - 1
+            lo, hi = from_interval - span, None
+        points = self._read_points()
+        scanned = points.where(_slice_where(step, lo, hi))
+        if metrics is None:
+            # every stored metric gets its series, all-NULL if it has no
+            # point in the window
+            spine = points.select("metric").distinct().selectExpr(
+                "metric", f"explode(sequence({from_interval}L, {last}L, {step}L)) AS ts"
             )
-            later = self._read_resolution(step, ts_from=until_interval)
-            if metrics is not None:
-                # push the metric predicate into the parquet scan (an In
-                # filter) instead of relying on the join to drop rows
-                names = [metrics] if isinstance(metrics, str) else list(metrics)
-                raw = raw.filter(F.col("metric").isin(names))
-                later = later.filter(F.col("metric").isin(names))
-            winners = self._ring_visible(self._lww(raw.unionByName(later)), archive)
-            pts = winners.filter(
-                (F.col("ts") >= from_interval) & (F.col("ts") < until_interval)
+        else:
+            names = [metrics] if isinstance(metrics, str) else list(metrics)
+            # an In filter pushed into the parquet scan
+            scanned = scanned.where(F.col("metric").isin(names))
+            spine = self.spark.range(len(names) * n_slots).select(
+                F.element_at(
+                    F.array(*[F.lit(n) for n in names]),
+                    F.expr(f"CAST(id DIV {n_slots} + 1 AS INT)"),
+                ).alias("metric"),
+                F.expr(f"{from_interval}L + (id % {n_slots}) * {step}L").alias("ts"),
             )
-        timeline = dense_timeline(
-            pts.select("metric", "ts", "value"),
-            keys_df,
-            from_interval,
-            until_interval,
-            step,
+        # one slot per window ts, or several when the window is wider
+        # than the ring
+        ts = "spine_ts" if n_slots * step <= span else (
+            f"explode(sequence(spine_ts, {last}L, {span}L))"
+        )
+        timeline = (
+            scanned.select("metric", "ts", "value", "wseq")
+            .unionByName(spine.selectExpr("metric", "ts", "CAST(NULL AS DOUBLE) AS value",
+                                          "-1L AS wseq"))
+            .groupBy("metric", F.expr(f"pmod(ts, {span}L)").alias("slot"))
+            .agg(
+                F.expr("max(struct(wseq, ts, value))").alias("w"),
+                F.expr("min(CASE WHEN wseq = -1 THEN ts END)").alias("spine_ts"),
+            )
+            .where("spine_ts IS NOT NULL")
+            .selectExpr("metric", f"{ts} AS ts", "w")
+            .selectExpr("metric", "ts", "CASE WHEN w.ts = ts THEN w.value END AS value")
         )
         return ((from_interval, until_interval, step), timeline)
 
