@@ -110,7 +110,9 @@ def test_absent_requested_metric_gets_null_rows(spark, tmp_path):
 def test_window_wider_than_the_ring_shows_only_slot_owners(spark, tmp_path):
     # archive 0 holds 12 five-second slots (a 60 s ring); a forced
     # archive_step reads it over 200 s, so window ts two spans apart share
-    # a slot and only the later write shows
+    # a slot and only the later write shows.  This pins the store's own
+    # rule: whisper itself returns only (until - from) / step mod points
+    # values for such a window, a known divergence.
     store = _store(spark, tmp_path, [(5, 12), (60, 10)])
     _write(spark, store, [("a", NOW - 150, 1)], now=NOW - 100)
     _write(spark, store, [("a", NOW - 30, 2), ("a", NOW - 25, 3)])

@@ -15,7 +15,12 @@ import pytest
 
 from whisper_spark import store as store_mod
 from whisper_spark.errors import CorruptWhisperFile
-from whisper_spark.sources.wsp import export_wsp, import_wsp
+from whisper_spark.sources.wsp import (
+    export_wsp,
+    import_wsp,
+    import_wsp_tree,
+    wsp_headers,
+)
 from whisper_spark.store import WhisperStore
 
 H = 1_699_999_200  # hour-aligned
@@ -222,18 +227,35 @@ def test_truncated_wsp_import_leaves_no_store(spark, tmp_path, monkeypatch):
         import_wsp(spark, tree, dst, root=tree)
     assert err.value.path.endswith("b.wsp")
     assert not os.path.exists(dst)
+    # the header is intact, so info() still reports it
+    hdr = {r["metric"]: r for r in wsp_headers(spark, tree, root=tree).collect()}
+    assert hdr["b"]["corrupt"].endswith("b.wsp") and hdr["a"]["corrupt"] is None
+    assert hdr["b"]["archives"] == hdr["a"]["archives"]
+    # the tree import raises too, and leaves nothing cached
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    with pytest.raises(CorruptWhisperFile):
+        import_wsp_tree(spark, tree, str(tmp_path / "tree_imported"), root=tree)
+    assert cache.numCachedEntries() == before
 
     with open(bad, "wb") as f:
         f.write(whole)
-    # a failing data write removes the store it created
+    # a failing data write removes what the import made, and only that
     def failing_append(self, df):
         raise OSError("disk full")
 
+    kept = tmp_path / "existing" / "points" / "keep.txt"
+    kept.parent.mkdir(parents=True)
+    kept.write_text("not the import's")
     with monkeypatch.context() as m:
         m.setattr(WhisperStore, "_append", failing_append)
         with pytest.raises(OSError, match="disk full"):
             import_wsp(spark, tree, dst, root=tree)
+        with pytest.raises(OSError, match="disk full"):
+            import_wsp(spark, tree, str(kept.parent.parent), root=tree)
     assert not os.path.exists(dst)
+    assert kept.read_text() == "not the import's"
+    assert sorted(os.listdir(kept.parent.parent)) == ["points"]
 
     store = import_wsp(spark, tree, dst, root=tree)
     assert sorted(tuple(r) for r in store.fetch(None, NOW - 120, NOW, now=NOW)[1]

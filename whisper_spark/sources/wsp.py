@@ -89,17 +89,12 @@ def _metric_name(path: str, root: str | None) -> str:
     return rel.replace(os.sep, ".")
 
 
-def _short_of_header(blob: bytes) -> bool:
-    """True when ``blob`` is shorter than its own header says: the
-    metadata, the archive table, or the last archive's points."""
-    need = METADATA_SIZE
-    if len(blob) >= need:
-        need += struct.unpack_from(METADATA_FMT, blob, 0)[3] * ARCHIVE_SIZE
-    if len(blob) >= need:
-        need = max([need] + [
-            off + pts * POINT_SIZE for off, _spp, pts in _parse_header(blob)[3]
-        ])
-    return len(blob) < need
+def _header_complete(blob: bytes) -> bool:
+    """True when ``blob`` holds its whole header: the metadata and the
+    archive table."""
+    return len(blob) >= METADATA_SIZE and len(blob) >= (
+        METADATA_SIZE + struct.unpack_from(METADATA_FMT, blob, 0)[3] * ARCHIVE_SIZE
+    )
 
 
 def _parse_header(blob: bytes):
@@ -429,21 +424,23 @@ def wsp_headers(
     listing: str | None = None,
 ) -> DataFrame:
     """One row per file: the parsed header (info() surface).  A file
-    shorter than its header says gets NULL header fields and its path in
-    ``corrupt`` (NULL for a sound file)."""
+    shorter than its header says has its path in ``corrupt`` (NULL for a
+    sound file); its header fields are NULL only when the header itself
+    is cut short."""
 
     def parse(item):
         p, blob = item
-        if _short_of_header(blob):
+        if not _header_complete(blob):
             return [(_metric_name(p, root), None, None, None, None, p)]
         aggr, max_ret, xff, archives = _parse_header(blob)
+        data_end = max((off + pts * POINT_SIZE for off, _s, pts in archives), default=0)
         return [(
             _metric_name(p, root),
             AGG_NUM_TO_METHOD.get(aggr, f"unknown({aggr})"),
             max_ret,
             float(xff),
             [(spp, pts) for _o, spp, pts in archives],
-            None,
+            p if len(blob) < data_end else None,
         )]
 
     files = _wsp_files_rdd(spark, path, listing)
@@ -485,7 +482,8 @@ def import_wsp(
     WhisperStore.
 
     A file shorter than its header says raises CorruptWhisperFile before
-    the store is created; if the data write fails, the store is removed
+    the store is created; if the data write fails, what this call made
+    (the directory, or ``policy.json`` and a new ``points/``) is removed
     again, so a fixed tree imports on retry."""
     from ..store import WhisperStore
 
@@ -497,7 +495,8 @@ def import_wsp(
             f"{path!r}; import one storage-schema subtree at a time"
         )
     cfg = configs[0]
-    created = not os.path.exists(dst_path)
+    dst_existed = os.path.exists(dst_path)
+    points_existed = os.path.exists(os.path.join(dst_path, "points"))
     store = WhisperStore.create(
         spark,
         dst_path,
@@ -508,13 +507,14 @@ def import_wsp(
     pts = read_wsp(spark, path, root).withColumn("wseq", F.lit(0).cast("long"))
     try:
         store._append(pts)
-    except BaseException:
-        # leave no store behind, so the import can be retried
-        if created:
+    except Exception:
+        # remove what this call made, so the import can be retried
+        if not dst_existed:
             shutil.rmtree(store.path, ignore_errors=True)
         else:
-            shutil.rmtree(store._points_path, ignore_errors=True)
             os.remove(os.path.join(store.path, "policy.json"))
+            if not points_existed:
+                shutil.rmtree(store._points_path, ignore_errors=True)
         raise
     return store
 
@@ -542,15 +542,6 @@ def import_wsp_tree(
     from ..store import WhisperStore
 
     hdrs = wsp_headers(spark, path, root).persist()
-    cfg_rows = _header_configs(hdrs)
-    cfgs = sorted(
-        cfg_rows,
-        key=lambda r: (
-            [(int(a["seconds_per_point"]), int(a["points"])) for a in r["archives"]],
-            r["aggregation_method"],
-            r["x_files_factor"],
-        ),
-    )
     pts = (
         read_wsp(spark, path, root)
         .withColumn("wseq", F.lit(0).cast("long"))
@@ -558,6 +549,14 @@ def import_wsp_tree(
     )
     out: dict[str, object] = {}
     try:
+        cfgs = sorted(
+            _header_configs(hdrs),
+            key=lambda r: (
+                [(int(a["seconds_per_point"]), int(a["points"])) for a in r["archives"]],
+                r["aggregation_method"],
+                r["x_files_factor"],
+            ),
+        )
         for i, cfg in enumerate(cfgs):
             archives = [
                 (int(a["seconds_per_point"]), int(a["points"]))

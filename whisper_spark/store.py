@@ -850,16 +850,20 @@ class WhisperStore:
         >= 0, so a slot holding only its spine row yields NULL).  Slots
         with no spine row are dropped.  A window is at most one span wide
         when the caller clamps it to the archive's retention, so each
-        window ts owns one slot; a wider window (a forced
-        ``archive_step``, or an unclamped ``until``) gives each of a
-        slot's window ts its value only if that ts won the slot."""
+        window ts owns one slot.
+
+        A wider window (a forced ``archive_step``, or an unclamped
+        ``until``) still gets one row per window ts, and a ts shows its
+        value only if it won its slot.  That is the store's rule, not the
+        reference's: whisper reads ``(until - from) / step mod points``
+        slots from the window start there and returns fewer values
+        (whisper.py:962-1034), a known divergence."""
         step = archive.seconds_per_point
         from_interval = (from_time - (from_time % step)) + step
         until_interval = (until_time - (until_time % step)) + step
         if from_interval == until_interval:
             until_interval += step
         span = archive.retention
-        n_slots = (until_interval - from_interval) // step
         last = until_interval - step
         # A window slot's colliders live one span away on either side: a
         # future-timestamped point evicts the point one span older, and a
@@ -879,24 +883,16 @@ class WhisperStore:
         if metrics is None:
             # every stored metric gets its series, all-NULL if it has no
             # point in the window
-            spine = points.select("metric").distinct().selectExpr(
-                "metric", f"explode(sequence({from_interval}L, {last}L, {step}L)) AS ts"
-            )
+            keys = points.select("metric").distinct()
         else:
             names = [metrics] if isinstance(metrics, str) else list(metrics)
             # an In filter pushed into the parquet scan
             scanned = scanned.where(F.col("metric").isin(names))
-            spine = self.spark.range(len(names) * n_slots).select(
-                F.element_at(
-                    F.array(*[F.lit(n) for n in names]),
-                    F.expr(f"CAST(id DIV {n_slots} + 1 AS INT)"),
-                ).alias("metric"),
-                F.expr(f"{from_interval}L + (id % {n_slots}) * {step}L").alias("ts"),
+            keys = self.spark.range(1).select(
+                F.explode(F.array(*[F.lit(n) for n in names])).alias("metric")
             )
-        # one slot per window ts, or several when the window is wider
-        # than the ring
-        ts = "spine_ts" if n_slots * step <= span else (
-            f"explode(sequence(spine_ts, {last}L, {span}L))"
+        spine = keys.selectExpr(
+            "metric", f"explode(sequence({from_interval}L, {last}L, {step}L)) AS ts"
         )
         timeline = (
             scanned.select("metric", "ts", "value", "wseq")
@@ -908,7 +904,9 @@ class WhisperStore:
                 F.expr("min(CASE WHEN wseq = -1 THEN ts END)").alias("spine_ts"),
             )
             .where("spine_ts IS NOT NULL")
-            .selectExpr("metric", f"{ts} AS ts", "w")
+            # the slot's window ts: one, or several when the window is
+            # wider than the ring
+            .selectExpr("metric", f"explode(sequence(spine_ts, {last}L, {span}L)) AS ts", "w")
             .selectExpr("metric", "ts", "CASE WHEN w.ts = ts THEN w.value END AS value")
         )
         return ((from_interval, until_interval, step), timeline)
