@@ -174,6 +174,17 @@ def test_embedding_neardup(spark):
     assert (0, 10000) in got
 
 
+def test_min_label_components_raises_past_the_round_cap(spark, monkeypatch):
+    # a path 0-1-...-7: each round carries the smallest label one hop
+    # further, so node 7 gets label 0 only in round 6
+    chain = spark.createDataFrame([(i, i + 1) for i in range(7)], "a long, b long")
+    labels = dedup.min_label_components(chain, "a", "b", "id")
+    assert {(r["id"], r["cluster_id"]) for r in labels.collect()} == {(i, 0) for i in range(8)}
+    monkeypatch.setattr(dedup, "MAX_LABEL_ROUNDS", 2)
+    with pytest.raises(RuntimeError, match="after 2 rounds"):
+        dedup.min_label_components(chain, "a", "b", "id")
+
+
 def test_ivf_recall_floor(spark):
     """ANN quality: IVF-probed top-5 (nprobe=4/16) keeps recall >= 0.5
     per query and >= 0.8 mean vs the exact cosine scan."""

@@ -10,6 +10,7 @@ interval holds 5 minute-slots, an hour holds 12 five-minute slots.
 
 import glob
 import os
+import re
 
 import pytest
 
@@ -156,6 +157,28 @@ def test_failure_inside_the_cascade_leaves_the_store_unchanged(
     assert _rows(store) == before
 
 
+def test_cascade_reads_ring_slots_without_a_per_ts_collapse(
+    spark, tmp_path, monkeypatch
+):
+    store = _store(spark, tmp_path, 0.0)
+    _write(spark, store, [("a", H + 2400, 1)])
+    plans, real = [], WhisperStore._cascade
+
+    def cascade(self, *args):
+        rolled = real(self, *args)
+        plans.extend(df._jdf.queryExecution().analyzed().toString() for df in rolled)
+        return rolled
+
+    monkeypatch.setattr(WhisperStore, "_cascade", cascade)
+    _write(spark, store, [("a", H + 2460, 2)])
+    assert len(plans) == 2
+    for plan in plans:
+        # the slot rule reads the stored and in-flight rows directly: no
+        # last-write-wins aggregate on (metric, resolution, ts) before it
+        assert re.search(r"Aggregate \[metric#\d+, pmod\(ts#\d+L?, ", plan), plan
+        assert not re.search(r"Aggregate \[metric#\d+, resolution#\d+L?, ts#\d+L?\]", plan)
+
+
 def test_one_append_per_batch(spark, tmp_path, monkeypatch):
     appends, batches = [], []
     real_append, real_write = WhisperStore._append, WhisperStore._write_assigned
@@ -276,3 +299,31 @@ def test_failed_create_leaves_no_policy(spark, tmp_path, monkeypatch):
     assert os.listdir(path) == []
     WhisperStore.create(spark, path, POLICY)
     assert WhisperStore.open(spark, path).archives[0].seconds_per_point == 60
+
+
+def test_failed_tree_import_leaves_no_store(spark, tmp_path, monkeypatch):
+    tree = str(tmp_path / "tree")
+    # two header configs: the tree imports as two stores
+    for name, xff, metric in (("src0", 0.0, "a"), ("src5", 0.5, "b")):
+        src = _store(spark, tmp_path, xff, name=name)
+        _write(spark, src, [(metric, NOW - 60, 1)])
+        assert export_wsp(src, tree) == 1
+    real, calls = WhisperStore._append, []
+
+    def append(self, df):
+        calls.append(1)
+        if len(calls) == 2:
+            raise OSError("disk full")
+        return real(self, df)
+
+    dst = tmp_path / "imported"
+    with monkeypatch.context() as m:
+        m.setattr(WhisperStore, "_append", append)
+        with pytest.raises(OSError, match="disk full"):
+            import_wsp_tree(spark, tree, str(dst), root=tree)
+    assert len(calls) == 2
+    assert not dst.exists() or os.listdir(dst) == []
+    stores = import_wsp_tree(spark, tree, str(dst), root=tree)
+    assert sorted(stores) == ["policy-0000", "policy-0001"]
+    assert sorted(r["metric"] for s in stores.values() for r in s.metrics().collect()) == [
+        "a", "b"]

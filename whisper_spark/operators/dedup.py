@@ -26,6 +26,9 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import explode_shingles, h60, h60_seeded, word_tokens
 
+#: propagation rounds :func:`min_label_components` runs before it gives up
+MAX_LABEL_ROUNDS = 64
+
 
 # --------------------------------------------------------------------- #
 # exact
@@ -460,7 +463,9 @@ def min_label_components(
     ``cluster_id`` is the smallest id in its component.
 
     Each round is one distributed join+aggregate; rounds ~ graph
-    diameter (small for dup clusters), at most 64.  The seed labels are
+    diameter (small for dup clusters).  If round ``MAX_LABEL_ROUNDS``
+    still changes a label, the components are unfinished and it raises
+    RuntimeError rather than return split clusters.  The seed labels are
     the first round's result, min(id, min neighbor id), straight off
     the edge list.  The edge list, the seed labels and every round's
     labels are ``localCheckpoint()``-ed: the plan does not grow with
@@ -474,7 +479,7 @@ def min_label_components(
         .agg(F.least(F.col(id_col), F.min(b_col)).alias("cluster_id"))
         .localCheckpoint()
     )
-    for _round in range(64):
+    for _round in range(MAX_LABEL_ROUNDS):
         prop = edges.join(
             labels, edges[a_col] == labels[id_col], "inner"
         ).select(F.col(b_col).alias(id_col), F.col("cluster_id"))
@@ -493,8 +498,10 @@ def min_label_components(
         )
         labels = new
         if changed == 0:
-            break
-    return labels
+            return labels
+    raise RuntimeError(
+        f"min_label_components: labels still changing after {MAX_LABEL_ROUNDS} rounds"
+    )
 
 
 def simhash_hamming_pairs(

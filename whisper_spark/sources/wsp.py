@@ -29,6 +29,8 @@ from __future__ import annotations
 import os
 import shutil
 import struct
+from contextlib import contextmanager
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -467,6 +469,41 @@ def _header_configs(hdrs: DataFrame) -> list:
     return rows
 
 
+@contextmanager
+def _undo_on_failure(spark: SparkSession):
+    """Yield ``create(path, cfg)``, which creates a store from a header
+    config.  If the block raises, what every such call made is removed,
+    so the import can be retried: the directory when it was not there
+    before, else ``policy.json`` and a ``points/`` that was not there."""
+    from ..store import WhisperStore
+
+    made = []
+
+    def create(path: str, cfg):
+        existed = (os.path.exists(path), os.path.exists(os.path.join(path, "points")))
+        store = WhisperStore.create(
+            spark,
+            path,
+            [(int(a["seconds_per_point"]), int(a["points"])) for a in cfg["archives"]],
+            x_files_factor=float(cfg["x_files_factor"]),
+            aggregation_method=cfg["aggregation_method"],
+        )
+        made.append((store, *existed))
+        return store
+
+    try:
+        yield create
+    except Exception:
+        for store, dir_existed, points_existed in made:
+            if not dir_existed:
+                shutil.rmtree(store.path, ignore_errors=True)
+            else:
+                os.remove(os.path.join(store.path, "policy.json"))
+                if not points_existed:
+                    shutil.rmtree(store._points_path, ignore_errors=True)
+        raise
+
+
 def import_wsp(
     spark: SparkSession, path: str, dst_path: str, root: str | None = None
 ):
@@ -485,8 +522,6 @@ def import_wsp(
     the store is created; if the data write fails, what this call made
     (the directory, or ``policy.json`` and a new ``points/``) is removed
     again, so a fixed tree imports on retry."""
-    from ..store import WhisperStore
-
     hdrs = wsp_headers(spark, path, root)
     configs = _header_configs(hdrs)
     if len(configs) != 1:
@@ -494,28 +529,9 @@ def import_wsp(
             f"import_wsp: {len(configs)} distinct retention configs under "
             f"{path!r}; import one storage-schema subtree at a time"
         )
-    cfg = configs[0]
-    dst_existed = os.path.exists(dst_path)
-    points_existed = os.path.exists(os.path.join(dst_path, "points"))
-    store = WhisperStore.create(
-        spark,
-        dst_path,
-        [(int(a["seconds_per_point"]), int(a["points"])) for a in cfg["archives"]],
-        x_files_factor=float(cfg["x_files_factor"]),
-        aggregation_method=cfg["aggregation_method"],
-    )
-    pts = read_wsp(spark, path, root).withColumn("wseq", F.lit(0).cast("long"))
-    try:
-        store._append(pts)
-    except Exception:
-        # remove what this call made, so the import can be retried
-        if not dst_existed:
-            shutil.rmtree(store.path, ignore_errors=True)
-        else:
-            os.remove(os.path.join(store.path, "policy.json"))
-            if not points_existed:
-                shutil.rmtree(store._points_path, ignore_errors=True)
-        raise
+    with _undo_on_failure(spark) as create:
+        store = create(dst_path, configs[0])
+        store._append(read_wsp(spark, path, root).withColumn("wseq", F.lit(0).cast("long")))
     return store
 
 
@@ -537,10 +553,9 @@ def import_wsp_tree(
     header config (deterministic order: sorted by archive list, method,
     xff).  The parsed point data and headers are PERSISTED so the tree
     is read and struct-unpacked once, not once per policy group; each
-    store's append left-semi-joins the group's metric set.
+    store's append left-semi-joins the group's metric set.  If a
+    group's import fails, no store this call made is left.
     """
-    from ..store import WhisperStore
-
     hdrs = wsp_headers(spark, path, root).persist()
     pts = (
         read_wsp(spark, path, root)
@@ -557,35 +572,26 @@ def import_wsp_tree(
                 r["x_files_factor"],
             ),
         )
-        for i, cfg in enumerate(cfgs):
-            archives = [
-                (int(a["seconds_per_point"]), int(a["points"]))
-                for a in cfg["archives"]
-            ]
-            name = f"policy-{i:04d}"
-            store = WhisperStore.create(
-                spark,
-                f"{dst_root}/{name}",
-                archives,
-                x_files_factor=float(cfg["x_files_factor"]),
-                aggregation_method=cfg["aggregation_method"],
-            )
-            arch_lit = F.array(
-                *[
-                    F.struct(
-                        F.lit(s).cast("long").alias("seconds_per_point"),
-                        F.lit(p).cast("long").alias("points"),
-                    )
-                    for (s, p) in archives
-                ]
-            )
-            members = hdrs.filter(
-                (F.col("aggregation_method") == cfg["aggregation_method"])
-                & (F.col("x_files_factor") == cfg["x_files_factor"])
-                & (F.col("archives") == arch_lit)
-            ).select("metric")
-            store._append(pts.join(members, "metric", "left_semi"))
-            out[name] = store
+        with _undo_on_failure(spark) as create:
+            for i, cfg in enumerate(cfgs):
+                name = f"policy-{i:04d}"
+                store = create(f"{dst_root}/{name}", cfg)
+                arch_lit = F.array(
+                    *[
+                        F.struct(
+                            F.lit(a.seconds_per_point).cast("long").alias("seconds_per_point"),
+                            F.lit(a.points).cast("long").alias("points"),
+                        )
+                        for a in store.archives
+                    ]
+                )
+                members = hdrs.filter(
+                    (F.col("aggregation_method") == cfg["aggregation_method"])
+                    & (F.col("x_files_factor") == cfg["x_files_factor"])
+                    & (F.col("archives") == arch_lit)
+                ).select("metric")
+                store._append(pts.join(members, "metric", "left_semi"))
+                out[name] = store
     finally:
         pts.unpersist()
         hdrs.unpersist()
@@ -597,8 +603,8 @@ def export_wsp(store, out_dir: str, tree: bool = True) -> int:
     (graphite tree layout ``a/b/c.wsp`` when ``tree``, else flat
     ``a.b.c.wsp``).  Returns the number of files written.
 
-    Distribution: live rows (LWW + ring visibility, exactly what the
-    store's own fetch would see) repartition by metric, and each task
+    Distribution: live rows (the store's slot rule, ``_ring_visible``,
+    exactly what its own fetch would see) repartition by metric, and each task
     packs its metrics' files independently.  ``out_dir`` must be
     reachable from executors (shared storage on a cluster; any local
     path on local[*])."""
@@ -610,18 +616,12 @@ def export_wsp(store, out_dir: str, tree: bool = True) -> int:
         (int(a["secondsPerPoint"]), int(a["points"])) for a in info["archives"]
     ]
 
-    lww = store._lww(store._read_points())
-    per_archive = []
-    for spec in store.archives:
-        vis = store._ring_visible(
-            lww.filter(F.col("resolution") == spec.seconds_per_point), spec
-        )
-        per_archive.append(
-            vis.withColumn("resolution", F.lit(spec.seconds_per_point))
-        )
-    rows = per_archive[0]
-    for d in per_archive[1:]:
-        rows = rows.unionByName(d)
+    points = store._read_points()
+    rows = reduce(DataFrame.unionByName, [
+        store._ring_visible(points.filter(F.col("resolution") == spec.seconds_per_point), spec)
+        .withColumn("resolution", F.lit(spec.seconds_per_point))
+        for spec in store.archives
+    ])
 
     os.makedirs(out_dir, exist_ok=True)
 

@@ -12,24 +12,25 @@ wseq LONG`` with partition columns ``resolution LONG, tb LONG``.
 
 Design decisions (the 100 TB story):
 
-* **Append-only writes + read-time last-write-wins.**  Whisper overwrites
+* **Append-only writes + one read-time slot rule.**  Whisper overwrites
   ring slots in place; a distributed store that rewrote partitions per
   update would be unusable at scale.  Instead every batch appends rows
-  stamped with a monotonically increasing ``wseq`` (batch id); readers
-  collapse duplicates with ``max_by(value, wseq)`` — a plain aggregate
-  with map-side partial combine, not a window sort.  ``compact()``
-  amortizes the dedup (LSM compaction), ``delete_expired()`` replaces the
-  ring-buffer's implicit retention.
+  stamped with a monotonically increasing ``wseq`` (batch id), and
+  readers apply whisper's slot rule (``_ring_visible``): rows whose ts
+  share a ring slot (``pmod(ts, span)``) are reduced to the one with the
+  largest ``(wseq, ts)`` — last-write-wins and ring eviction (reference:
+  whisper.py:842-856) in one plain aggregate with map-side partial
+  combine, not a window sort.  ``compact()`` amortizes the dedup (LSM
+  compaction), ``delete_expired()`` replaces the ring-buffer's implicit
+  retention.
 * **Partition pruning replaces O(1) ring addressing** (reference:
   whisper.py:721-724,992-1001).  ``resolution`` is a partition column, and
   ``tb = ts // (step * TB_SLOTS)`` buckets time so a fetch reads only the
   slices covering its range, regardless of total table size.
-* **A fetch is one aggregate.**  The scanned rows, unioned with a spine
-  row ``(metric, ts, NULL, wseq -1)`` per requested series and window
-  slot, are grouped on the ring slot ``(metric, pmod(ts, span))`` and
-  reduced with ``max(struct(wseq, ts, value))``: last-write-wins, ring
-  eviction (reference: whisper.py:842-856) and gap fill in one
-  ``groupBy`` — one exchange, no join, no broadcast.  A window clamped
+* **A fetch is one aggregate.**  The slot rule runs over the scanned
+  rows unioned with a spine row ``(metric, ts, NULL, wseq -1)`` per
+  requested series and window slot: a slot whose only row is its spine
+  row is a gap.  One exchange, no join, no broadcast.  A window clamped
   to the archive's retention is at most one span wide, so each window ts
   owns exactly one slot and the slot's winner decides that ts alone.
 * **Rollups are set-based, and a batch commits once.**  Whisper
@@ -81,7 +82,7 @@ import os
 import shutil
 import uuid
 from contextlib import ExitStack, contextmanager
-from functools import reduce
+from functools import partial, reduce
 from typing import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -357,35 +358,27 @@ class WhisperStore:
         df = self.spark.read.schema(POINTS_SCHEMA).parquet(self._points_path)
         return df.select(*[f.name for f in POINTS_SCHEMA.fields])
 
-    def _read_resolution(
-        self, step: int, ts_from: int | None = None, ts_until: int | None = None
-    ) -> DataFrame:
-        """Read one archive's slice with partition pruning on
-        (resolution, tb) and a ts range filter (the parquet scan then
-        prunes row groups by min/max stats)."""
-        return self._read_points().where(_slice_where(step, ts_from, ts_until))
-
     def _lww(self, df: DataFrame) -> DataFrame:
-        """Collapse multi-batch duplicates: latest batch wins."""
+        """Collapse multi-batch duplicates per (metric, resolution, ts):
+        latest batch wins.  For the views and compaction, which keep
+        every ts; readers use ``_ring_visible``."""
         return last_write_wins(df, ["metric", "resolution"], order="wseq")
 
-    def _ring_visible(self, lww_df: DataFrame, archive: ArchiveSpec) -> DataFrame:
-        """Apply the reference's ring-buffer eviction to LWW'd rows: the
-        physical slot for timestamp T is shared by every T' ≡ T (mod
-        archive span), and the LATEST write wins it — later batch first,
-        then larger timestamp (the in-batch chronological write order,
-        reference: whisper.py:842-856).  Rows losing their slot are
-        invisible, exactly like a stale stored-timestamp in the ring
-        (whisper.py:1026-1031).  Returns (metric, ts, value)."""
-        span = archive.retention
+    def _ring_visible(self, rows: DataFrame, archive: ArchiveSpec) -> DataFrame:
+        """Whisper's slot rule, the store's only statement of it: the
+        rows (metric, ts, value, wseq) of one archive whose ts are
+        congruent mod the archive span share a ring slot, and the slot
+        shows the row with the largest ``(wseq, ts)`` — the later batch,
+        then the larger ts (the in-batch chronological write order,
+        reference: whisper.py:842-856).  Every other row is invisible,
+        like a stale stored timestamp (whisper.py:1026-1031).  The winner
+        is also the largest-wseq row for its own ts, so the rule is
+        last-write-wins as well and needs no per-ts collapse first.
+        Returns one (metric, ts, value) row per occupied slot."""
         return (
-            lww_df.groupBy("metric", (F.col("ts") % span).alias("_slot"))
-            .agg(
-                F.max(
-                    F.struct(F.col("wseq"), F.col("ts"), F.col("value").alias("v"))
-                ).alias("w")
-            )
-            .select("metric", F.col("w.ts").alias("ts"), F.col("w.v").alias("value"))
+            rows.groupBy("metric", F.expr(f"pmod(ts, {archive.retention}L)").alias("slot"))
+            .agg(F.expr("max(struct(wseq, ts, value))").alias("w"))
+            .select("metric", "w.ts", "w.value")
         )
 
     def _write_points(self, df: DataFrame, path: str, mode: str) -> None:
@@ -576,8 +569,9 @@ class WhisperStore:
         rows plus the batch's in-flight rows at that resolution (its
         direct writes, and level j-1's rollup where no direct write took
         the slot).  Those carry ``wseq = batch``, the highest in the
-        store, so LWW and ring eviction see what they would see after an
-        append.
+        store, so the slot rule (``_ring_visible``: per ring slot, the
+        largest ``(wseq, ts)`` wins, which is last-write-wins and ring
+        eviction at once) sees what it would see after an append.
         """
         archives = self.archives
         policy = self._policy()
@@ -628,7 +622,8 @@ class WhisperStore:
             src_rows = in_flight.filter(F.col("ts") >= ts_from)
             if stored:
                 src_rows = (
-                    self._read_resolution(higher.seconds_per_point, ts_from=ts_from)
+                    self._read_points()
+                    .where(_slice_where(higher.seconds_per_point, ts_from, None))
                     .select(*cols)
                     .unionByName(src_rows)
                 )
@@ -636,7 +631,7 @@ class WhisperStore:
             # reference happens AFTER physical slot writes, so a point
             # evicted by a colliding (mod span) later write must not feed
             # the rollup.
-            src_data = self._ring_visible(self._lww(src_rows), higher).withColumn(
+            src_data = self._ring_visible(src_rows, higher).withColumn(
                 "lts", align_ts(F.col("ts"), lower.seconds_per_point)
             )
             src_in = src_data.join(
@@ -838,19 +833,15 @@ class WhisperStore:
         whisper.py:962-976).  No clamping — callers clamp (merge/diff
         deliberately fetch archives over their full retention).
 
-        One aggregate builds the whole timeline.  Its input is the
-        scanned rows plus a spine row ``(metric, ts, NULL, wseq -1)`` per
-        requested series and window slot; it is keyed on the ring slot
-        ``(metric, pmod(ts, span))`` and takes ``max(struct(wseq, ts,
-        value))``.  That one ``groupBy`` is last-write-wins (the higher
-        batch wins a ts), ring eviction (a later batch, then the larger
-        ts, wins the slot — the reference's physical overwrite,
-        whisper.py:842-856; a loser is invisible like a stale stored
-        timestamp, whisper.py:1026-1031) and gap fill (stored ``wseq`` is
-        >= 0, so a slot holding only its spine row yields NULL).  Slots
-        with no spine row are dropped.  A window is at most one span wide
-        when the caller clamps it to the archive's retention, so each
-        window ts owns one slot.
+        One aggregate builds the whole timeline: the slot rule
+        (``_ring_visible``) over the scanned rows plus a spine row
+        ``(metric, ts, NULL, wseq -1)`` per requested series and window
+        slot.  Stored ``wseq`` is >= 0, so a slot whose winner is its
+        spine row is a gap.  Each slot owner then maps to its first window
+        ts, ``from + pmod(ts - from, span)``; a slot with none is outside
+        the window and dropped.  A window is at most one span wide when
+        the caller clamps it to the archive's retention, so each window
+        ts owns one slot.
 
         A wider window (a forced ``archive_step``, or an unclamped
         ``until``) still gets one row per window ts, and a ts shows its
@@ -894,20 +885,19 @@ class WhisperStore:
         spine = keys.selectExpr(
             "metric", f"explode(sequence({from_interval}L, {last}L, {step}L)) AS ts"
         )
+        rows = scanned.select("metric", "ts", "value", "wseq").unionByName(
+            spine.selectExpr("metric", "ts", "CAST(NULL AS DOUBLE) AS value", "-1L AS wseq")
+        )
+        # the owner's first window ts; the slot holds a spine row iff
+        # that is in the window and step-aligned
+        first = f"{from_interval}L + pmod(ts - {from_interval}L, {span}L)"
         timeline = (
-            scanned.select("metric", "ts", "value", "wseq")
-            .unionByName(spine.selectExpr("metric", "ts", "CAST(NULL AS DOUBLE) AS value",
-                                          "-1L AS wseq"))
-            .groupBy("metric", F.expr(f"pmod(ts, {span}L)").alias("slot"))
-            .agg(
-                F.expr("max(struct(wseq, ts, value))").alias("w"),
-                F.expr("min(CASE WHEN wseq = -1 THEN ts END)").alias("spine_ts"),
-            )
-            .where("spine_ts IS NOT NULL")
-            # the slot's window ts: one, or several when the window is
-            # wider than the ring
-            .selectExpr("metric", f"explode(sequence(spine_ts, {last}L, {span}L)) AS ts", "w")
-            .selectExpr("metric", "ts", "CASE WHEN w.ts = ts THEN w.value END AS value")
+            self._ring_visible(rows, archive)
+            .where(f"{first} <= {last}L AND pmod({first}, {step}L) = 0")
+            # several window ts when the window is wider than the ring
+            .selectExpr("metric", f"explode(sequence({first}, {last}L, {span}L)) AS wts",
+                        "ts", "value")
+            .selectExpr("metric", "wts AS ts", "CASE WHEN ts = wts THEN value END AS value")
         )
         return ((from_interval, until_interval, step), timeline)
 
@@ -941,36 +931,7 @@ class WhisperStore:
         ``(frame, step)`` where frame is the unordered
         (metric, ts, value) result DataFrame — no driver collect.
         """
-        import time as _time
-
-        from .render import (
-            consolidate,
-            consolidation_method,
-            evaluate_target,
-            parse_at_time,
-        )
-
-        now = now or int(_time.time())
-        until = parse_at_time(until_time, now) if until_time is not None else now
-        frm = (
-            parse_at_time(from_time, now)
-            if from_time is not None
-            else until - 86400
-        )
-        fetched = self.fetch(None, from_time=frm, until_time=until, now=now)
-        if fetched is None:
-            return None
-        (ti, df) = fetched
-        step = ti[2]
-        out = evaluate_target(
-            df.select("metric", "ts", "value"), target, step=step
-        )
-        if max_datapoints:
-            from .render import parse_target
-
-            how = consolidation_method(parse_target(target))
-            out, step = consolidate(out, max_datapoints, step, how)
-        return (out, step)
+        return _render(self.fetch, target, from_time, until_time, now, max_datapoints)
 
     def metrics(self) -> DataFrame:
         """Distinct metric names — the namespace listing (whisper's
@@ -1643,6 +1604,38 @@ def fetch_federated(
     return (ti_out, merged)
 
 
+def _render(fetch, target, from_time, until_time, now, max_datapoints):
+    """The render pipeline of ``WhisperStore.render`` and
+    :func:`render_federated`: at-style times, one ``fetch`` (with
+    ``WhisperStore.fetch``'s signature) of every series, the target over
+    its step, then maxDataPoints consolidation with the target's
+    consolidateBy method.
+    Returns ``(frame, step)``, or None when ``fetch`` does."""
+    import time as _time
+
+    from .render import (
+        consolidate,
+        consolidation_method,
+        evaluate_target,
+        parse_at_time,
+        parse_target,
+    )
+
+    now = now or int(_time.time())
+    until = parse_at_time(until_time, now) if until_time is not None else now
+    frm = parse_at_time(from_time, now) if from_time is not None else until - 86400
+    fetched = fetch(None, from_time=frm, until_time=until, now=now)
+    if fetched is None:
+        return None
+    (ti, df) = fetched
+    step = ti[2]
+    out = evaluate_target(df.select("metric", "ts", "value"), target, step=step)
+    if max_datapoints:
+        how = consolidation_method(parse_target(target))
+        out, step = consolidate(out, max_datapoints, step, how)
+    return (out, step)
+
+
 def render_federated(
     stores,
     target: str,
@@ -1656,31 +1649,6 @@ def render_federated(
     timeline fed through the target language, with the same at-style
     times and maxDataPoints handling as ``WhisperStore.render``.
     Returns ``(frame, step)`` or None."""
-    import time as _time
-
-    from .render import (
-        consolidate,
-        consolidation_method,
-        evaluate_target,
-        parse_at_time,
-        parse_target,
+    return _render(
+        partial(fetch_federated, stores), target, from_time, until_time, now, max_datapoints
     )
-
-    now = now or int(_time.time())
-    until = parse_at_time(until_time, now) if until_time is not None else now
-    frm = (
-        parse_at_time(from_time, now) if from_time is not None
-        else until - 86400
-    )
-    res = fetch_federated(
-        stores, None, from_time=frm, until_time=until, now=now
-    )
-    if res is None:
-        return None
-    (ti, df) = res
-    step = ti[2]
-    out = evaluate_target(df.select("metric", "ts", "value"), target, step=step)
-    if max_datapoints:
-        how = consolidation_method(parse_target(target))
-        out, step = consolidate(out, max_datapoints, step, how)
-    return (out, step)
