@@ -56,6 +56,17 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(skip)
 
 
+def pytest_report_header(config):
+    from tests._reference import HAVE_REFERENCE, REFERENCE_DIR
+
+    if HAVE_REFERENCE:
+        return f"reference whisper library: found at {REFERENCE_DIR}"
+    return (
+        f"reference whisper library: NOT found at {REFERENCE_DIR}; "
+        "the differential-parity tests are skipped, not passed"
+    )
+
+
 def pytest_terminal_summary(terminalreporter):
     if not _full_tier():
         terminalreporter.write_line(

@@ -8,14 +8,14 @@ archives, plus the namespace listing and a store-wide fetch.
 
 import math
 import random
-import sys
 
 import pytest
 
-sys.path.insert(0, "/root/reference")
-import whisper as refwhisper  # noqa: E402
+from tests._reference import refwhisper, requires_reference
 
-from whisper_spark.store import INPUT_SCHEMA, WhisperStore  # noqa: E402
+from whisper_spark.store import INPUT_SCHEMA, WhisperStore
+
+pytestmark = requires_reference
 
 NOW = 1700000000
 ARCHIVES = [(5, 120), (60, 60), (300, 48)]

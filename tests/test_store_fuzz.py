@@ -7,9 +7,7 @@ within-batch dedup, the xff gate, and the cascade early-stop on a
 two-level policy.  Examples are capped (Spark jobs are ~seconds each).
 """
 
-import importlib.util
 import math
-import sys
 import types
 from unittest import mock
 
@@ -17,24 +15,12 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-sys.path.insert(0, "/root/reference")
-import whisper as refwhisper  # noqa: E402  (differential oracle)
+from tests._reference import load_ref_script, refwhisper, requires_reference
 
-from whisper_spark.store import WhisperStore  # noqa: E402
+from whisper_spark.store import WhisperStore
 
 NOW = 1700000000
 
-
-def _load_ref_script(name):
-    spec = importlib.util.spec_from_file_location(
-        name.replace("-", "_"), f"/root/reference/bin/{name}.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-_ref_fill = _load_ref_script("whisper-fill")
 
 # The reference fill reads wall-clock time internally; pin it to NOW in the
 # reference modules' namespaces only (not globally — Spark threads need
@@ -64,6 +50,7 @@ def fuzz_tmp(tmp_path_factory):
 _counter = [0]
 
 
+@requires_reference
 @settings(
     derandomize=True,
     max_examples=6,
@@ -112,6 +99,7 @@ def test_fuzz_merge_parity(spark, fuzz_tmp, pts_src, pts_dst, window):
                 assert g == pytest.approx(r, rel=1e-12), f"slot {i}: {r} vs {g}"
 
 
+@requires_reference
 @settings(
     derandomize=True,
     max_examples=6,
@@ -140,10 +128,11 @@ def test_fuzz_fill_parity(spark, fuzz_tmp, pts_src, pts_dst):
         store.update_many(list(points), now=NOW, metric="m")
         names[nm], stores[nm] = wsp, store
 
+    ref_fill = load_ref_script("whisper-fill")
     with mock.patch.object(refwhisper, "time", _FAKE_TIME), mock.patch.object(
-        _ref_fill, "time", _FAKE_TIME
+        ref_fill, "time", _FAKE_TIME
     ):
-        _ref_fill.fill_archives(names["src"], names["dst"], NOW)
+        ref_fill.fill_archives(names["src"], names["dst"], NOW)
     stores["dst"].fill_from(stores["src"], start_from=NOW, now=NOW)
 
     for (f, u) in [(NOW - 299, NOW), (NOW - 1799, NOW)]:
@@ -159,6 +148,7 @@ def test_fuzz_fill_parity(spark, fuzz_tmp, pts_src, pts_dst):
                 assert g == pytest.approx(r, rel=1e-12), f"slot {i}: {r} vs {g}"
 
 
+@requires_reference
 @settings(
     derandomize=True,
     max_examples=5,
@@ -250,6 +240,7 @@ def test_fuzz_update_sequence_parity(spark, fuzz_tmp, ops, agg):
                 assert g == pytest.approx(r, rel=1e-12), f"slot {i}: {r} vs {g}"
 
 
+@requires_reference
 @settings(
     derandomize=True,
     max_examples=6,
@@ -357,6 +348,7 @@ def _ref_resize_aggregate(old_wsp, new_wsp, new_archives, xff, agg, now):
         refwhisper.update_many(new_wsp, newdatapoints, now=now)
 
 
+@requires_reference
 @settings(
     derandomize=True,
     max_examples=6,
@@ -424,6 +416,7 @@ def _ref_resize_default(old_wsp, new_wsp, new_archives, xff, agg, now):
             refwhisper.update_many(new_wsp, dp, now=now)
 
 
+@requires_reference
 @settings(
     derandomize=True,
     max_examples=6,
@@ -472,6 +465,7 @@ def test_fuzz_resize_parity(spark, fuzz_tmp, pts, new_archives, agg):
                 assert g == pytest.approx(r, rel=1e-12), f"slot {i}: {r} vs {g}"
 
 
+@requires_reference
 @settings(
     derandomize=True,
     max_examples=12,
@@ -624,6 +618,7 @@ _POLICIES = [
 ]
 
 
+@requires_reference
 @settings(
     derandomize=True,
     max_examples=4,

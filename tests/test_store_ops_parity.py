@@ -7,14 +7,12 @@ scripts/functions where importable.
 """
 
 import math
-import sys
 
 import pytest
 
-sys.path.insert(0, "/root/reference")
-import whisper as refwhisper  # noqa: E402  (test oracle only)
+from tests._reference import refwhisper, requires_reference
 
-from whisper_spark.store import WhisperStore  # noqa: E402
+from whisper_spark.store import WhisperStore
 
 NOW = 1700000000
 
@@ -67,6 +65,7 @@ def _sample_points(k=40, base=NOW - 100):
     return [(base + i * 2, round(rng.uniform(-5, 10), 2)) for i in range(k)]
 
 
+@requires_reference
 def test_merge_overwrites_dst(spark, tmp_path):
     src_wsp, src_store = mk_pair(spark, tmp_path, "src", ARCHIVES, xff=0.0)
     dst_wsp, dst_store = mk_pair(spark, tmp_path, "dst", ARCHIVES, xff=0.0)
@@ -82,6 +81,7 @@ def test_merge_overwrites_dst(spark, tmp_path):
     assert_series_equal(ref, got, "merged minute archive")
 
 
+@requires_reference
 def test_merge_with_window(spark, tmp_path):
     src_wsp, src_store = mk_pair(spark, tmp_path, "srcw", ARCHIVES, xff=0.0)
     dst_wsp, dst_store = mk_pair(spark, tmp_path, "dstw", ARCHIVES, xff=0.0)
@@ -92,6 +92,7 @@ def test_merge_with_window(spark, tmp_path):
     assert_series_equal(ref, got, "windowed merge")
 
 
+@requires_reference
 def test_merge_mismatched_archives_raises(spark, tmp_path):
     _, a = mk_pair(spark, tmp_path, "ma", ARCHIVES)
     _, b = mk_pair(spark, tmp_path, "mb", [(100, 10)])
@@ -99,6 +100,7 @@ def test_merge_mismatched_archives_raises(spark, tmp_path):
         a.merge_into(b, now=NOW)
 
 
+@requires_reference
 def test_diff_matches_reference(spark, tmp_path):
     a_wsp, a_store = mk_pair(spark, tmp_path, "da", ARCHIVES, xff=0.0)
     b_wsp, b_store = mk_pair(spark, tmp_path, "db", ARCHIVES, xff=0.0)
@@ -128,6 +130,7 @@ def test_diff_matches_reference(spark, tmp_path):
                 assert gvb == pytest.approx(vb)
 
 
+@requires_reference
 def test_diff_ignore_empty(spark, tmp_path):
     a_wsp, a_store = mk_pair(spark, tmp_path, "ia", ARCHIVES, xff=0.0)
     b_wsp, b_store = mk_pair(spark, tmp_path, "ib", ARCHIVES, xff=0.0)
@@ -143,6 +146,7 @@ def test_diff_ignore_empty(spark, tmp_path):
         assert gdf.count() == len(rdiffs)
 
 
+@requires_reference
 def test_diff_nan_is_different(spark, tmp_path):
     """NaN vs NaN must be reported as a difference (Python != semantics in
     the reference, test_whisper.py:454-478) despite Spark's NaN==NaN."""
@@ -156,6 +160,7 @@ def test_diff_nan_is_different(spark, tmp_path):
     assert got[0][1].count() == len(ref[0][1]) == 1  # the NaN slot differs
 
 
+@requires_reference
 def test_resize_default_and_aggregate(spark, tmp_path):
     """R5-style resize: 60s:2880 -> (60s:1440, 300s:576) with --aggregate,
     then back up (reference test_whisper.py:815-866)."""
@@ -187,6 +192,7 @@ def test_resize_default_and_aggregate(spark, tmp_path):
     assert abs(sample * 5 - round(sample * 5)) < 1e-6
 
 
+@requires_reference
 def test_resize_in_place_swap(spark, tmp_path):
     """Default-path resize replays archives finest-first; the coarse
     archive's recent rollup values then land on step-aligned slots of the
@@ -209,6 +215,7 @@ def test_resize_in_place_swap(spark, tmp_path):
             assert v is not None
 
 
+@requires_reference
 def test_fill_only_gaps(spark, tmp_path):
     """fill: dst keeps its data, gaps (>=2 slots) take src values
     (reference bin/whisper-fill.py semantics)."""

@@ -10,18 +10,18 @@ Scenario sources: FIXTURES.md / reference test_whisper.py:555-707,795-813.
 
 import math
 import os
-import sys
 
 import pytest
 
-sys.path.insert(0, "/root/reference")
-import whisper as refwhisper  # noqa: E402  (oracle only; see module docstring)
+from tests._reference import refwhisper, requires_reference
 
-from whisper_spark.store import WhisperStore  # noqa: E402
-from whisper_spark.errors import (  # noqa: E402
+from whisper_spark.store import WhisperStore
+from whisper_spark.errors import (
     InvalidTimeInterval,
     TimestampNotCovered,
 )
+
+pytestmark = requires_reference
 
 NOW = 1700000000  # pinned; whisper semantics depend on `now` everywhere
 

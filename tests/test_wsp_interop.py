@@ -5,21 +5,19 @@ files read back byte-semantically through the reference's own fetch.
 
 import math
 import os
-import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/reference")
-import whisper as refwhisper  # noqa: E402  (test oracle only)
+from tests._reference import refwhisper, requires_reference
 
-from whisper_spark.sources.wsp import (  # noqa: E402
+from whisper_spark.sources.wsp import (
     export_wsp,
     import_wsp,
     read_wsp,
     wsp_headers,
 )
-from whisper_spark.store import WhisperStore  # noqa: E402
+from whisper_spark.store import WhisperStore
 
 NOW = 1700000000
 ARCHIVES = [(60, 30), (300, 24)]
@@ -39,6 +37,7 @@ def _mk_ref_tree(tmp_path, metrics=("servers.web1.cpu", "servers.db.cpu")):
     return str(root)
 
 
+@requires_reference
 def test_read_wsp_matches_reference_slots(spark, tmp_path):
     root = _mk_ref_tree(tmp_path)
     df = read_wsp(spark, os.path.join(root, "servers", "*", "*.wsp"), root=root)
@@ -60,6 +59,7 @@ def test_read_wsp_matches_reference_slots(spark, tmp_path):
     ]
 
 
+@requires_reference
 def test_import_wsp_fetch_parity(spark, tmp_path):
     root = _mk_ref_tree(tmp_path)
     store = import_wsp(spark, root + "/servers/*/*.wsp",
@@ -81,6 +81,7 @@ def test_import_wsp_fetch_parity(spark, tmp_path):
                     assert g == pytest.approx(r), (m, i, r, g)
 
 
+@requires_reference
 def test_export_wsp_reference_reads_it_back(spark, tmp_path):
     store = WhisperStore.create(
         spark, str(tmp_path / "src"), ARCHIVES, x_files_factor=0.5,
@@ -146,6 +147,7 @@ def test_wsp_round_trip_preserves_live_rows(spark, tmp_path):
     assert b.count() <= a.count()
 
 
+@requires_reference
 @pytest.mark.parametrize(
     "archives,agg,xff,n_pts,stride",
     [
@@ -195,6 +197,7 @@ def test_wsp_export_parity_random_configs(
                 assert r == pytest.approx(g), (spp, i, r, g)
 
 
+@requires_reference
 @pytest.mark.parametrize(
     "archives,agg,n_pts,stride",
     [
@@ -242,6 +245,7 @@ def test_wsp_import_parity_random_configs(
                 assert g == pytest.approx(r), (spp, i, r, g)
 
 
+@requires_reference
 def test_cli_import_export_round_trip(spark, tmp_path, capsys):
     from whisper_spark import cli
 
@@ -319,6 +323,7 @@ def test_is_posix_path_respects_default_fs(spark):
         conf.set("fs.defaultFS", orig)
 
 
+@requires_reference
 def test_glob_contract_matches_binary_files(spark, tmp_path):
     """binaryFiles-parity for the POSIX listing fast path (review
     finding, round 9): an existing-but-empty dir is an EMPTY scan,
@@ -365,6 +370,7 @@ def test_glob_contract_matches_binary_files(spark, tmp_path):
     assert [r["metric"] for r in hdrs2.collect()] == ["a.m1"]
 
 
+@requires_reference
 def test_import_wsp_tree_two_policies_round_trip(spark, tmp_path):
     """A heterogeneous tree (two storage-schemas policies) migrates in
     one import_wsp_tree call: files auto-group by header config, each
@@ -440,6 +446,7 @@ def test_import_wsp_tree_two_policies_round_trip(spark, tmp_path):
             assert ov == nv, m
 
 
+@requires_reference
 def test_import_wsp_tree_then_federated_read(spark, tmp_path):
     """The full migration story: heterogeneous tree -> import_wsp_tree
     -> fetch_federated serves the policy stores as ONE namespace,
@@ -526,6 +533,7 @@ def test_shard_patterns_units(tmp_path):
     assert str(root / "a") in pats and str(root / "top.wsp") in pats
 
 
+@requires_reference
 def test_distributed_listing_matches_driver(spark, tmp_path):
     """Executor-side sharded listing is row-identical to the driver
     glob on every pattern shape, honors the empty-scan and no-match
@@ -573,6 +581,7 @@ def test_distributed_listing_matches_driver(spark, tmp_path):
         read_wsp(spark, str(root), listing="bogus").count()
 
 
+@requires_reference
 def test_listing_auto_cap_switch(spark, tmp_path, monkeypatch):
     """Auto mode lists driver-side until the file cap, then abandons
     the partial listing and re-lists distributed — rows identical
@@ -603,6 +612,7 @@ def test_listing_auto_cap_switch(spark, tmp_path, monkeypatch):
         spark, pat, root=str(root), listing="driver").collect())) == drv
 
 
+@requires_reference
 def test_fleet_migrate_bench_query_matches_oracle(spark):
     """ws_wsp_fleet_migrate (the bench-flagged migration composite:
     synthesize reference-format tree -> read_wsp import -> 5m rollup
