@@ -107,55 +107,57 @@ def test_store_fetch_prunes_partitions(spark, tmp_path):
     assert "ts" in pushed
 
 
-def _pushed_ts_bounds(plan):
-    """(lower, upper) ts bounds pushed into the one parquet scan; None
-    for a side with no bound."""
-    import re
-
-    pushed = plan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
-    lo = re.findall(r"GreaterThanOrEqual\(ts,(-?\d+)\)", pushed)
-    hi = re.findall(r"LessThanOrEqual\(ts,(-?\d+)\)", pushed)
-    return (int(lo[0]) if lo else None, int(hi[0]) if hi else None)
+def _pushed_filters(plan):
+    """The filters pushed into the one parquet scan."""
+    return plan.split("PushedFilters: [", 1)[1].split("], ", 1)[0]
 
 
-def test_fetch_skips_collision_pass_when_metadata_proves_clean(spark, tmp_path):
-    """Ring-eviction emulation must short-circuit when partition metadata
-    proves no collider rows exist: the scan reads the window alone, not
-    one span back and the tail.  A store with an actual future-tail
-    bucket must still read both.  Either way the fetch is one parquet
-    scan and one aggregate: one Exchange, no broadcast."""
+def test_fetch_reads_the_window_and_its_ring_colliders(spark, tmp_path):
+    """The fetch scan reads one predicate, whatever the store holds: the
+    window, every later ts, and the window one span back, skipping the
+    rows between ``last - span`` and ``from``, which share no ring slot
+    with the window.  A store with only in-window points and one with a
+    future point get the same pushed ts bounds, and either way the
+    fetch is one parquet scan and one aggregate: one Exchange, no
+    broadcast."""
     from whisper_spark.store import WhisperStore
 
     NOW = 1700000000
     SPAN = 5 * 60
     prev = spark.conf.get("spark.sql.maxMetadataStringLength")
     spark.conf.set("spark.sql.maxMetadataStringLength", "10000")  # untruncated filters
-    try:
-        # archive tb width = 5*TB_SLOTS; all points land inside the
-        # window's buckets, no tail bucket -> short-circuit eligible
-        store = WhisperStore.create(spark, str(tmp_path / "db"), [(5, 60)])
-        store.update_many([(NOW - i * 5, float(i)) for i in range(12)], now=NOW, metric="m")
-        ((frm, until, step), df) = store.fetch("m", from_time=NOW - 59, until_time=NOW, now=NOW)
+
+    def check(store, from_time, until_time):
+        ((frm, until, step), df) = store.fetch(
+            "m", from_time=from_time, until_time=until_time, now=NOW
+        )
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("Scan parquet") == 1, plan
         assert plan.count("Exchange") == 1 and "BroadcastExchange" not in plan, plan
-        lo, hi = _pushed_ts_bounds(plan)
-        assert lo == frm and until - step <= hi < until, plan
+        pushed = _pushed_filters(plan)
+        last = until - step
+        assert f"GreaterThanOrEqual(ts,{frm - SPAN})" in pushed, pushed
+        assert (
+            f"Or(LessThanOrEqual(ts,{last - SPAN}),GreaterThanOrEqual(ts,{frm}))"
+            in pushed
+        ), pushed
+        # no upper bound: later ts (future points) are read
+        assert pushed.count("LessThanOrEqual(ts,") == 1, pushed
 
-        # same store, but a future-timestamped point creates a tail
-        # bucket: the scan must reach one span back and cover the tail
+    try:
+        # archive tb width = 5*TB_SLOTS; all points inside the window
+        store = WhisperStore.create(spark, str(tmp_path / "db"), [(5, 60)])
+        store.update_many([(NOW - i * 5, float(i)) for i in range(12)], now=NOW, metric="m")
+        check(store, NOW - 59, NOW)
+
+        # same points plus a future-timestamped one, read over a window
+        # ending before NOW
         store2 = WhisperStore.create(spark, str(tmp_path / "db2"), [(5, 60)])
         store2.update_many(
             [(NOW - i * 5, float(i)) for i in range(12)] + [(NOW + 40, 99.0)],
             now=NOW, metric="m",
         )
-        ((frm2, _u, _s), df2) = store2.fetch(
-            "m", from_time=NOW - 59, until_time=NOW - 45, now=NOW
-        )
-        plan2 = df2._jdf.queryExecution().executedPlan().toString()
-        assert plan2.count("Scan parquet") == 1, plan2
-        assert plan2.count("Exchange") == 1 and "BroadcastExchange" not in plan2, plan2
-        assert _pushed_ts_bounds(plan2) == (frm2 - SPAN, None), plan2
+        check(store2, NOW - 59, NOW - 45)
     finally:
         spark.conf.set("spark.sql.maxMetadataStringLength", prev)
 

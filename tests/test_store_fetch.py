@@ -125,11 +125,13 @@ def test_window_wider_than_the_ring_shows_only_slot_owners(spark, tmp_path):
     assert {ts - NOW: v for ts, v in values.items() if v is not None} == {-30: 2.0, -25: 3.0}
 
 
-def _read_rule(dump_rows, step, span, frm, until):
+def _read_rule(dump_rows, metrics, step, span, frm, until):
     """Per (metric, ts mod span) of one resolution, the stored row with
     the largest (wseq, ts) holds the slot; a window ts shows that row's
-    value if the row is that ts, and None otherwise."""
-    metrics = {r["metric"] for r in dump_rows}
+    value if the row is that ts, and None otherwise.  ``metrics`` None
+    means every stored metric."""
+    if metrics is None:
+        metrics = {r["metric"] for r in dump_rows}
     owner = {}
     for r in dump_rows:
         if r["resolution"] != step:
@@ -146,21 +148,31 @@ def _read_rule(dump_rows, step, span, frm, until):
 
 
 def test_fetch_matches_the_read_rule_on_random_stores(spark, tmp_path):
+    # history older than the window, future points up to 1.5 spans of
+    # archive 0 ahead, windows ending well before NOW (so the rows
+    # between one span back and the window are stored but hold none of
+    # its slots), zero-length windows, and explicit metric lists
     rng = random.Random(20261018)
     policy = [(60, 10), (300, 6)]
-    for k in range(3):
+    for k in range(4):
         store = _store(spark, tmp_path, policy, name=f"db{k}")
         for _batch in range(rng.randint(2, 4)):
             _write(spark, store, [
-                (m, NOW - rng.randint(-400, 1700), rng.randint(0, 9))
+                (m, NOW - rng.randint(-900, 1700), rng.randint(0, 9))
                 for m in ("a", "b") for _ in range(rng.randint(0, 8))
             ])
         if k == 2:
             store.compact(now=NOW)
         dump = store.dump().collect()
-        for _fetch in range(3):
+        for fetch in range(5):
             frm = NOW - rng.randint(0, 1800)
-            until = rng.randint(frm, NOW)
-            (fi, ui, step), rows = _timeline(store, None, frm, until)
+            until = rng.choice([
+                rng.randint(frm, NOW),
+                min(frm + rng.randint(0, 240), NOW),
+                frm,
+            ])
+            metrics = [None, ["a"], ["b", "zz"], ["a", "b"]][(k + fetch) % 4]
+            (fi, ui, step), rows = _timeline(store, metrics, frm, until)
             span = next(a.retention for a in store.archives if a.seconds_per_point == step)
-            assert rows == _read_rule(dump, step, span, fi, ui), (k, frm, until)
+            assert rows == _read_rule(dump, metrics, step, span, fi, ui), (
+                k, frm, until, metrics)

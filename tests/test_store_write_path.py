@@ -235,6 +235,23 @@ def test_import_wsp_writes_one_file_per_bucket(spark, tmp_path):
     assert dst._read_points().select("metric").distinct().count() == 200
 
 
+def test_export_wsp_leaves_a_null_slot_empty(spark, tmp_path):
+    src = _store(spark, tmp_path, 0.5, name="src")
+    src.update_many(spark.createDataFrame(
+        [("a", NOW - 180, 1.0), ("a", NOW - 120, 2.0), ("a", NOW - 60, None),
+         ("c", NOW - 60, None)],
+        "metric string, ts long, value double",
+    ), now=NOW)
+    tree = str(tmp_path / "tree")
+    # a metric whose live values are all NULL still gets its file
+    assert export_wsp(src, tree) == 2
+    assert sorted(os.listdir(tree)) == ["a.wsp", "c.wsp"]
+    dst = import_wsp(spark, tree, str(tmp_path / "imported"), root=tree)
+    assert dst.fetch_series("a", from_time=NOW - 240, now=NOW) == (
+        (NOW - 180, NOW + 60, 60), [1.0, 2.0, None, None]
+    )
+
+
 def test_truncated_wsp_import_leaves_no_store(spark, tmp_path, monkeypatch):
     src = _store(spark, tmp_path, 0.5, name="src")
     _write(spark, src, [("a", NOW - 60, 1), ("b", NOW - 60, 2)])

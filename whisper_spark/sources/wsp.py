@@ -628,9 +628,14 @@ def export_wsp(store, out_dir: str, tree: bool = True) -> int:
     def write_partition(it):
         by_metric: dict[str, dict[int, list]] = {}
         for r in it:
-            by_metric.setdefault(r["metric"], {}).setdefault(
-                int(r["resolution"]), []
-            ).append((int(r["ts"]), float(r["value"])))
+            levels = by_metric.setdefault(r["metric"], {})
+            # a NULL that holds its slot leaves the slot empty, as fetch
+            # shows it, and never becomes the base: whisper reads a base
+            # ts of 0 as an empty archive
+            if r["value"] is not None:
+                levels.setdefault(int(r["resolution"]), []).append(
+                    (int(r["ts"]), float(r["value"]))
+                )
         n = 0
         header_size = METADATA_SIZE + ARCHIVE_SIZE * len(archives)
         for metric, levels in by_metric.items():

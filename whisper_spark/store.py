@@ -19,14 +19,18 @@ Design decisions (the 100 TB story):
   readers apply whisper's slot rule (``_ring_visible``): rows whose ts
   share a ring slot (``pmod(ts, span)``) are reduced to the one with the
   largest ``(wseq, ts)`` — last-write-wins and ring eviction (reference:
-  whisper.py:842-856) in one plain aggregate with map-side partial
-  combine, not a window sort.  ``compact()`` amortizes the dedup (LSM
-  compaction), ``delete_expired()`` replaces the ring-buffer's implicit
-  retention.
+  whisper.py:842-856) in one aggregate, ``max(struct(wseq, ts, value))``.
+  A struct buffer is not hash-aggregable, so it plans as a
+  ``SortAggregate`` with a ``Sort`` on each side of its ``Exchange``
+  (partial max before the shuffle, final max after), not a window.
+  ``compact()`` amortizes the dedup (LSM compaction),
+  ``delete_expired()`` replaces the ring-buffer's implicit retention.
 * **Partition pruning replaces O(1) ring addressing** (reference:
   whisper.py:721-724,992-1001).  ``resolution`` is a partition column, and
-  ``tb = ts // (step * TB_SLOTS)`` buckets time so a fetch reads only the
-  slices covering its range, regardless of total table size.
+  ``tb = ts // (step * TB_SLOTS)`` buckets time so a read covers only the
+  slices holding its range and the range's ring colliders
+  (``_collider_where``: the range, later ts, and the range one span
+  back), regardless of total table size.
 * **A fetch is one aggregate.**  The slot rule runs over the scanned
   rows unioned with a spine row ``(metric, ts, NULL, wseq -1)`` per
   requested series and window slot: a slot whose only row is its spine
@@ -148,17 +152,33 @@ def _persist(cached: ExitStack, df: DataFrame) -> DataFrame:
     return df
 
 
-def _slice_where(step: int, ts_from: int | None, ts_until: int | None) -> str:
-    """SQL predicate for one archive's rows with ``ts_from <= ts <=
-    ts_until`` (either bound optional), with the matching ``tb`` partition
-    bounds."""
+def _with_tb(df: DataFrame) -> DataFrame:
+    """Rows (ts, resolution, ...) with their time bucket ``tb``."""
+    return df.withColumn(
+        "tb", (F.col("ts") / (F.col("resolution") * F.lit(TB_SLOTS))).cast("long")
+    )
+
+
+def _collider_where(step: int, span: int, lo: int, last: int) -> str:
+    """SQL predicate for the rows of one archive (``step``, ring ``span``)
+    that can share a ring slot with a ts in ``[lo, last]``, the store's
+    only statement of that region: the range itself, every later ts (a
+    future point), and the range one span back, ``[lo - span, last -
+    span]`` (a later batch writing an older ts).  A row strictly between
+    ``last - span`` and ``lo`` holds no slot of the range, and rows before
+    ``lo - span`` are not read.  The fetch and the rollup cascade both
+    read through it, so both see the same slot winners.
+
+    The ``tb`` bounds skip the buckets wholly outside the region.  They
+    use floor division, which matches the writer's truncating ``tb`` for
+    ``ts >= 0``, so a skipped bucket inside the gap is ``tb >= 1``."""
     w = step * TB_SLOTS
-    cond = f"resolution = {step}"
-    if ts_from is not None:
-        cond += f" AND tb >= {ts_from // w} AND ts >= {ts_from}"
-    if ts_until is not None:
-        cond += f" AND tb <= {ts_until // w} AND ts <= {ts_until}"
-    return cond
+    back = last - span
+    return (
+        f"resolution = {step} AND tb >= {(lo - span) // w} AND ts >= {lo - span}"
+        f" AND (tb <= {max(back // w, 0)} OR tb >= {lo // w})"
+        f" AND (ts <= {back} OR ts >= {lo})"
+    )
 
 
 class WhisperStore:
@@ -393,9 +413,7 @@ class WhisperStore:
         ``spark.sql.shuffle.partitions``, one task per bucket at any
         size."""
         (
-            df.withColumn(
-                "tb", (F.col("ts") / (F.col("resolution") * F.lit(TB_SLOTS))).cast("long")
-            )
+            _with_tb(df)
             .select(*[f.name for f in POINTS_SCHEMA.fields])
             .hint("rebalance", "resolution", "tb")
             .write.partitionBy("resolution", "tb")
@@ -604,28 +622,28 @@ class WhisperStore:
             )
             intervals = cand.select("metric", "lts").distinct()
 
-            # scan pruning: the recompute only needs the higher archive
-            # from the earliest touched interval onward — (resolution, tb)
-            # partitions + parquet min/max stats prune the read (at 100 TB
-            # the store dwarfs any batch).  The upper bound stays open for
-            # ring-eviction colliders (see below).
-            lo = cand.agg(F.min("lts")).collect()[0][0]
+            # scan pruning: the recompute reads the higher archive's ts in
+            # the touched intervals, [lo, hi + lower - higher step], and
+            # their ring colliders (``_collider_where``), stored and in
+            # flight — (resolution, tb) partitions + parquet min/max stats
+            # prune the read (at 100 TB the store dwarfs any batch)
+            lo, hi = cand.agg(F.min("lts"), F.max("lts")).collect()[0]
             if lo is None:
                 rolled = None
                 continue
+            where = _collider_where(
+                higher.seconds_per_point,
+                higher.retention,
+                int(lo),
+                int(hi) + lower.seconds_per_point - higher.seconds_per_point,
+            )
             in_flight = deduped.filter(F.col("aidx") == j - 1).select(*cols)
             if rolled is not None:
                 in_flight = in_flight.unionByName(rolled)
-            # one span back for older-ts later-batch evictors of future
-            # points (see fetch path); a wider read can change ring winners
-            ts_from = int(lo) - higher.retention
-            src_rows = in_flight.filter(F.col("ts") >= ts_from)
+            src_rows = _with_tb(in_flight).where(where).select(*cols)
             if stored:
                 src_rows = (
-                    self._read_points()
-                    .where(_slice_where(higher.seconds_per_point, ts_from, None))
-                    .select(*cols)
-                    .unionByName(src_rows)
+                    self._read_points().where(where).select(*cols).unionByName(src_rows)
                 )
             # ring-visible state of the higher archive: propagation in the
             # reference happens AFTER physical slot writes, so a point
@@ -761,66 +779,6 @@ class WhisperStore:
                     pass
         return out
 
-    def _bucket_ts_bounds(self, step: int, b: int) -> tuple[int, int] | None:
-        """(min_ts, max_ts) across one tb bucket from parquet FOOTER
-        statistics only — row-group min/max, no data pages read.  None if
-        any file lacks ts stats (inconclusive) or the bucket is empty."""
-        import pyarrow.parquet as pq
-
-        d = os.path.join(self._points_path, f"resolution={step}", f"tb={b}")
-        mn: int | None = None
-        mx: int | None = None
-        try:
-            names = os.listdir(d)
-        except OSError:
-            return None
-        for fname in names:
-            if not fname.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(os.path.join(d, fname)).metadata
-            ts_idx = next(
-                (i for i in range(md.num_columns) if md.schema.column(i).name == "ts"),
-                None,
-            )
-            if ts_idx is None:
-                return None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(ts_idx).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                mn = st.min if mn is None else min(mn, st.min)
-                mx = st.max if mx is None else max(mx, st.max)
-        if mn is None:
-            return None
-        return (int(mn), int(mx))
-
-    def _no_colliders_possible(
-        self, step: int, back_lo: int, back_hi: int, tail_lo: int
-    ) -> bool:
-        """True when storage metadata proves no stored row can ring-
-        collide with the fetch window: no row lives in the one-span-back
-        region [back_lo, back_hi) or the tail [tail_lo, inf).
-
-        Two metadata tiers, zero data pages read: tb partition dirs rule
-        out buckets wholly inside the safe zone; boundary-straddling
-        buckets (the window's own buckets, usually) are settled by
-        parquet footer min/max on ts.  Anything inconclusive -> False
-        (the fuzz-proven collision path handles it)."""
-        w = step * TB_SLOTS
-        for b in self._tb_buckets(step):
-            lo, hi = b * w, b * w + w  # bucket's ts range [lo, hi)
-            if lo >= back_hi and hi <= tail_lo:
-                continue  # bucket wholly inside the safe zone
-            bounds = self._bucket_ts_bounds(step, b)
-            if bounds is None:
-                return False
-            mn, mx = bounds
-            if mx >= tail_lo:
-                return False
-            if mn < back_hi and mx >= back_lo:
-                return False
-        return True
-
     def _fetch_archive_dense(
         self,
         archive: ArchiveSpec,
@@ -859,18 +817,12 @@ class WhisperStore:
         # A window slot's colliders live one span away on either side: a
         # future-timestamped point evicts the point one span older, and a
         # later batch writing an older timestamp evicts an in-window
-        # future point.  So the scan covers one span back and the
-        # typically-empty tail, unless partition and footer metadata
-        # prove neither region holds a row (always so after compact());
-        # then it reads the window alone.  The plan is the same either way.
-        # Found by differential fuzzing (tests/test_store_fuzz.py).
-        if self._no_colliders_possible(step, from_interval - span,
-                                       from_interval, until_interval):
-            lo, hi = from_interval, last
-        else:
-            lo, hi = from_interval - span, None
+        # future point.  The scan reads the window, the tail and the
+        # window one span back (``_collider_where``), pruned by partition
+        # and parquet min/max stats.  Found by differential fuzzing
+        # (tests/test_store_fuzz.py).
         points = self._read_points()
-        scanned = points.where(_slice_where(step, lo, hi))
+        scanned = points.where(_collider_where(step, span, from_interval, last))
         if metrics is None:
             # every stored metric gets its series, all-NULL if it has no
             # point in the window
