@@ -165,7 +165,8 @@ def _collider_where(step: int, span: int, lo: int, last: int) -> str:
     only statement of that region: the range itself, every later ts (a
     future point), and the range one span back, ``[lo - span, last -
     span]`` (a later batch writing an older ts).  A row strictly between
-    ``last - span`` and ``lo`` holds no slot of the range, and rows before
+    ``last - span`` and ``lo`` holds no slot of the range (no row is, when
+    the range is a span or wider), and rows before
     ``lo - span`` are not read.  The fetch and the rollup cascade both
     read through it, so both see the same slot winners.
 
