@@ -162,21 +162,47 @@ def test_cascade_reads_ring_slots_without_a_per_ts_collapse(
 ):
     store = _store(spark, tmp_path, 0.0)
     _write(spark, store, [("a", H + 2400, 1)])
-    plans, real = [], WhisperStore._cascade
+    plans, real = [], WhisperStore._ring_visible
 
-    def cascade(self, *args):
-        rolled = real(self, *args)
-        plans.extend(df._jdf.queryExecution().analyzed().toString() for df in rolled)
-        return rolled
+    def ring_visible(self, rows, archive):
+        out = real(self, rows, archive)
+        plans.append((rows._jdf.queryExecution().analyzed().toString(),
+                      out._jdf.queryExecution().analyzed().toString()))
+        return out
 
-    monkeypatch.setattr(WhisperStore, "_cascade", cascade)
+    monkeypatch.setattr(WhisperStore, "_ring_visible", ring_visible)
     _write(spark, store, [("a", H + 2460, 2)])
+    # one slot-rule read per cascade level
     assert len(plans) == 2
-    for plan in plans:
+    for rows, out in plans:
         # the slot rule reads the stored and in-flight rows directly: no
         # last-write-wins aggregate on (metric, resolution, ts) before it
-        assert re.search(r"Aggregate \[metric#\d+, pmod\(ts#\d+L?, ", plan), plan
-        assert not re.search(r"Aggregate \[metric#\d+, resolution#\d+L?, ts#\d+L?\]", plan)
+        assert not re.search(r"Aggregate \[metric#\d+, resolution#\d+L?, ts#\d+L?\]", rows)
+        assert re.search(r"Aggregate \[metric#\d+, pmod\(ts#\d+L?, ", out), out
+
+
+def test_update_many_holds_no_cache_entry_at_the_append(spark, tmp_path, monkeypatch):
+    store = _store(spark, tmp_path, 0.0)
+    _write(spark, store, [("a", H + 2400, 1)])
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    seen, real = [], WhisperStore._append
+
+    def append(self, df):
+        seen.append((cache.numCachedEntries(),
+                     df._jdf.queryExecution().analyzed().toString()))
+        return real(self, df)
+
+    monkeypatch.setattr(WhisperStore, "_append", append)
+    # archive 0 and archive 1 points, cascading through both lower levels
+    _write(spark, store, [("a", H + 2460, 2), ("a", H + 1200, 3), ("b", H + 2700, 4)])
+    assert len(seen) == 1
+    (entries, plan), = seen
+    # the batch's intermediates are checkpoints, not CacheManager entries
+    # another plan on the session could match while the append runs
+    assert entries == before
+    assert "InMemoryRelation" not in plan, plan
+    assert cache.numCachedEntries() == before
 
 
 def test_one_append_per_batch(spark, tmp_path, monkeypatch):

@@ -358,35 +358,28 @@ def cmd_vacuum(args):
 
 
 def cmd_render(args):
-    from .render import evaluate_target
-
     store = WhisperStore.open(_spark(), args.path)
     now = args.now or int(time.time())
     until = _at_time(args.until, now) or now
     frm = _at_time(args.frm, now) or until - 86400
-    fetched = store.fetch(None, from_time=frm, until_time=until, now=now)
-    if fetched is None:
-        print("No data in selected timerange")
-        return 1
-    (ti, df) = fetched
-    # thread the fetch step through: step-dependent functions (hitcount,
-    # duration-window EMA, Holt-Winters seasons) need the archive's real
-    # resolution, which auto-selection may have coarsened.  Multiple
+    # one store.render per target: the fetch step is threaded into the
+    # target and maxDataPoints consolidation applied there.  Multiple
     # targets union like graphite's &target=..&target=.. query string.
-    src = df.select("metric", "ts", "value")
     multi = len(args.target) > 1
     per_target = []
     for target in args.target:
-        one = evaluate_target(src, target, step=ti[2])
-        if getattr(args, "max_datapoints", None):
-            from .render import consolidate, consolidation_method, parse_target
-
-            how = consolidation_method(parse_target(target))
-            one, _ = consolidate(one, args.max_datapoints, ti[2], how)
-        per_target.append((target, one.orderBy("metric", "ts").collect()))
+        rendered = store.render(
+            target, from_time=frm, until_time=until, now=now,
+            max_datapoints=getattr(args, "max_datapoints", None),
+        )
+        if rendered is None:
+            print("No data in selected timerange")
+            return 1
+        (one, step) = rendered
+        per_target.append((target, step, one.orderBy("metric", "ts").collect()))
     if getattr(args, "format", None) == "csv":
         # graphite /render?format=csv: "<series>,<YYYY-MM-DD HH:MM:SS>,<value>"
-        for _t, rows in per_target:
+        for _t, _step, rows in per_target:
             for r in rows:
                 stamp = time.strftime(
                     "%Y-%m-%d %H:%M:%S", time.gmtime(r["ts"])
@@ -400,7 +393,7 @@ def cmd_render(args):
         # target (summarize) or --max-datapoints consolidation may have
         # coarsened past the fetch step, and a wrong declared step would
         # pad the body with phantom Nones
-        for _t, rows in per_target:
+        for _t, step, rows in per_target:
             series: dict[str, dict[int, float]] = {}
             for r in rows:
                 series.setdefault(r["metric"], {})[r["ts"]] = r["value"]
@@ -410,7 +403,7 @@ def cmd_render(args):
                 deltas = [
                     b - a for a, b in zip(ts_sorted, ts_sorted[1:]) if b > a
                 ]
-                step_out = min(deltas) if deltas else ti[2]
+                step_out = min(deltas) if deltas else step
                 vals = [
                     pts.get(t) for t in range(lo, hi + step_out, step_out)
                 ]
@@ -435,7 +428,7 @@ def cmd_render(args):
             # per series, datapoints as [value, ts] pairs, series from
             # every target concatenated in target order
             out = []
-            for _t, rows in per_target:
+            for _t, _step, rows in per_target:
                 series: dict[str, list] = {}
                 for r in rows:
                     series.setdefault(r["metric"], []).append(
@@ -448,11 +441,11 @@ def cmd_render(args):
             print(json.dumps(out))
             return 0
         if multi:
-            print(json.dumps({t: pack(rows) for t, rows in per_target}))
+            print(json.dumps({t: pack(rows) for t, _step, rows in per_target}))
         else:
-            print(json.dumps(pack(per_target[0][1])))
+            print(json.dumps(pack(per_target[0][2])))
         return 0
-    for t, rows in per_target:
+    for t, _step, rows in per_target:
         for r in rows:
             v = r["value"] if r["value"] is not None else "None"
             prefix = f"{t}\t" if multi else ""

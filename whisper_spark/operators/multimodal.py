@@ -3397,7 +3397,7 @@ def image_ahash_fingerprints(
 ) -> DataFrame:
     """The ``(id, simhash)`` frame :func:`image_neardup_pairs` bands and
     verifies: 64-bit average-hashes of the decodable payloads.  Exposed
-    so callers can persist it before the banding self-joins — the frame
+    so callers can checkpoint it before the banding self-joins — the frame
     is ~16 bytes/image while every re-evaluation is a full Python pixel
     decode of the corpus (the banded plan references it from several
     subtrees, and Catalyst does not deduplicate common subtrees)."""
@@ -3429,7 +3429,7 @@ def image_neardup_pairs(
     ``hamming < bands``).
 
     ``fingerprints`` lets the caller pass a pre-built (typically
-    persisted) :func:`image_ahash_fingerprints` frame so the decode
+    checkpointed) :func:`image_ahash_fingerprints` frame so the decode
     runs once instead of once per plan subtree; when omitted the frame
     is built from ``df`` as before."""
     from .dedup import simhash_hamming_pairs

@@ -44,7 +44,8 @@ def exact_kth_smallest(
     by ``buckets`` rows per round.
 
     ``df`` is scanned once per round (2-4 rounds in practice); callers
-    on expensive upstream pipelines should ``persist()`` it first.
+    on expensive upstream pipelines should ``localCheckpoint()`` it
+    first.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")

@@ -285,7 +285,7 @@ def bigram_lm_score(
     now-pin) unless passed explicitly.  A note for 100 TB callers: the
     exploded bigram frame feeds three subtrees and Catalyst will NOT
     exchange-reuse them (join-key null filters make the canonical
-    plans differ), so persist your own pre-aggregated per-doc bigram
+    plans differ), so checkpoint your own pre-aggregated per-doc bigram
     counts first — see q_doc_bigram_lm_score for the weighted-sum
     restructure that keeps results bit-identical.
 
@@ -472,71 +472,46 @@ def bpe_train_merges(
     distinct-word table (freq-weighted adjacent symbol pairs) and ONE
     top-1 collect — a single bounded row per round, the same
     driver-literal envelope as the trained-IVF centroids.  The word
-    table is persisted and re-derived by one fold per round, so lineage
-    stays O(1) deep.  Each round's fold is persisted LAZILY: the next
-    round's pair-count job materializes it, so training costs one Spark
-    job per round instead of the former two (the explicit
-    ``nxt.count()`` barrier was pure overhead — round-13 optimization).
-    Ties break (count desc, left asc, right asc) — fully deterministic.
+    table is checkpointed and each round's fold of it is checkpointed
+    in turn, so lineage stays O(1) deep.  Ties break (count desc, left
+    asc, right asc) — fully deterministic.
     At 100 TB the word table is the DISTINCT vocabulary (Zipf-bounded,
     orders of magnitude under the corpus); every per-round job is a
     groupBy over it, never a corpus rescan."""
-    words = _bpe_word_freqs(docs, text_col).persist()
-    prev: DataFrame | None = None  # materialized predecessor of `words`
+    words = _bpe_word_freqs(docs, text_col).localCheckpoint()
     merges: list[tuple[str, str, int]] = []
-    try:
-        for _ in range(n_merges):
-            s = F.split(F.col("seq"), BPE_SEP)
-            # words are short, so re-evaluating the split inside the
-            # lambda is a non-issue (contrast word_ngrams_expr's
-            # let-binding idiom, where texts are documents)
-            pair_arr = F.transform(
-                F.sequence(F.lit(1), F.size(s) - 1),
-                lambda i: F.struct(
-                    F.element_at(s, i).alias("l"),
-                    F.element_at(s, i + 1).alias("r"),
-                ),
-            )
-            top = (
-                words.filter(F.size(s) >= 2)
-                .select("freq", F.explode(pair_arr).alias("p"))
-                .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-                .agg(F.sum("freq").alias("c"))
-                .orderBy(F.desc("c"), F.asc("l"), F.asc("r"))
-                .limit(1)
-                .collect()
-            )
-            # the collect above materialized `words`; its predecessor's
-            # cached blocks are no longer reachable by any pending fold
-            if prev is not None:
-                prev.unpersist()
-                prev = None
-            if not top:
-                break
-            left, right, c = top[0]["l"], top[0]["r"], int(top[0]["c"])
-            merges.append((left, right, c))
-            nxt = words.select(
-                "w", "freq",
-                _bpe_merge_fold(F.col("seq"), left, right).alias("seq"),
-            ).persist()
-            prev, words = words, nxt
-    except BaseException:
-        words.unpersist()
-        if prev is not None:
-            prev.unpersist()
-        raise
+    for _ in range(n_merges):
+        s = F.split(F.col("seq"), BPE_SEP)
+        # words are short, so re-evaluating the split inside the
+        # lambda is a non-issue (contrast word_ngrams_expr's
+        # let-binding idiom, where texts are documents)
+        pair_arr = F.transform(
+            F.sequence(F.lit(1), F.size(s) - 1),
+            lambda i: F.struct(
+                F.element_at(s, i).alias("l"),
+                F.element_at(s, i + 1).alias("r"),
+            ),
+        )
+        top = (
+            words.filter(F.size(s) >= 2)
+            .select("freq", F.explode(pair_arr).alias("p"))
+            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
+            .agg(F.sum("freq").alias("c"))
+            .orderBy(F.desc("c"), F.asc("l"), F.asc("r"))
+            .limit(1)
+            .collect()
+        )
+        if not top:
+            break
+        left, right, c = top[0]["l"], top[0]["r"], int(top[0]["c"])
+        merges.append((left, right, c))
+        words = words.select(
+            "w", "freq",
+            _bpe_merge_fold(F.col("seq"), left, right).alias("seq"),
+        ).localCheckpoint()
     if not return_vocab:
-        if prev is not None:
-            prev.unpersist()
-        words.unpersist()
         return merges
-    # checkpoint the final fold off its (still-cached) parent, then
-    # release both: the vocab's blocks go when the caller drops it
-    vocab = words.localCheckpoint()
-    if prev is not None:
-        prev.unpersist()
-    words.unpersist()
-    return merges, vocab
+    return merges, words
 
 
 def bpe_train(

@@ -1196,51 +1196,29 @@ def _evaluate(node, source: DataFrame, text: str, step: int | None = None) -> Da
         # the band bounds are two nearest-rank selections over the
         # one-row-per-series average list; a partition-less rank window
         # here would single-partition on a huge glob, so instead: one
-        # distributed count of the (persisted) aggregate, then each
+        # distributed count of the (checkpointed) aggregate, then each
         # bound as a TakeOrderedAndProject — max of the first k ascending
         # IS the value at rank k
-        # persisted only across the count + two _bound collections + the
-        # kept-metric collect, then released — repeated render
-        # evaluations in one session must not accumulate cached blocks.
-        # The kept metrics are collected driver-side WHILE persisted:
-        # _keep_series broadcasts the keep frame anyway (same driver
-        # materialization), and collecting before unpersist avoids
-        # recomputing the one-row-per-series aggregate from the full
-        # input at final evaluation
         avgs = df.groupBy("metric").agg(
             (_fsum("value") / F.count("value")).alias("_avg")
-        ).persist()
-        try:
-            n_series = avgs.count()
-            if n_series == 0:
-                return _keep_series(df, avgs)
+        ).localCheckpoint()
+        n_series = avgs.count()
+        if n_series == 0:
+            return _keep_series(df, avgs)
 
-            def _bound(pct: float) -> float:
-                k = min(
-                    max(int(math.floor(pct / 100.0 * (n_series + 1))), 1),
-                    n_series,
-                )
-                return avgs.orderBy("_avg", "metric").limit(k).agg(
-                    F.max("_avg")
-                ).first()[0]
+        def _bound(pct: float) -> float:
+            k = min(
+                max(int(math.floor(pct / 100.0 * (n_series + 1))), 1),
+                n_series,
+            )
+            return avgs.orderBy("_avg", "metric").limit(k).agg(
+                F.max("_avg")
+            ).first()[0]
 
-            lo, hi = _bound(100.0 - p), _bound(p)
-            # unguarded by MAX_QUERY_SERIES deliberately: that guard
-            # protects POSITIONAL pairing lists; here the keep list is
-            # driver-materialized EITHER WAY because _keep_series
-            # broadcasts the one-column keep frame, so this collect
-            # adds no new driver-memory class — it's bounded by the
-            # same glob-sized series count the broadcast already is
-            kept = [
-                (r["metric"],)
-                for r in avgs.filter(
-                    ~((F.col("_avg") > F.lit(lo)) & (F.col("_avg") < F.lit(hi)))
-                ).select("metric").collect()
-            ]
-        finally:
-            avgs.unpersist()
-        keep = df.sparkSession.createDataFrame(kept, "metric string")
-        return _keep_series(df, keep)
+        lo, hi = _bound(100.0 - p), _bound(p)
+        return _keep_series(
+            df, avgs.filter(~((F.col("_avg") > F.lit(lo)) & (F.col("_avg") < F.lit(hi))))
+        )
     if name == "removeBetweenPercentile":
         # keep series with at least one point outside the per-timestamp
         # [100-n, n] percentile band across series

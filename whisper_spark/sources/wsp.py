@@ -551,50 +551,48 @@ def import_wsp_tree(
 
     Returns ``{policy_dir_name: WhisperStore}``, one entry per distinct
     header config (deterministic order: sorted by archive list, method,
-    xff).  The parsed point data and headers are PERSISTED so the tree
-    is read and struct-unpacked once, not once per policy group; each
-    store's append left-semi-joins the group's metric set.  If a
+    xff).  The parsed headers and point data are checkpointed, so the
+    tree is read and struct-unpacked once, not once per policy group;
+    each store's append left-semi-joins the group's metric set.  If a
     group's import fails, no store this call made is left.
     """
-    hdrs = wsp_headers(spark, path, root).persist()
+    hdrs = wsp_headers(spark, path, root).localCheckpoint()
+    cfgs = sorted(
+        _header_configs(hdrs),
+        key=lambda r: (
+            [(int(a["seconds_per_point"]), int(a["points"])) for a in r["archives"]],
+            r["aggregation_method"],
+            r["x_files_factor"],
+        ),
+    )
+    # parsed only once the headers passed: a truncated file's points
+    # would fail the parse with a bare struct error
     pts = (
         read_wsp(spark, path, root)
         .withColumn("wseq", F.lit(0).cast("long"))
-        .persist()
+        .localCheckpoint()
     )
     out: dict[str, object] = {}
-    try:
-        cfgs = sorted(
-            _header_configs(hdrs),
-            key=lambda r: (
-                [(int(a["seconds_per_point"]), int(a["points"])) for a in r["archives"]],
-                r["aggregation_method"],
-                r["x_files_factor"],
-            ),
-        )
-        with _undo_on_failure(spark) as create:
-            for i, cfg in enumerate(cfgs):
-                name = f"policy-{i:04d}"
-                store = create(f"{dst_root}/{name}", cfg)
-                arch_lit = F.array(
-                    *[
-                        F.struct(
-                            F.lit(a.seconds_per_point).cast("long").alias("seconds_per_point"),
-                            F.lit(a.points).cast("long").alias("points"),
-                        )
-                        for a in store.archives
-                    ]
-                )
-                members = hdrs.filter(
-                    (F.col("aggregation_method") == cfg["aggregation_method"])
-                    & (F.col("x_files_factor") == cfg["x_files_factor"])
-                    & (F.col("archives") == arch_lit)
-                ).select("metric")
-                store._append(pts.join(members, "metric", "left_semi"))
-                out[name] = store
-    finally:
-        pts.unpersist()
-        hdrs.unpersist()
+    with _undo_on_failure(spark) as create:
+        for i, cfg in enumerate(cfgs):
+            name = f"policy-{i:04d}"
+            store = create(f"{dst_root}/{name}", cfg)
+            arch_lit = F.array(
+                *[
+                    F.struct(
+                        F.lit(a.seconds_per_point).cast("long").alias("seconds_per_point"),
+                        F.lit(a.points).cast("long").alias("points"),
+                    )
+                    for a in store.archives
+                ]
+            )
+            members = hdrs.filter(
+                (F.col("aggregation_method") == cfg["aggregation_method"])
+                & (F.col("x_files_factor") == cfg["x_files_factor"])
+                & (F.col("archives") == arch_lit)
+            ).select("metric")
+            store._append(pts.join(members, "metric", "left_semi"))
+            out[name] = store
     return out
 
 

@@ -85,7 +85,7 @@ import json
 import os
 import shutil
 import uuid
-from contextlib import ExitStack, contextmanager
+from contextlib import contextmanager
 from functools import partial, reduce
 from typing import Iterable, Sequence
 
@@ -143,13 +143,6 @@ def _f32(x: float) -> float:
     which FLIPS gate decisions like ``1/5 >= xff``.  Parity requires the
     same quantization (found by multi-metric differential testing)."""
     return _struct.unpack("!f", _struct.pack("!f", float(x)))[0]
-
-
-def _persist(cached: ExitStack, df: DataFrame) -> DataFrame:
-    """persist() ``df`` until ``cached`` closes."""
-    df = df.persist()
-    cached.callback(df.unpersist)
-    return df
 
 
 def _with_tb(df: DataFrame) -> DataFrame:
@@ -550,26 +543,18 @@ class WhisperStore:
             )
             .withColumnRenamed("ats", "ts")
             .withColumn("wseq", F.lit(batch).cast("long"))
+            .localCheckpoint()
         )
+        rolled = self._cascade(deduped, batch)
+        # the batch commits once: a failure anywhere above writes nothing
+        self._append(reduce(DataFrame.unionByName, [deduped.drop("aidx"), *rolled]))
 
-        # ExitStack unpersists in reverse creation order: releasing a base
-        # frame while a cached frame built on it is still cached makes the
-        # CacheManager re-plan the dependent frame.
-        with ExitStack() as cached:
-            deduped = _persist(cached, deduped)
-            rolled = self._cascade(deduped, batch, cached)
-            # the batch commits once: a failure anywhere above writes nothing
-            self._append(reduce(DataFrame.unionByName, [deduped.drop("aidx"), *rolled]))
-
-    def _cascade(
-        self, deduped: DataFrame, batch: int, cached: ExitStack
-    ) -> list[DataFrame]:
+    def _cascade(self, deduped: DataFrame, batch: int) -> list[DataFrame]:
         """Rollup cascade with per-(source archive, METRIC) early stop.
         Returns the rolled rows of every lower level (columns metric,
-        resolution, ts, value, wseq) as lazy frames and writes nothing:
-        the caller commits them with the batch's points in one append per
-        batch, so a failed batch writes nothing.  Frames it caches are
-        released when ``cached`` closes.
+        resolution, ts, value, wseq) as frames and writes nothing: the
+        caller commits them with the batch's points in one append per
+        batch, so a failed batch writes nothing.
 
         Whisper cascades per file — i.e. per metric: an
         ``__archive_update_many`` stops propagating deeper once an entire
@@ -611,15 +596,15 @@ class WhisperStore:
             src_alive = alive.filter(F.col("aidx") < j)
             lower = archives[j]
             higher = archives[j - 1]
-            cand = _persist(
-                cached,
+            cand = (
                 touched.join(src_alive, on=["aidx", "metric"], how="left_semi")
                 .select(
                     "aidx",
                     "metric",
                     align_ts(F.col("ts"), lower.seconds_per_point).alias("lts"),
                 )
-                .distinct(),
+                .distinct()
+                .localCheckpoint()
             )
             intervals = cand.select("metric", "lts").distinct()
 
@@ -673,7 +658,7 @@ class WhisperStore:
             if j + 1 < len(archives):
                 # read again by the next level (in-flight rows and the
                 # alive set) and by the append
-                rolled = _persist(cached, rolled)
+                rolled = rolled.localCheckpoint()
                 # a (source, metric) cascade survives level j iff at least
                 # one of its intervals passed the gate
                 surviving = (
@@ -1104,44 +1089,41 @@ class WhisperStore:
                     ),
                 )
                 .select("metric", "lo", "hi")
+                .localCheckpoint()
             )
-            gaps = gaps.persist()
-            try:
-                if gaps.limit(1).count() == 0:
-                    start_from = from_time
+            if gaps.limit(1).count() == 0:
+                start_from = from_time
+                continue
+            # source points: per src archive (finest first), dense slots
+            # within [now - ret_k, previous boundary) intersected with
+            # the gap ranges of this dst archive
+            fills = None
+            hi_bound = start_from
+            for sa in src_archives:
+                lo_bound = now - sa.retention
+                if hi_bound <= lo_bound:
                     continue
-                # source points: per src archive (finest first), dense slots
-                # within [now - ret_k, previous boundary) intersected with
-                # the gap ranges of this dst archive
-                fills = None
-                hi_bound = start_from
-                for sa in src_archives:
-                    lo_bound = now - sa.retention
-                    if hi_bound <= lo_bound:
-                        continue
-                    (_, sd) = src._fetch_archive_dense(sa, max(lo_bound, from_time), hi_bound)
-                    part = sd.filter(F.col("value").isNotNull()).join(
-                        F.broadcast(gaps),
-                        on=(
-                            (sd["metric"] == gaps["metric"])
-                            & (sd["ts"] >= gaps["lo"])
-                            & (sd["ts"] <= gaps["hi"])
-                        ),
-                        how="left_semi",
-                    )
-                    fills = part if fills is None else fills.unionByName(part)
-                    hi_bound = lo_bound
-                    if hi_bound <= from_time:
-                        break
-                if fills is not None:
-                    self.update_many(
-                        fills.select(
-                            "metric", "ts", "value", F.lit(0).cast("long").alias("seq")
-                        ),
-                        now=now,
-                    )
-            finally:
-                gaps.unpersist()
+                (_, sd) = src._fetch_archive_dense(sa, max(lo_bound, from_time), hi_bound)
+                part = sd.filter(F.col("value").isNotNull()).join(
+                    F.broadcast(gaps),
+                    on=(
+                        (sd["metric"] == gaps["metric"])
+                        & (sd["ts"] >= gaps["lo"])
+                        & (sd["ts"] <= gaps["hi"])
+                    ),
+                    how="left_semi",
+                )
+                fills = part if fills is None else fills.unionByName(part)
+                hi_bound = lo_bound
+                if hi_bound <= from_time:
+                    break
+            if fills is not None:
+                self.update_many(
+                    fills.select(
+                        "metric", "ts", "value", F.lit(0).cast("long").alias("seq")
+                    ),
+                    now=now,
+                )
             start_from = from_time
 
     def resize(
@@ -1212,45 +1194,42 @@ class WhisperStore:
             for k, (a, (fi, _, _), d) in enumerate(old_dense):
                 part = d if k == 0 else d.filter(F.col("ts") < old_dense[k - 1][1][0])
                 merged = part if merged is None else merged.unionByName(part)
-            merged = merged.persist()
-            try:
-                from .aggregation import aggregate_column
+            merged = merged.localCheckpoint()
+            from .aggregation import aggregate_column
 
-                for na in new_store.archives:
-                    step = na.seconds_per_point
-                    from_t = now - na.retention + now % step
-                    until_t = now + now % step + step
-                    n_intervals = (until_t - from_t) // step - 1
-                    binned = (
-                        merged.filter(
-                            (F.col("ts") >= from_t)
-                            & (F.col("ts") < from_t + n_intervals * step)
-                        )
-                        .withColumn(
-                            "its",
-                            (F.lit(from_t) + ((F.col("ts") - from_t) / step).cast("long") * step),
-                        )
-                        .groupBy("metric", "its")
-                        .agg(
-                            aggregate_column(
-                                method, "value", order=F.col("ts"),
-                                expected_slots=F.count("*"),
-                            ).alias("value"),
-                            F.count("value").alias("_known"),
-                            F.count("*").alias("_total"),
-                        )
-                        .filter(
-                            (F.col("_known") > 0)
-                            & (F.col("_known") / F.col("_total") >= F.lit(float(xff)))
-                        )
-                        .select(
-                            "metric", F.col("its").alias("ts"), "value",
-                            F.lit(0).cast("long").alias("seq"),
-                        )
+            for na in new_store.archives:
+                step = na.seconds_per_point
+                from_t = now - na.retention + now % step
+                until_t = now + now % step + step
+                n_intervals = (until_t - from_t) // step - 1
+                binned = (
+                    merged.filter(
+                        (F.col("ts") >= from_t)
+                        & (F.col("ts") < from_t + n_intervals * step)
                     )
-                    new_store.update_many(binned, now=now)
-            finally:
-                merged.unpersist()
+                    .withColumn(
+                        "its",
+                        (F.lit(from_t) + ((F.col("ts") - from_t) / step).cast("long") * step),
+                    )
+                    .groupBy("metric", "its")
+                    .agg(
+                        aggregate_column(
+                            method, "value", order=F.col("ts"),
+                            expected_slots=F.count("*"),
+                        ).alias("value"),
+                        F.count("value").alias("_known"),
+                        F.count("*").alias("_total"),
+                    )
+                    .filter(
+                        (F.col("_known") > 0)
+                        & (F.col("_known") / F.col("_total") >= F.lit(float(xff)))
+                    )
+                    .select(
+                        "metric", F.col("its").alias("ts"), "value",
+                        F.lit(0).cast("long").alias("seq"),
+                    )
+                )
+                new_store.update_many(binned, now=now)
 
         if in_place:
             bak = self.path + f".bak.{uuid.uuid4().hex}"
