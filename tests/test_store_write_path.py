@@ -205,6 +205,25 @@ def test_update_many_holds_no_cache_entry_at_the_append(spark, tmp_path, monkeyp
     assert cache.numCachedEntries() == before
 
 
+def test_update_many_checkpoints_stay_small(spark, tmp_path, monkeypatch):
+    store = _store(spark, tmp_path, 0.0)
+    _write(spark, store, [("a", H + 2400, 1)])
+    memory = spark.sparkContext._jsc.sc().env().memoryManager()
+    before = memory.storageMemoryUsed()
+    seen, real = [], WhisperStore._append
+
+    def append(self, df):
+        seen.append(memory.storageMemoryUsed() - before)
+        return real(self, df)
+
+    monkeypatch.setattr(WhisperStore, "_append", append)
+    _write(spark, store, [("a", H + 2460, 2), ("a", H + 1200, 3), ("b", H + 2700, 4)])
+    # every checkpoint of the batch is live at the append.  They hold
+    # storage memory by the session's memory page: these four rows took
+    # 1.4 MB with 1 MB pages, 66 MB with Spark's default (64 MB on 4 cores)
+    assert seen and seen[0] < 16 << 20, seen
+
+
 def test_one_append_per_batch(spark, tmp_path, monkeypatch):
     appends, batches = [], []
     real_append, real_write = WhisperStore._append, WhisperStore._write_assigned

@@ -40,6 +40,13 @@ def get_spark(
         # vanilla Spark reader rejects; read them as nanosecond longs
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        # every sort and hash-aggregate task takes at least one memory page,
+        # an on-heap long[] (by default execution memory / cores / 16, up
+        # to 64 MB: 64 MB on 4 cores with the 8g heap).  An array of half a
+        # G1 region (2 MB at 8g) or more is humongous, and a store flush of
+        # a few thousand rows then starts back-to-back concurrent GC cycles
+        # in some processes and not in others
+        .config("spark.buffer.pageSize", "1m")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():
