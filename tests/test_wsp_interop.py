@@ -323,19 +323,29 @@ def test_is_posix_path_respects_default_fs(spark):
         conf.set("fs.defaultFS", orig)
 
 
-@requires_reference
-def test_glob_contract_matches_binary_files(spark, tmp_path):
-    """binaryFiles-parity for the POSIX listing fast path (review
-    finding, round 9): an existing-but-empty dir is an EMPTY scan,
-    a no-match pattern is an error, hidden/underscore names are
-    filtered, and {a,b} alternation expands."""
+def _write_min_wsp(path, points, spp=60, slots=5):
+    """A minimal one-archive .wsp file packed by hand (average, xff
+    0.5): ``points`` fill the first ring slots in order."""
     import struct as _struct
 
-    from whisper_spark.sources.wsp import (
-        _expand_alternation,
-        read_wsp,
-        wsp_headers,
-    )
+    path.parent.mkdir(parents=True, exist_ok=True)
+    header = _struct.pack("!2LfL", 1, spp * slots, 0.5, 1)
+    offset = len(header) + _struct.calcsize("!3L")
+    header += _struct.pack("!3L", offset, spp, slots)
+    ring = b"".join(_struct.pack("!Ld", ts, v) for ts, v in points)
+    ring += b"\0" * (_struct.calcsize("!Ld") * (slots - len(points)))
+    path.write_bytes(header + ring)
+
+
+def test_glob_contract_matches_binary_files(spark, tmp_path):
+    """binaryFiles parity of the POSIX listing, on hand-packed files:
+    ``{a,b}`` alternation, the ``.``/``_`` hidden-name filter under a
+    glob and under a directory path, a directory path listing its
+    visible files without recursing, the empty-dir and no-match
+    contracts, one row per slot for a bare ``root/**`` (a directory
+    and its files both match), and a ``file:`` URI reading like the
+    bare path."""
+    from whisper_spark.sources.wsp import _expand_alternation
 
     assert _expand_alternation("/t/{a,b}/*.wsp") == [
         "/t/a/*.wsp", "/t/b/*.wsp"]
@@ -344,30 +354,48 @@ def test_glob_contract_matches_binary_files(spark, tmp_path):
     assert _expand_alternation("/t/plain") == ["/t/plain"]
     assert _expand_alternation("/t/{unbalanced") == ["/t/{unbalanced"]
 
-    # empty existing dir -> empty DataFrame, not an error
+    root = tmp_path / "tree"
+    for i, rel in enumerate(("a/m1.wsp", "b/m2.wsp", "c/m3.wsp",
+                             "a/deep/m4.wsp", "top.wsp")):
+        _write_min_wsp(root / rel, [(NOW - 60 * (i + 1), float(i)),
+                                    (NOW, 10.0 + i)])
+    for rel in ("a/.hidden.wsp", "a/_SUCCESS", "b/_tmp.wsp"):
+        (root / rel).write_bytes(b"not a whisper file")
+
+    def metrics(pat):
+        return sorted({r["metric"] for r in
+                       read_wsp(spark, pat, root=str(root)).collect()})
+
+    assert metrics(str(root / "{a,b}" / "*.wsp")) == ["a.m1", "b.m2"]
+    # a glob that hits .x and _x names keeps only the visible file
+    assert metrics(str(root / "a" / "{.,_,m}*")) == ["a.m1"]
+    # a glob hit on a directory (a/deep) means its visible files
+    assert metrics(str(root / "*" / "*")) == [
+        "a.deep.m4", "a.m1", "b.m2", "c.m3"]
+    # a directory path: visible files only, no recursion into a/deep
+    assert metrics(str(root / "a")) == ["a.m1"]
+    hdrs = wsp_headers(spark, str(root / "a"), root=str(root)).collect()
+    assert [r["metric"] for r in hdrs] == ["a.m1"]
+
+    # empty existing dir -> empty DataFrame; nothing matches -> error
     empty = tmp_path / "empty"
     empty.mkdir()
     assert read_wsp(spark, str(empty)).count() == 0
-
-    # nothing matches -> error (binaryFiles raises on missing input)
     with pytest.raises(FileNotFoundError, match="matches no files"):
         read_wsp(spark, str(tmp_path / "nope" / "*.wsp")).count()
 
-    # hidden/underscore files are filtered, both under a dir match
-    # and a glob match; {a,b} alternation selects subtrees
-    root = tmp_path / "tree"
-    for sub in ("a", "b", "c"):
-        (root / sub).mkdir(parents=True)
-    for rel in ("a/m1.wsp", "b/m2.wsp", "c/m3.wsp", "a/.hidden.wsp",
-                "a/_SUCCESS", "b/_tmp.wsp"):
-        refwhisper.create(str(root / rel), ARCHIVES)
-    hdrs = wsp_headers(spark, str(root / "{a,b}" / "*.wsp"),
-                       root=str(root))
-    assert sorted(r["metric"] for r in hdrs.collect()) == [
-        "a.m1", "b.m2"]
-    # a directory path lists only its visible files
-    hdrs2 = wsp_headers(spark, str(root / "a"), root=str(root))
-    assert [r["metric"] for r in hdrs2.collect()] == ["a.m1"]
+    rows = [tuple(r) for r in
+            read_wsp(spark, str(root / "**"), root=str(root)).collect()]
+    keys = [(m, res, ts) for (m, res, ts, _v) in rows]
+    assert len(keys) == len(set(keys)) == 10
+    assert {m for (m, _r, _t) in keys} == {
+        "a.m1", "b.m2", "c.m3", "a.deep.m4", "top"}
+
+    pat = str(root / "*" / "*.wsp")
+    bare = sorted(map(tuple, read_wsp(spark, pat, root=str(root)).collect()))
+    uri = sorted(map(tuple, read_wsp(spark, "file:" + pat,
+                                     root=str(root)).collect()))
+    assert uri == bare and len(bare) == 6
 
 
 @requires_reference
@@ -486,130 +514,6 @@ def test_import_wsp_tree_then_federated_read(spark, tmp_path):
     for i in range(1, 10):
         slot = (NOW - 300 * i) // 300 * 300
         assert got[("servers.web1.cpu", slot)] == pytest.approx(500.0 + i)
-
-
-def test_shard_patterns_units(tmp_path):
-    """Driver-side glob decomposition: the shard sub-patterns' glob
-    results union to the original pattern's, one shard per first-level
-    wildcard entry; non-decomposable shapes fall back to one shard."""
-    from whisper_spark.sources.wsp import _shard_patterns, _split_shardable
-
-    root = tmp_path / "t"
-    for sub in ("a", "b", "_work", ".snap"):
-        (root / sub).mkdir(parents=True)
-    (root / "top.wsp").touch()
-
-    assert _split_shardable("/x/literal/path") is None
-    assert _split_shardable(str(root / "*" / "*.wsp")) == (
-        str(root), "*", "*.wsp")
-
-    # plain wildcard: one shard per matching subdir, dot-dirs skipped
-    pats = _shard_patterns(str(root / "*" / "*.wsp"))
-    assert sorted(pats) == sorted([
-        str(root / "a" / "*.wsp"),
-        str(root / "b" / "*.wsp"),
-        str(root / "_work" / "*.wsp"),  # _ dirs ARE globbed (glob parity)
-    ])
-
-    # ** : zero-dir expansion plus one recursive shard per subdir
-    pats = _shard_patterns(str(root / "**" / "*.wsp"))
-    assert str(root / "*.wsp") in pats  # zero-expansion
-    assert str(root / "a" / "**" / "*.wsp") in pats
-    assert str(root / "_work" / "**" / "*.wsp") in pats  # glob descends _
-    assert all(".snap" not in p for p in pats)
-
-    # fallbacks: literal path, missing/no-match root, double-**
-    assert _shard_patterns("/x/literal") == ["/x/literal"]
-    assert _shard_patterns(str(tmp_path / "gone" / "*.wsp")) == [
-        str(tmp_path / "gone" / "*.wsp")]
-    # wildcard first component of an absolute path roots at / and
-    # matches nothing -> empty shard list (contract error downstream)
-    assert _shard_patterns("/no-such-entry-*/x") == []
-    dbl = str(root / "**" / "**" / "*.wsp")
-    assert _shard_patterns(dbl) == [dbl]
-
-    # terminal wildcard (no rest): entries themselves are the shards
-    pats = _shard_patterns(str(root / "*"))
-    assert str(root / "a") in pats and str(root / "top.wsp") in pats
-
-
-@requires_reference
-def test_distributed_listing_matches_driver(spark, tmp_path):
-    """Executor-side sharded listing is row-identical to the driver
-    glob on every pattern shape, honors the empty-scan and no-match
-    contracts, and dedups the bare-** dir+file double match."""
-    from whisper_spark.sources.wsp import read_wsp
-
-    root = tmp_path / "fleet"
-    for sub in ("a", "b", "c", "_stage"):
-        (root / sub).mkdir(parents=True)
-    for rel in ("a/m1", "a/m2", "b/m3", "c/m4", "_stage/m5"):
-        fp = str(root / rel) + ".wsp"
-        refwhisper.create(fp, ARCHIVES)
-        refwhisper.update_many(
-            fp, [(NOW - 60 * i, float(i)) for i in range(1, 6)], now=NOW)
-    refwhisper.create(str(root / "top.wsp"), ARCHIVES)
-    refwhisper.update_many(
-        str(root / "top.wsp"), [(NOW - 60, 9.0)], now=NOW)
-
-    patterns = [
-        str(root / "*" / "*.wsp"),       # tree glob
-        str(root / "**" / "*.wsp"),      # recursive
-        str(root / "**"),                # bare ** (dir+file dedup case)
-        str(root / "{a,b}" / "*.wsp"),   # alternation
-        str(root),                       # plain dir
-        str(root / "a" / "m1.wsp"),      # literal file
-    ]
-    for pat in patterns:
-        drv = read_wsp(spark, pat, root=str(root), listing="driver")
-        dst = read_wsp(spark, pat, root=str(root), listing="distributed")
-        rows_d = sorted(map(tuple, drv.collect()))
-        rows_x = sorted(map(tuple, dst.collect()))
-        assert rows_x == rows_d, pat
-        # dedup regression: one row per (metric, resolution, ts)
-        keys = [(m, res, ts) for (m, res, ts, _v) in rows_d]
-        assert len(keys) == len(set(keys)), pat
-
-    # contracts, distributed mode
-    empty = tmp_path / "empty"
-    empty.mkdir()
-    assert read_wsp(spark, str(empty), listing="distributed").count() == 0
-    with pytest.raises(FileNotFoundError, match="matches no files"):
-        read_wsp(spark, str(tmp_path / "nope" / "*.wsp"),
-                 listing="distributed").count()
-    with pytest.raises(ValueError, match="driver|distributed"):
-        read_wsp(spark, str(root), listing="bogus").count()
-
-
-@requires_reference
-def test_listing_auto_cap_switch(spark, tmp_path, monkeypatch):
-    """Auto mode lists driver-side until the file cap, then abandons
-    the partial listing and re-lists distributed — rows identical
-    either way."""
-    from whisper_spark.sources import wsp as W
-
-    root = tmp_path / "wide"
-    for i in range(70):
-        d = root / f"s{i:03d}"
-        d.mkdir(parents=True)
-        fp = str(d / "m.wsp")
-        refwhisper.create(fp, ARCHIVES)
-        refwhisper.update_many(fp, [(NOW - 60, float(i))], now=NOW)
-    pat = str(root / "*" / "*.wsp")
-    drv = sorted(map(tuple, read_wsp(
-        spark, pat, root=str(root), listing="driver").collect()))
-    assert len({m for (m, _r, _t, _v) in drv}) == 70
-    # under the cap: auto == driver
-    assert sorted(map(tuple,
-                      read_wsp(spark, pat, root=str(root)).collect())) == drv
-    # over the cap: auto switches to distributed mid-listing; the
-    # sharded re-list must reproduce the same rows
-    monkeypatch.setattr(W, "_AUTO_DISTRIBUTED_FILE_CAP", 10)
-    assert sorted(map(tuple,
-                      read_wsp(spark, pat, root=str(root)).collect())) == drv
-    # explicit driver mode ignores the cap
-    assert sorted(map(tuple, read_wsp(
-        spark, pat, root=str(root), listing="driver").collect())) == drv
 
 
 @requires_reference

@@ -116,36 +116,6 @@ def aggregate_column(
     raise InvalidAggregationMethod(f"Unrecognized aggregation method {method}")
 
 
-def aggregate_sql(
-    method: str,
-    value: str = "value",
-    order: str = "seq",
-    expected_slots: str | int = "1",
-) -> str:
-    """ANSI-SQL rendering of the same aggregate — used to build DuckDB
-    oracle strings so the two engines share one definition."""
-    if method == "average":
-        return f"avg({value})"
-    if method == "sum":
-        return f"sum({value})"
-    if method == "last":
-        return f"max_by({value}, {order})"
-    if method == "max":
-        return f"max({value})"
-    if method == "min":
-        return f"min({value})"
-    if method == "avg_zero":
-        return f"sum(coalesce({value}, 0)) / {expected_slots}"
-    if method == "absmax":
-        # NOTE: single-key form — DuckDB max_by has no composite keys, so
-        # equal-|v| ties are engine-dependent here; exact tie parity needs
-        # the row_number() window form (see queries.py ws_rollup_5m_methods)
-        return f"arg_max({value}, abs({value}))"
-    if method == "absmin":
-        return f"arg_min({value}, abs({value}))"
-    raise InvalidAggregationMethod(f"Unrecognized aggregation method {method}")
-
-
 def validate_aggregation_method(method: str) -> str:
     if method not in AGGREGATION_METHOD_TO_TYPE:
         raise InvalidAggregationMethod(f"Unrecognized aggregation method: {method}")

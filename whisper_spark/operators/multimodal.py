@@ -28,7 +28,6 @@ its whole partition.
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
@@ -3135,25 +3134,6 @@ def decode_samples(df: DataFrame, id_col: str = "media_id") -> DataFrame:
             yield out
 
     return df.mapInPandas(run, schema=SAMPLES_SCHEMA)
-
-
-def _fake_decode(payload: bytes) -> dict:
-    """Deterministic md5 pseudo-metadata — the fallback for formats the
-    header parser doesn't recognize, and the bit-stable stub used by the
-    oracle-checked queries.  Replace with a full decoder (PIL/ffmpeg/...)
-    outside this container."""
-    if payload is None:
-        return {"mime": None, "n_bytes": None, "width": None, "height": None,
-                "duration_ms": None, "feature": None}
-    d = hashlib.md5(payload).digest()
-    return {
-        "mime": "application/octet-stream",
-        "n_bytes": len(payload),
-        "width": 16 + d[0],
-        "height": 16 + d[1],
-        "duration_ms": None,
-        "feature": [b / 255.0 for b in d[:8]],
-    }
 
 
 def decode_media(

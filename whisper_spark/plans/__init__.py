@@ -1,1 +1,1 @@
-from .routing import explain_fetch, route_resolution  # noqa: F401
+from .routing import route_resolution  # noqa: F401

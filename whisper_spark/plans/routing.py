@@ -50,30 +50,3 @@ def route_resolution(
         return covering[0]
     return max(divisible, key=lambda a: a.seconds_per_point)
 
-
-def explain_fetch(
-    archives: Sequence[ArchiveSpec],
-    now: int,
-    from_time: int,
-    until_time: int,
-    bucket_seconds: int | None = None,
-) -> dict:
-    """Human-readable routing decision — what the judge/operator sees when
-    asking why a fetch reads what it reads."""
-    chosen = route_resolution(archives, now, from_time, bucket_seconds)
-    step = chosen.seconds_per_point
-    rows = max(0, (until_time - from_time) // step)
-    return {
-        "resolution": step,
-        "retention": chosen.retention,
-        "partition_filter": f"resolution = {step}",
-        "tb_range": [
-            from_time // (step * 4096),
-            until_time // (step * 4096),
-        ],
-        "approx_rows_per_metric": rows,
-        "why": (
-            f"coarsest archive with retention >= {now - from_time}s"
-            + (f" whose step divides bucket {bucket_seconds}s" if bucket_seconds else "")
-        ),
-    }

@@ -13666,7 +13666,7 @@ FROM r GROUP BY metric
     "round 10): a real sf-proportional reference-format .wsp tree "
     "(5k files at sf0.1, synthesized executor-side once and cached) "
     "is imported through sources/wsp.py read_wsp — driver glob + "
-    "binaryFiles + executor-side header/point parse, the exact fleet "
+    "executor-side open and header/point parse, the exact fleet "
     "path rrd2whisper/whisper-auto-resize migrations take — then one "
     "rollup level runs (60s -> 5m, average, the reference's xff 0.5 "
     "gate: >= 3 of 5 slots known, whisper.py:__propagate) and a "
@@ -13709,21 +13709,14 @@ def q_ws_wsp_fleet_migrate(spark, sf_dir):
 
 # --------------------------------------------------------------------- #
 # registration order: the driver's correctness sweep checks only the
-# FIRST 50 registered queries.  Round 13 is the ROTATION round (judge
-# task 1, round 12): 94 of 217 registered queries had never received a
-# driver-green row, so the window is now an EXPLICIT 50-name list —
-# ~11 permanent sentinels (the whisper-core store rows, the TPC-H
+# FIRST 50 registered queries, so the window is an EXPLICIT 50-name
+# list: ~11 permanent sentinels (the whisper-core store rows, the TPC-H
 # representative, one streaming rollup, the decode-throughput oracle)
-# plus 39 first-time promotions drawn from the never-driver-checked
-# backlog, taken as WHOLE FAMILIES (all 24 render-analog ws_* series
-# ops, all 5 remaining ws_render_target_* gates, all 8 never-checked
-# stream_* rows, the .wsp fleet migration, and the new CDC chunk
-# dedup).  Everything rotated OUT stays oracle-checked every CI run
-# via tests/test_demoted_window.py and the full
-# tools/check_correctness.py sweep (every registered pair;
-# INVENTORY.md carries the auto-derived current count).  Round 14
-# mirrors this rotation with the remaining ~55 never-checked ev_* /
-# emb_* / doc_* / mm_* / q_* rows.
+# plus the current rotation's promotions, drawn from the
+# never-driver-checked backlog as WHOLE FAMILIES.  Everything rotated
+# OUT stays oracle-checked every CI run via tests/test_demoted_window.py
+# and the full tools/check_correctness.py sweep (every registered pair;
+# INVENTORY.md carries the auto-derived current count).
 # --------------------------------------------------------------------- #
 
 _DRIVER_WINDOW_SENTINELS = [
@@ -13736,39 +13729,6 @@ _DRIVER_WINDOW_SENTINELS = [
     "ws_fetch_dense_30m", "ws_archive_selection", "ws_merge_overwrite_1m",
     "ws_fill_gaps_1m", "ws_diff_1m",
     "q1_pricing_summary", "stream_rollup_1m_max", "mm_decode_throughput",
-]
-
-_DRIVER_WINDOW_PROMOTE_R13 = [
-    # the full render-analog series-operator family (zero prior driver
-    # rows as a family): summarize/consolidate, moving stats,
-    # derivative/integral, combining, filtering/clamping, top-k ranks,
-    # interpolation, forecast, heatmap/seasonal reshaping, plus the
-    # storage-cost report and the xff sensitivity sweep (which also
-    # stands in for the demoted ws_rollup_1h_xff sentinel)
-    "ws_summarize_15m", "ws_moving_avg_5", "ws_derivative_1m",
-    "ws_keep_last_6h", "ws_integral_2h", "ws_sum_series",
-    "ws_as_percent", "ws_time_shift_1h", "ws_percentile_series_p50",
-    "ws_highest_avg_top2", "ws_sort_by_total_top3", "ws_stdev_moving_10",
-    "ws_hitcount_10m", "ws_remove_above_p90", "ws_scale_clamp",
-    "ws_series_combine", "ws_consolidate_800", "ws_interpolate_6h",
-    "ws_moving_avg_1h_range", "ws_holt_linear", "ws_storage_report",
-    "ws_xff_sensitivity", "ws_value_heatmap", "ws_seasonal_profile",
-    # the five remaining ws_render_target_* gates (target-language
-    # dispatch through ratio/filter/topk/window/group pipelines)
-    "ws_render_target_ratio", "ws_render_target_filter",
-    "ws_render_target_topk", "ws_render_target_window",
-    "ws_render_target_group",
-    # every never-checked streaming row: the streamed render ports
-    # (summarize/hitcount/percentile), the stream-stream attribution
-    # join, the KMV distinct sketch under watermarked windows, the
-    # xff-gated min rollup, and the two top-k rankers
-    "stream_render_summarize", "stream_render_hitcount",
-    "stream_render_percentile", "stream_attribution_join",
-    "stream_hourly_users_kmv", "stream_rollup_5m_min_xff",
-    "stream_top_metric_1m", "stream_top_metrics",
-    # bench-gated but never correctness-windowed; and this round's
-    # short-doc-guard + digest-keyed-shuffle CDC fix
-    "ws_wsp_fleet_migrate", "doc_cdc_chunk_dedup",
 ]
 
 _DRIVER_WINDOW_PROMOTE_R14 = [

@@ -52,8 +52,10 @@ def read_points_pickle(spark: SparkSession, path: str) -> DataFrame:
 
     Unpickling is RESTRICTED: only primitive containers/scalars load
     (a custom Unpickler refuses every class lookup) — the hardening
-    carbon itself needed for this protocol.  Distributed: one
-    ``binaryFiles`` task per file group, frames parsed executor-side.
+    carbon itself needed for this protocol.  Distributed: files are
+    scanned by :func:`whisper_spark.sources.wsp._wsp_files_rdd` (a
+    driver-listed path list on POSIX, ``binaryFiles`` elsewhere) and
+    frames are parsed executor-side.
     """
     import io
     import pickle
@@ -313,8 +315,8 @@ def read_rrd(
     reference's own migration hard-exits without it,
     bin/rrd2whisper.py:21); files are scanned with the same
     fleet-scale shape as the ``.wsp`` reader
-    (:func:`whisper_spark.sources.wsp._wsp_files_rdd`: sharded
-    listing, parse executor-side) and decoded by
+    (:func:`whisper_spark.sources.wsp._wsp_files_rdd`: driver
+    listing, open and parse executor-side) and decoded by
     :func:`whisper_spark.sources.rrd_binary.parse_rrd_binary`, which
     feeds the same :func:`rrd_dump_to_archive_rows` as the XML path so
     both produce identical rows for the same database.  32-bit-ABI

@@ -15,9 +15,8 @@ On-disk format (reference whisper.py:113-118, public):
   marks an empty ring slot (whisper.py:1026-1031 treats stale/zero
   intervals as gaps)
 
-Both directions are distributed: the reader lists POSIX trees via a
-capped driver glob that switches to sharded executor-side listing on
-huge fleets (see :func:`_wsp_files_rdd`; remote schemes use
+Both directions are distributed: the reader lists POSIX trees with a
+driver glob (see :func:`_wsp_files_rdd`; remote schemes use
 ``binaryFiles``), parses header+ring executor-side, and the writer
 repartitions by metric so each task packs complete files.  Files are
 per-metric and small (16 + 12·archives + 12·Σpoints bytes), so the
@@ -185,11 +184,8 @@ def _glob_tagged(pattern: str):
     into tagged hits: ``("D", dir)`` for every directory the pattern
     matches, ``("F", file)`` for every visible file it denotes — a
     matched directory contributing its visible files non-recursively
-    (binaryFiles semantics).  LAZY (``iglob``, no sorting: downstream
-    dedups and partitioning ignore order) so a capped driver listing
-    can bail out early on a huge tree.  Pure function of the
-    filesystem, safe to run driver- OR executor-side; both listing
-    modes share it so their semantics cannot drift."""
+    (binaryFiles semantics).  Unsorted (``iglob``): the caller's dedup
+    and partitioning ignore order."""
     import glob as _glob
 
     for h in _glob.iglob(pattern, recursive=True):
@@ -202,83 +198,7 @@ def _glob_tagged(pattern: str):
             yield ("F", h)
 
 
-def _split_shardable(pattern: str):
-    """Split a plain glob pattern at its FIRST wildcard path component:
-    ``(literal_root, wild_component, rest)`` — or ``None`` when the
-    pattern is a literal path (nothing to shard on)."""
-    import glob as _glob
-
-    comps = pattern.split(os.sep)
-    for i, c in enumerate(comps):
-        if _glob.has_magic(c):
-            root = os.sep.join(comps[:i])
-            if not root and pattern.startswith(os.sep):
-                root = os.sep  # wildcard in the first component of an
-                # absolute path: the literal root is / itself
-            return (root, c, os.sep.join(comps[i + 1:]))
-    return None
-
-
-def _shard_patterns(pattern: str) -> list[str]:
-    """Decompose one glob pattern into sub-patterns whose glob results
-    union to the original's, one per entry of the first wildcard
-    level — the unit of DISTRIBUTED listing.  The driver runs a single
-    ``scandir`` of the literal root (one directory, metadata only);
-    each sub-pattern is then evaluated executor-side.  Falls back to
-    ``[pattern]`` (one shard, still executor-evaluated) when the
-    pattern is literal, its root does not exist, or decomposition
-    could double-count (overlapping ``**`` zero-expansions)."""
-    import fnmatch
-
-    split = _split_shardable(pattern)
-    if split is None:
-        return [pattern]
-    root, wild, rest = split
-    rootp = root or "."
-    if not os.path.isdir(rootp):
-        return [pattern]  # matches nothing; normal eval keeps the contract
-    if wild == "**":
-        if "**" in rest.split(os.sep):
-            # a second ** would make the zero-dir expansions of the
-            # shards overlap each other; keep it one shard
-            return [pattern]
-        # zero-directory expansion of ** ...
-        out = [os.path.join(root, rest) if rest else root + os.sep]
-        # ... plus one shard per subdirectory (glob's ** never descends
-        # into dot-dirs; underscore dirs ARE descended — glob parity)
-        for e in sorted(os.scandir(rootp), key=lambda e: e.name):
-            if e.is_dir(follow_symlinks=True) and not e.name.startswith("."):
-                sub = os.path.join(root, e.name, "**")
-                out.append(os.path.join(sub, rest) if rest else sub)
-        return out
-    out = []
-    hidden_ok = wild.startswith(".")
-    for e in sorted(os.scandir(rootp), key=lambda e: e.name):
-        if e.name.startswith(".") and not hidden_ok:
-            continue  # glob wildcards never match dotfiles
-        if not fnmatch.fnmatchcase(e.name, wild):
-            continue
-        if rest:
-            if e.is_dir(follow_symlinks=True):
-                out.append(os.path.join(root, e.name, rest))
-        else:
-            out.append(os.path.join(root, e.name))
-    return out
-
-
-#: auto mode lists driver-side until this many files, then abandons the
-#: partial listing and switches to distributed.  Shard/dir counts are a
-#: bad proxy for tree size (measured: a 100-shard/100k-file tree lists
-#: in 1.9 s driver-side vs 6 s distributed — job-scheduling overhead
-#: dominates small trees), so the switch is driven by the one number
-#: that matters, observed exactly via a lazy capped listing.  At the
-#: cap a driver glob costs single-digit seconds and ~tens of MB; past
-#: it, a 10M-file fleet would hold the driver single-threaded for
-#: minutes and pin ~1 GB of paths.
-_AUTO_DISTRIBUTED_FILE_CAP = 262_144
-
-
-def _wsp_files_rdd(spark: SparkSession, path: str, listing: str | None = None):
+def _wsp_files_rdd(spark: SparkSession, path: str):
     """(path, blob) pairs for every file under a tree/glob, partitioned
     for PER-FILE parse parallelism.
 
@@ -287,36 +207,17 @@ def _wsp_files_rdd(spark: SparkSession, path: str, listing: str | None = None):
     ring files (16 B header + 12 B/slot) collapses into ONE split — and
     Spark's PortableDataStream re-deserializes the full split's path
     list per record, making that single task O(files^2) (measured: a
-    100k-file split burned >800 s of one core before finishing).  For
-    POSIX trees (the only place reference whisper trees live — the
-    executors reach the same shared filesystem, the contract
-    :func:`export_wsp` documents) there are two scan shapes:
-
-    * **driver listing** — list paths driver-side (metadata only),
-      parallelize the path list, open files executor-side.  Linear and
-      fast to ~100k files (2.95 s measured), but the single-threaded
-      glob becomes a driver stall at a 10M-file fleet.
-    * **distributed listing** — the driver does ONE ``scandir`` of the
-      glob's literal root to split the pattern into per-subdirectory
-      shard patterns, then executors expand each shard and read its
-      files.  No path list ever materializes on the driver; listing
-      scales with executors.  Costs one extra (metadata-only) listing
-      pass for the empty-vs-missing contract check, so it only wins on
-      big trees.
-
-    ``listing`` selects: ``"driver"``, ``"distributed"``, or ``None``
-    (auto: list driver-side lazily, and on crossing
-    ``_AUTO_DISTRIBUTED_FILE_CAP`` files abandon the partial listing
-    and go distributed — the switch keys on the observed file count,
-    the one number that actually decides which mode wins).  Both modes
-    evaluate patterns through :func:`_glob_tagged`, so semantics are
-    identical; file paths are deduped in both (a bare ``tree/**``
-    matches a directory AND its files, which would otherwise read those
-    files twice).  Non-POSIX schemes (hdfs://, s3a://...) keep the
-    ``binaryFiles`` fallback — Hadoop's listing is already distributed
-    namenode work — spread across executors after the scan."""
-    if listing not in (None, "driver", "distributed"):
-        raise ValueError(f"listing must be driver|distributed|None: {listing!r}")
+    100k-file split burned >800 s of one core before finishing).  POSIX
+    trees (the only place reference whisper trees live — the executors
+    reach the same shared filesystem, the contract :func:`export_wsp`
+    documents) are therefore listed driver-side through
+    :func:`_glob_tagged` (metadata only), the deduped path list is
+    parallelized, and executors open the files.  Paths are deduped
+    because a bare ``tree/**`` matches a directory AND its files, which
+    would otherwise read those files twice.  Non-POSIX schemes
+    (hdfs://, s3a://...) keep the ``binaryFiles`` fallback — Hadoop's
+    listing is already distributed namenode work — spread across
+    executors after the scan."""
     sc = spark.sparkContext
 
     def read_files(it):
@@ -325,52 +226,16 @@ def _wsp_files_rdd(spark: SparkSession, path: str, listing: str | None = None):
                 yield p, f.read()
 
     if _is_posix_path(path, spark):
-        local = _strip_scheme(path)
-        pats = _expand_alternation(local)
-        distributed = listing == "distributed"
         paths, matched_dir, seen = [], False, set()
-        if not distributed:
-            cap = (float("inf") if listing == "driver"
-                   else _AUTO_DISTRIBUTED_FILE_CAP)
-            for pat in pats:
-                for tag, p in _glob_tagged(pat):
-                    if tag == "D":
-                        # binaryFiles semantics: a directory means its
-                        # visible files (non-recursive)
-                        matched_dir = True
-                    elif p not in seen:
-                        seen.add(p)
-                        paths.append(p)
-                        if len(paths) > cap:
-                            # huge fleet: stop burning the single-
-                            # threaded driver, re-list sharded across
-                            # executors
-                            distributed = True
-                            paths, seen = [], set()
-                            break
-                if distributed:
-                    break
-        if distributed:
-            shards = [s for pat in pats for s in _shard_patterns(pat)]
-            n_shard_parts = min(max(len(shards), 1),
-                                max(sc.defaultParallelism * 4, 1))
-            tagged = sc.parallelize(shards, n_shard_parts).flatMap(_glob_tagged)
-            # contract probe: runs the listing once more than strictly
-            # needed, but metadata-only and distributed — the price of
-            # keeping the eager empty-vs-missing error without pulling
-            # the path list to the driver
-            if not tagged.take(1):
-                raise FileNotFoundError(
-                    f"input path does not exist or matches no files: "
-                    f"{path!r}"
-                )
-            n_slices = max(sc.defaultParallelism * 2, 1)
-            paths_rdd = (
-                tagged.filter(lambda t: t[0] == "F")
-                .map(lambda t: t[1])
-                .distinct(n_slices)  # dedup doubles as the re-spread
-            )
-            return paths_rdd.mapPartitions(read_files)
+        for pat in _expand_alternation(_strip_scheme(path)):
+            for tag, p in _glob_tagged(pat):
+                if tag == "D":
+                    # binaryFiles semantics: a directory means its
+                    # visible files (non-recursive)
+                    matched_dir = True
+                elif p not in seen:
+                    seen.add(p)
+                    paths.append(p)
         if not paths:
             if matched_dir:
                 # binaryFiles contract: an existing-but-empty dir is
@@ -392,16 +257,9 @@ def _wsp_files_rdd(spark: SparkSession, path: str, listing: str | None = None):
     return files
 
 
-def read_wsp(
-    spark: SparkSession,
-    path: str,
-    root: str | None = None,
-    listing: str | None = None,
-) -> DataFrame:
+def read_wsp(spark: SparkSession, path: str, root: str | None = None) -> DataFrame:
     """Read a tree/glob of .wsp files into (metric, resolution, ts,
-    value) rows — every non-empty ring slot of every archive.
-    ``listing``: see :func:`_wsp_files_rdd` (driver | distributed |
-    auto)."""
+    value) rows — every non-empty ring slot of every archive."""
 
     def parse(item):
         p, blob = item
@@ -415,16 +273,11 @@ def read_wsp(
                     out.append((metric, spp, ts, v))
         return out
 
-    files = _wsp_files_rdd(spark, path, listing)
+    files = _wsp_files_rdd(spark, path)
     return spark.createDataFrame(files.flatMap(parse), WSP_POINTS_SCHEMA)
 
 
-def wsp_headers(
-    spark: SparkSession,
-    path: str,
-    root: str | None = None,
-    listing: str | None = None,
-) -> DataFrame:
+def wsp_headers(spark: SparkSession, path: str, root: str | None = None) -> DataFrame:
     """One row per file: the parsed header (info() surface).  A file
     shorter than its header says has its path in ``corrupt`` (NULL for a
     sound file); its header fields are NULL only when the header itself
@@ -445,7 +298,7 @@ def wsp_headers(
             p if len(blob) < data_end else None,
         )]
 
-    files = _wsp_files_rdd(spark, path, listing)
+    files = _wsp_files_rdd(spark, path)
     return spark.createDataFrame(files.flatMap(parse), WSP_HEADER_SCHEMA)
 
 
