@@ -162,6 +162,35 @@ def test_fetch_reads_the_window_and_its_ring_colliders(spark, tmp_path):
         spark.conf.set("spark.sql.maxMetadataStringLength", prev)
 
 
+def test_all_series_fetch_is_partitioned_on_metric(spark, tmp_path):
+    """``fetch(None)`` hash-partitions both union sides on ``metric``:
+    the scan by a repartition, the key spine by its ``distinct``.  The
+    union keeps that partitioning (``spark.sql.unionOutputPartitioning``,
+    on by default), so the slot aggregate needs no exchange of its own,
+    and a render's per-series window reuses it: no ``Exchange`` between
+    the slot ``SortAggregate`` and the ``Window``."""
+    import re
+
+    from whisper_spark.store import WhisperStore
+
+    NOW = 1700000000
+    store = WhisperStore.create(spark, str(tmp_path / "db"), [(60, 120), (600, 100)])
+    for m in ("a.cpu", "b.cpu"):
+        store.update_many([(NOW - 60 * i, float(i)) for i in range(30)], now=NOW, metric=m)
+
+    (_, df) = store.fetch(None, from_time=NOW - 3600, until_time=NOW, now=NOW)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    exchanges = re.findall(r"Exchange (\w+\([^)]*\))", plan)
+    assert len(exchanges) == 2, plan
+    assert all(re.fullmatch(r"hashpartitioning\(metric#\d+, \d+\)", e) for e in exchanges), plan
+
+    out, _ = store.render("movingAverage(a.cpu, 3)", from_time=NOW - 3600, until_time=NOW, now=NOW)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Window [" in plan and "SortAggregate(" in plan, plan
+    between = plan.split("Window [", 1)[1].split("SortAggregate(", 1)[0]
+    assert "Exchange" not in between, plan
+
+
 def test_q21_single_fact_aggregate_no_cartesian(spark):
     """The EXISTS/NOT-EXISTS rewrite must stay one per-order aggregate
     joined back — no cartesian product, no second lineitem self-join

@@ -1146,6 +1146,39 @@ def test_store_render_library_api(spark, tmp_path):
     assert got == {(NOW - 60 * i) // 60 * 60: 30.0 + 2 * i for i in range(1, 4)}
 
 
+def test_store_render_series_exist_iff_stored(spark, tmp_path):
+    """A render's series are the stored metrics its paths match, not
+    the names it spells: a literal path the store lacks renders no rows,
+    while a stored metric with no point in the window renders one NULL
+    row per window slot, alone or beside a series with values."""
+    s = WhisperStore.create(
+        spark, str(tmp_path / "edb"), [(60, 60)], x_files_factor=0.0
+    )
+    s.update_many([(NOW - 60, 1.0), (NOW - 120, 2.0)], now=NOW, metric="web.cpu")
+    # inside the retention, outside the window and its ring colliders
+    s.update_many([(NOW - 3000, 5.0)], now=NOW, metric="db.cpu")
+    first = (NOW - 600) // 60 * 60 + 60
+    window = [first + 60 * k for k in range(10)]
+
+    def series(target):
+        out, step = s.render(target, from_time=NOW - 600, until_time=NOW, now=NOW)
+        assert step == 60
+        got = {}
+        for r in out.collect():
+            got.setdefault(r.metric, {})[r.ts] = r.value
+        return got
+
+    assert series("web.gpu") == {}
+    assert series("db.cpu") == {"db.cpu": dict.fromkeys(window)}
+    both = series("*.cpu")
+    assert both["db.cpu"] == dict.fromkeys(window)
+    assert sorted(both["web.cpu"]) == window
+    assert {ts: v for ts, v in both["web.cpu"].items() if v is not None} == {
+        (NOW - 60) // 60 * 60: 1.0, (NOW - 120) // 60 * 60: 2.0,
+    }
+    assert set(both) == {"web.cpu", "db.cpu"}
+
+
 def test_cli_render_graphite_json_format(spark, tmp_path, capsys):
     s = WhisperStore.create(
         spark, str(tmp_path / "gdb"), [(60, 60)], x_files_factor=0.0

@@ -337,6 +337,31 @@ def _write_min_wsp(path, points, spp=60, slots=5):
     path.write_bytes(header + ring)
 
 
+def test_posix_tree_scan_slices_by_path_count(spark, tmp_path, monkeypatch):
+    """A POSIX tree scan ships each task its slice of the path list: a
+    small tree gets two slices a core (or one a file), and a larger
+    tree one slice per ``_PATHS_PER_SLICE`` paths."""
+    from whisper_spark.sources import wsp
+
+    root = tmp_path / "tree"
+    root.mkdir()
+    n = 40
+    for i in range(n):
+        (root / f"m{i}.wsp").write_bytes(b"")
+    pat = str(root / "*.wsp")
+
+    def slice_sizes():
+        return wsp._wsp_files_rdd(spark, pat).glom().map(len).collect()
+
+    sizes = slice_sizes()
+    assert sum(sizes) == n
+    assert len(sizes) == min(2 * spark.sparkContext.defaultParallelism, n)
+
+    # more paths than two slices a core of _PATHS_PER_SLICE each
+    monkeypatch.setattr(wsp, "_PATHS_PER_SLICE", 1)
+    assert slice_sizes() == [1] * n
+
+
 def test_glob_contract_matches_binary_files(spark, tmp_path):
     """binaryFiles parity of the POSIX listing, on hand-packed files:
     ``{a,b}`` alternation, the ``.``/``_`` hidden-name filter under a

@@ -50,6 +50,11 @@ AGG_NUM_TO_METHOD = {
 }
 METHOD_TO_AGG_NUM = {v: k for k, v in AGG_NUM_TO_METHOD.items()}
 
+# At most this many paths ride in one task of a POSIX tree scan: a task
+# carries its slice of the path list, and Spark warns above ~1 MB a task
+# (about 12k paths of ~85 bytes).
+_PATHS_PER_SLICE = 1024
+
 WSP_POINTS_SCHEMA = "metric string, resolution long, ts long, value double"
 WSP_HEADER_SCHEMA = (
     "metric string, aggregation_method string, max_retention long, "
@@ -248,7 +253,10 @@ def _wsp_files_rdd(spark: SparkSession, path: str):
                 f"input path does not exist or matches no files: "
                 f"{path!r}"
             )
-        n_slices = min(max(sc.defaultParallelism * 2, 1), len(paths))
+        n_slices = min(
+            max(sc.defaultParallelism * 2, -(-len(paths) // _PATHS_PER_SLICE)),
+            len(paths),
+        )
         return sc.parallelize(paths, n_slices).mapPartitions(read_files)
     files = sc.binaryFiles(path)
     target = sc.defaultParallelism

@@ -34,9 +34,11 @@ Design decisions (the 100 TB story):
 * **A fetch is one aggregate.**  The slot rule runs over the scanned
   rows unioned with a spine row ``(metric, ts, NULL, wseq -1)`` per
   requested series and window slot: a slot whose only row is its spine
-  row is a gap.  One exchange, no join, no broadcast.  A window clamped
-  to the archive's retention is at most one span wide, so each window ts
-  owns exactly one slot and the slot's winner decides that ts alone.
+  row is a gap.  One exchange, no join, no broadcast (an all-series
+  fetch hashes both union sides on ``metric`` instead, see
+  ``_fetch_archive_dense``).  A window clamped to the archive's
+  retention is at most one span wide, so each window ts owns exactly
+  one slot and the slot's winner decides that ts alone.
 * **Rollups are set-based, and a batch commits once.**  Whisper
   propagates one interval at a time (reference: whisper.py:578-664); we
   recompute all touched lower intervals per level with one ``groupBy``
@@ -792,7 +794,21 @@ class WhisperStore:
         value only if it won its slot.  That is the store's rule, not the
         reference's: whisper reads ``(until - from) / step mod points``
         slots from the window start there and returns fewer values
-        (whisper.py:962-1034), a known divergence."""
+        (whisper.py:962-1034), a known divergence.
+
+        With explicit ``metrics`` the spine is a literal name array and
+        the plan has one ``Exchange``, on the slot key.  With
+        ``metrics=None`` every stored metric gets its series, and the
+        spine's keys are a ``distinct`` over the store, itself an
+        ``Exchange hashpartitioning(metric)``.  The scan is
+        repartitioned on ``metric`` too, so the plan has two
+        ``hash(metric)`` exchanges feeding one reduce stage that runs the
+        slot aggregate, and the output stays partitioned by ``metric``:
+        the key discovery runs beside the scan, not before it, and a
+        render's per-series windows and groupBys add no exchange.  This
+        relies on ``spark.sql.unionOutputPartitioning`` (on by default in
+        Spark 4.1), which lets the union keep its children's common
+        partitioning."""
         step = archive.seconds_per_point
         from_interval = (from_time - (from_time % step)) + step
         until_interval = (until_time - (until_time % step)) + step
@@ -811,7 +827,8 @@ class WhisperStore:
         scanned = points.where(_collider_where(step, span, from_interval, last))
         if metrics is None:
             # every stored metric gets its series, all-NULL if it has no
-            # point in the window
+            # point in the window; both union sides hash on metric
+            scanned = scanned.repartition("metric")
             keys = points.select("metric").distinct()
         else:
             names = [metrics] if isinstance(metrics, str) else list(metrics)
@@ -1556,6 +1573,9 @@ def _render(fetch, target, from_time, until_time, now, max_datapoints):
     now = now or int(_time.time())
     until = parse_at_time(until_time, now) if until_time is not None else now
     frm = parse_at_time(from_time, now) if from_time is not None else until - 86400
+    # every stored series, not the target's literal names: a name the
+    # store lacks must render no series, where a fetch of it by name
+    # gives an all-NULL one
     fetched = fetch(None, from_time=frm, until_time=until, now=now)
     if fetched is None:
         return None
