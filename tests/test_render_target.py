@@ -1171,12 +1171,12 @@ def test_store_render_series_exist_iff_stored(spark, tmp_path):
     assert series("web.gpu") == {}
     assert series("db.cpu") == {"db.cpu": dict.fromkeys(window)}
     both = series("*.cpu")
+    assert set(both) == {"web.cpu", "db.cpu"}
     assert both["db.cpu"] == dict.fromkeys(window)
     assert sorted(both["web.cpu"]) == window
     assert {ts: v for ts, v in both["web.cpu"].items() if v is not None} == {
         (NOW - 60) // 60 * 60: 1.0, (NOW - 120) // 60 * 60: 2.0,
     }
-    assert set(both) == {"web.cpu", "db.cpu"}
 
 
 def test_cli_render_graphite_json_format(spark, tmp_path, capsys):
